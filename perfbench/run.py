@@ -5,7 +5,8 @@
         --seconds 10 --trace 0
 
 Run from the repository root.  The run starts a fresh Spark session at
-``local[<cores>]``, builds the workload's inputs from ``--seed`` (cached under
+``local[<cores>]``, builds the workload's inputs from ``--seed`` (the same
+untimed work on every run; oracle fingerprints are cached under
 ``.perfbench_work/cache``), measures for at least ``--seconds`` seconds,
 checks the outputs against the oracles, and prints a report followed by one
 JSON line::
@@ -35,8 +36,9 @@ T_START = time.perf_counter()
 
 # Wall time of the pass (``pass_s``) and its throughput (``work_per_s``) are
 # printed and kept in the report, but not gated: on a shared virtual machine
-# each 1% of CPU time the hypervisor steals adds about 4% to them, so their
-# run-to-run spread follows the host, not the program (perfbench/README.md).
+# their run-to-run spread follows the hypervisor's steal, and two ten-seed
+# sets of the crawl spread by more than the largest bound the harness allows
+# (perfbench/README.md, "Why wall time is not gated").
 END_TO_END = {
     "setup_s": "s",
     "pass_cpu_s": "s",
@@ -221,7 +223,7 @@ def main(argv: list[str] | None = None) -> int:
                           seconds=args.seconds, cores=cores)
                 phases = {"python_start_s": t0 - T_START, "get_spark_s": start_s}
                 t1 = time.perf_counter()
-                wl.prepare(ctx)  # inputs: untimed and cached
+                wl.prepare(ctx)  # inputs: untimed, built anew on every run
                 phases["prepare_s"] = time.perf_counter() - t1
                 t0 = time.perf_counter()
                 wl.register(ctx)

@@ -3,11 +3,13 @@
 ``crawl_polite_resume`` runs ``CrawlEngine`` to fixpoint on a generated
 page corpus, interrupted after ``INTERRUPT_AFTER`` rounds and continued
 through ``CrawlEngine.resume``.  ``catalog`` runs a fixed subset of the
-operator catalog (``__spark_entry__.queries()``) on generated tables.  Each
-workload has three steps: ``prepare`` builds the inputs (untimed, cached per
-shape and seed), ``run`` performs the timed work, and ``check`` compares the
-outputs with the oracles (untimed).  ``layers`` adds the per-layer numbers of
-a traced run.
+operator catalog (``__spark_entry__.queries()``) on the catalog's sf0.001
+tables, kept in ``perfbench/data``.  Each workload has three steps:
+``prepare`` builds the inputs (untimed, and the same work on every run, so
+the timed window always starts from the same session state), ``run``
+performs the timed work, and ``check`` compares the outputs with the
+oracles (untimed, fingerprints cached per shape and seed).  ``layers`` adds
+the per-layer numbers of a traced run.
 """
 
 from __future__ import annotations
@@ -76,11 +78,12 @@ class CrawlPoliteResume:
 
     Round count, not page count, sets the crawl's cost (each round has a
     fixed cost of several seconds), so the shape keeps rounds few: no
-    malformed pages (each would add three retry rounds), no email or
-    review-RPC hops, and a host budget above the largest per-round host
-    claim (every place page shares one host), so the politeness claim plan
-    runs without stretching the crawl.  The corpus still holds review-RPC
-    and website pages for the traced run's standalone extractor passes."""
+    malformed pages (each would add three retry rounds) and no email or
+    review-RPC hops.  Every place page shares one host, and the host budget
+    sits just under the largest round's place claim, so it binds once and
+    spreads the place pages over two rounds.  The corpus still holds
+    review-RPC and website pages for the traced run's standalone extractor
+    passes."""
 
     name = "crawl_polite_resume"
     N_SEEDS = 12
@@ -88,7 +91,7 @@ class CrawlPoliteResume:
     EXTRA_REVIEW_PAGES = 2
     MALFORMED_FRACTION = 0.0
     BUCKETS = 8
-    HOST_BUDGET = 1024
+    HOST_BUDGET = 96
     INTERRUPT_AFTER = 1
 
     def config(self):
@@ -96,36 +99,29 @@ class CrawlPoliteResume:
 
         return CrawlConfig(host_budget=self.HOST_BUDGET, checkpoint_every=1)
 
-    def _corpus(self, ctx: Ctx, n_seeds: int, places: int) -> tuple[Path, list]:
-        """Write (once per shape and seed) a url-bucketed pages table."""
+    def prepare(self, ctx: Ctx) -> None:
+        """Write the url-bucketed pages table for ``ctx.seed``.  It is not
+        cached: a cached table would let the measured session skip this
+        Spark work on some runs and not others."""
         from google_maps_scraper_spark.sources.corpus import (
             corpus_to_spark,
             generate_corpus,
             write_bucketed_pages,
         )
 
-        shape = (f"{n_seeds}x{places}x{self.EXTRA_REVIEW_PAGES}"
-                 f"m{self.MALFORMED_FRACTION}")
-        pages_dir = ctx.cache / f"pages-{shape}-seed{ctx.seed}"
-        seeds_file = pages_dir / "_seeds.json"
-        if not seeds_file.exists():
-            shutil.rmtree(pages_dir, ignore_errors=True)
-            corpus = generate_corpus(
-                n_seeds=n_seeds, places_per_serp=places,
-                malformed_fraction=self.MALFORMED_FRACTION,
-                extra_review_pages=self.EXTRA_REVIEW_PAGES, seed=ctx.seed,
-            )
-            write_bucketed_pages(ctx.spark, corpus_to_spark(ctx.spark, corpus),
-                                 str(pages_dir), buckets=self.BUCKETS)
-            seeds = [(s["query"].split("#!#")[0].strip(), s["custom_id"])
-                     for s in corpus.seeds]
-            seeds_file.write_text(json.dumps(seeds))
-        return pages_dir, [tuple(s) for s in json.loads(seeds_file.read_text())]
-
-    def prepare(self, ctx: Ctx) -> None:
-        self.pages_dir, self.seeds = self._corpus(
-            ctx, self.N_SEEDS, self.PLACES_PER_SERP)
-        self.shape = self.pages_dir.name
+        self.shape = (f"{self.N_SEEDS}x{self.PLACES_PER_SERP}x"
+                      f"{self.EXTRA_REVIEW_PAGES}m{self.MALFORMED_FRACTION}"
+                      f"-seed{ctx.seed}")
+        self.pages_dir = ctx.work / "pages"
+        corpus = generate_corpus(
+            n_seeds=self.N_SEEDS, places_per_serp=self.PLACES_PER_SERP,
+            malformed_fraction=self.MALFORMED_FRACTION,
+            extra_review_pages=self.EXTRA_REVIEW_PAGES, seed=ctx.seed,
+        )
+        write_bucketed_pages(ctx.spark, corpus_to_spark(ctx.spark, corpus),
+                             str(self.pages_dir), buckets=self.BUCKETS)
+        self.seeds = [(s["query"].split("#!#")[0].strip(), s["custom_id"])
+                      for s in corpus.seeds]
 
     def register(self, ctx: Ctx) -> None:
         from google_maps_scraper_spark.sources.corpus import read_bucketed_pages
@@ -420,16 +416,18 @@ class CrawlPoliteResume:
 
 # --- catalog ---------------------------------------------------------------
 
+DATA_DIR = Path(__file__).resolve().parent / "data" / "sf0.001"
+
+
 class Catalog:
-    """One query per operator module, each forced by ``collect()``.  For
-    dedup_docs and similarity the query is a regression the ROADMAP carries
-    over (``dedup_cluster_components``, ``emb_lsh_neardup_pairs``); for the
-    other four it is a query of that module picked so that one pass fits the
-    per-run time budget.  The third carried-over regression,
-    ``docs_minhash_pairs``, is left out: its DuckDB oracle alone takes ~9 s."""
+    """One query per operator module, each forced by ``collect()``, on the
+    catalog's fixed sf0.001 tables (``DATA_DIR``); the seed does not apply.
+    For dedup_docs and similarity the query is a regression the ROADMAP
+    carries over (``dedup_cluster_components``, ``emb_lsh_neardup_pairs``);
+    for the other four it is a query of that module picked so that one pass
+    fits the per-run time budget."""
 
     name = "catalog"
-    SCALE = 0.001
     QUERIES = {
         "frontier_etld1_key": "frontier",
         "graph_reciprocal_edges": "graph",
@@ -442,16 +440,11 @@ class Catalog:
 
     def prepare(self, ctx: Ctx) -> None:
         import __spark_entry__ as entrymod
-        from perfbench.catalog_data import write_tables
 
         catalog = entrymod.queries()
         self.queries = {q: catalog[q] for q in catalog if q in self.QUERIES}
         self.oracles = entrymod.oracle_sql()
-        self.data_dir = ctx.cache / f"catalog-sf{self.SCALE}-seed{ctx.seed}"
-        if not (self.data_dir / "_SUCCESS").exists():
-            shutil.rmtree(self.data_dir, ignore_errors=True)
-            write_tables(str(self.data_dir), ctx.seed, self.SCALE)
-            (self.data_dir / "_SUCCESS").write_text("")
+        self.data_dir = DATA_DIR
 
     def register(self, ctx: Ctx) -> None:
         """The catalog reads its parquet files per query; nothing to
@@ -479,8 +472,9 @@ class Catalog:
             finally:
                 con.close()
 
-        key = _sha(",".join(sorted(self.queries)))[:8]
-        path = ctx.cache / f"oracle-catalog-sf{self.SCALE}-{key}-seed{ctx.seed}.json"
+        data = b"".join(f.read_bytes() for f in sorted(self.data_dir.glob("*.parquet")))
+        key = _sha(",".join(sorted(self.queries)).encode() + data)[:12]
+        path = ctx.cache / f"oracle-catalog-{key}.json"
         return _cached_json(path, build)
 
     def run(self, ctx: Ctx) -> dict:
