@@ -66,10 +66,11 @@ def load_fanout(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         else:
             nbytes = _os.path.getsize(path)
     except OSError:
-        return df.repartition(p)
-    max_split = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        .removesuffix("b")
+        return df  # not a local path (e.g. s3a://): no size to decide on
+    # Spark's own byte-string parser, so "128m" / "64MB" read as Spark does
+    java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
+    max_split = java_utils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
     )
     if nbytes < max_split:
         df = df.repartition(p)

@@ -1048,10 +1048,11 @@ def docs_source_template_shingles(spark: SparkSession, sf: str) -> DataFrame:
     # instead of explode because InferFiltersFromGenerate clones a plain
     # explode's generator into a size()>0 pre-filter that re-evaluates the
     # whole shingling HOF per row (measured 7x at sf0.1).  The isnotnull
-    # pre-filter reproduces inner-explode semantics: shingles is NULL iff
-    # text is NULL and never empty otherwise (transform over a >=1-element
-    # sequence), so the only rows the outer variant would add are exactly
-    # the NULL-text rows the filter drops.
+    # pre-filter DROPS NULL-text documents on purpose: the oracle's inner
+    # unnest yields no row for them, so they are absent from its output.
+    # explode_outer alone would keep each one as a NULL-shingle row; for
+    # non-NULL text, shingles is never empty (transform over a >=1-element
+    # sequence), so the filter is the only place the two explodes differ.
     d = shingle_tokens(
         load_fanout(spark, sf, "documents").filter(F.col("text").isNotNull())
     )

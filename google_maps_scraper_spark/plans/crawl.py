@@ -36,30 +36,30 @@ Table format: SURVEY.md §7 plans Iceberg with graceful degradation; this
 sandbox ships no Iceberg/Delta jars (re-verified round 3: pyspark/jars has
 neither, no delta-spark/pyiceberg pip package, and no network to fetch
 them), so state tables are plain parquet snapshots per round + a JSON
-manifest, with MERGE semantics emulated by anti-join/union, atomicity by
-the write-then-flip-LATEST protocol, and concurrent-writer protection by
-the WRITER fencing token plus a LATEST-regression refusal at publish time
-(two engines on one workdir → the stale one aborts with
-ConcurrentWriterError; tests/test_concurrent_writers.py).  Snapshot TIME
-TRAVEL (≙ Iceberg rollback_to_snapshot) via ``resume(from_round=N)`` and
-keep-last-K retention (≙ expire_snapshots) via ``CrawlConfig.keep_rounds``
-close the remaining table-format gap (tests/test_time_travel.py).
-Swapping the store for Iceberg tables (MERGE INTO frontier/seen, snapshot
-ids in the manifest) changes only ``_write_snapshot``/``resume``.
+manifest, with MERGE semantics emulated by anti-join/union.  Every workdir
+read and write goes through ``plans/store.py``'s ``ParquetDeltaLogStore``:
+it stages a commit in a private temp dir and publishes it with ONE atomic
+rename onto the round dir, which fails rather than replace a dir another
+writer committed; the commit point is the highest committed round.
+Concurrent-writer protection is the store's WRITER lease (taken over at
+seed/resume and checked at publish) plus that rename (two engines on one
+workdir → the stale one aborts with ConcurrentWriterError;
+tests/test_concurrent_writers.py).  Snapshot TIME TRAVEL (≙ Iceberg
+rollback_to_snapshot) via ``resume(from_round=N)`` and keep-last-K retention
+(≙ expire_snapshots) via ``CrawlConfig.keep_rounds`` close the remaining
+table-format gap (tests/test_time_travel.py).  Swapping the store for
+Iceberg tables (MERGE INTO frontier/seen, snapshot ids in the manifest)
+changes only the store.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import pathlib
-import shutil
 import time
 from collections import defaultdict, deque
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-
-import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -82,16 +82,9 @@ from ..schemas import (
     STATUS_NEW,
     STATUS_QUEUED,
 )
+from .store import ConcurrentWriterError, ParquetDeltaLogStore
 
 __all__ = ["CrawlConfig", "CrawlEngine", "ConcurrentWriterError"]
-
-
-class ConcurrentWriterError(RuntimeError):
-    """A second engine took over this workdir (its WRITER fencing token
-    changed); the fenced-out writer must abort instead of committing a
-    split-brain snapshot (≙ the reference's single-writer postgres job table
-    guarded by SELECT ... FOR UPDATE SKIP LOCKED claims,
-    postgres/provider.go:148-244)."""
 
 _RESULT_COLS = [f.name for f in RESULT_SCHEMA.fields]
 
@@ -136,16 +129,17 @@ class CrawlConfig:
     # pages table is then never shuffled); larger claims fall back to a
     # shuffle join, where AQE picks the physical strategy.
     keep_rounds: int | None = None
-    # snapshot retention: keep the last K committed round dirs (older ones
-    # are pruned after each commit, on the checkpoint thread).  None keeps
-    # every round — full time-travel history (≙ Iceberg snapshot retention /
-    # expire_snapshots; resume(from_round=N) targets any retained round).
-    # K >= 2 is required to prune anything: the previous round's parquet can
-    # back live DataFrames until the next commit completes.  NB retention
-    # interacts with the delta log: a commit whose chain would reference a
-    # dir older than the window COMPACTS that table first (full rewrite), so
-    # aggressive retention trades away O(delta) commit cost — keep_rounds
-    # well above compact_chain keeps both.
+    # snapshot retention: keep the last K round NUMBERS — after each commit
+    # of round R (on the checkpoint thread) round dirs numbered below
+    # R-K+1 are pruned, so with checkpoint_every > 1 fewer than K committed
+    # dirs survive.  None keeps every round — full time-travel history
+    # (≙ Iceberg snapshot retention / expire_snapshots; resume(from_round=N)
+    # targets any retained round).  K < 2 acts as 2: the previous round's
+    # parquet can back live DataFrames until the next commit completes.
+    # NB retention interacts with the delta log: a commit whose chain would
+    # reference a dir older than the window COMPACTS that table first (full
+    # rewrite), so aggressive retention trades away O(delta) commit cost —
+    # keep_rounds well above compact_chain keeps both.
     compact_chain: int = 16
     # delta-log chain bound (≙ Iceberg rewrite_data_files cadence): when a
     # table's manifest chain would exceed this many delta dirs, the commit
@@ -250,13 +244,13 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.pages = pages
-        self.workdir = pathlib.Path(workdir)
+        self.store = ParquetDeltaLogStore(spark, workdir)
         self.cfg = config or CrawlConfig()
         self.round = 0
         self._cum_claimed = 0
         self._cum_admitted = 0   # SERP fan-out candidates (observed n_links)
         self._durable_round = -1   # last round with a committed durable snapshot
-        self._writer_id = uuid.uuid4().hex  # fencing token (split-brain guard)
+        self._writer_token: str | None = None  # store lease (split-brain guard)
         self._chain_pages = None   # lazily materialized review-RPC page
         # subset: every chain-hop fetch probes this instead of re-scanning
         # the full pages table (built once per run, on the first multi-hop
@@ -279,8 +273,8 @@ class CrawlEngine:
         self._wparent: int = -1
         # first commit failure (fail-stop): later queued commits must NOT
         # publish — their captures assume the failed commit's deltas are in
-        # the chain, so publishing would flip LATEST to a manifest that
-        # silently skips those rows
+        # the chain, so publishing would commit a manifest that silently
+        # skips those rows
         self._ckpt_failed: BaseException | None = None
         self._bloom = None
         if (config or CrawlConfig()).seen_bloom:
@@ -384,10 +378,8 @@ class CrawlEngine:
         # empty) must reach the durable term log like any other retirement
         self._term_since_durable = [self._frontier_done[0]]
         self.round = 0
-        if self.workdir.exists():
-            shutil.rmtree(self.workdir)
-        self.workdir.mkdir(parents=True, exist_ok=True)
-        self._stamp_writer()
+        self.store.reset()
+        self._writer_token = self.store.take_over()
         if self.cfg.checkpoint_every == 1:
             self._checkpoint()  # durable round-0 snapshot (resume-from-seed)
         else:
@@ -497,8 +489,8 @@ class CrawlEngine:
         terminal segments are immutable and never re-persisted, so a
         segment left as a parquet view would outlive its round directory
         when ``keep_rounds`` retention prunes it mid-run.  The finalize
-        re-root keeps the free view — commits stop there and LATEST is
-        never pruned."""
+        re-root keeps the free view — commits stop there and the commit
+        point is never pruned."""
         self._frontier = full.filter(F.col("status") == STATUS_NEW)
         done = full.filter(F.col("status") != STATUS_NEW)
         if materialize_done:
@@ -755,23 +747,23 @@ class CrawlEngine:
 
     # -- durable checkpoint protocol ------------------------------------------
     #
-    # DELTA LOG (round 4, ≙ Iceberg append snapshots): a committed round dir
+    # DELTA LOG (round 4, ≙ Iceberg append snapshots): a committed snapshot
     # holds the full (small) live frontier plus, per append-only table
     # (seen / results / term), ONLY the rows appended since the previous
-    # commit; the manifest pins the chain of immutable delta dirs composing
-    # the snapshot and the running row totals.  Per-commit I/O is O(delta),
-    # not O(total state) — the property that makes per-round durability
+    # commit; the manifest pins the chain of immutable deltas composing the
+    # snapshot and the running row totals.  Per-commit I/O is O(delta), not
+    # O(total state) — the property that makes per-round durability
     # affordable at a 10^10-row frontier.  Chains are bounded by compaction
     # (cfg.compact_chain, ≙ rewrite_data_files); retention (cfg.keep_rounds,
-    # ≙ expire_snapshots) prunes dirs outside the window, forcing compaction
-    # first so the surviving chain is self-contained.
+    # ≙ expire_snapshots) prunes snapshots outside the window, forcing
+    # compaction first so the surviving chain is self-contained.
     #
-    # Write-then-flip, optionally OVERLAPPED with the next round: tables land
-    # in a temp dir, one atomic rename publishes the round dir, and LATEST
-    # (the commit point resume reads) is flipped last (atomically, via its
-    # own tmp+rename).  A kill at ANY step leaves the previous committed
-    # round intact — the writers never target a directory a live DataFrame or
-    # a committed snapshot is reading (locked by
+    # The engine owns only this policy; ``self.store`` owns the layout and
+    # the publish.  A commit stages every table and the manifest in a
+    # private temp dir and one atomic rename makes it the new commit point,
+    # so a kill at ANY step leaves the previous committed round intact —
+    # the writers never target a directory a live DataFrame or a committed
+    # snapshot is reading (locked by tests/test_commit_protocol.py and
     # tests/test_crawl_e2e.py::test_checkpoint_kill_during_write).
     #
     # The round-2 engine blocked the driver on the three parquet writes plus
@@ -784,39 +776,11 @@ class CrawlEngine:
     # Counters ride the delta writes as Observations folded into the running
     # totals, so EVERY commit's manifest carries exact counters for free.
     #
-    # Split-brain fencing: the engine stamps workdir/WRITER with a per-run
-    # token at seed/resume; the snapshot writer re-checks the token right
-    # before the atomic publish and aborts with ConcurrentWriterError if a
-    # second engine took over (advisory — the flip itself stays atomic).
-
-    def _stamp_writer(self) -> None:
-        tmp = self.workdir / ".WRITER.tmp"
-        tmp.write_text(self._writer_id)
-        os.replace(tmp, self.workdir / "WRITER")
-
-    def _check_writer(self) -> None:
-        marker = self.workdir / "WRITER"
-        if marker.exists() and marker.read_text().strip() != self._writer_id:
-            raise ConcurrentWriterError(
-                f"workdir {self.workdir} was taken over by another engine; "
-                "aborting checkpoint (WRITER fencing token changed)"
-            )
-
-    @staticmethod
-    def _round_of(rel_path: str) -> int:
-        return int(rel_path.split("/", 1)[0].split("=")[1])
-
-    def _read_chain(self, rel_paths: list[str], schema) -> DataFrame:
-        """Union view over a manifest chain's immutable parquet delta dirs
-        (bounded legs: compaction caps chain length at cfg.compact_chain)."""
-        if not rel_paths:
-            return self.spark.createDataFrame([], schema)
-        df = self.spark.read.schema(schema).parquet(str(self.workdir / rel_paths[0]))
-        for p in rel_paths[1:]:
-            df = df.unionByName(
-                self.spark.read.schema(schema).parquet(str(self.workdir / p))
-            )
-        return df
+    # Split-brain fencing: the engine takes over the store's writer lease at
+    # seed/resume and passes its token to every commit; the store re-checks
+    # it before the rename and aborts with ConcurrentWriterError if a second
+    # engine took over, and the rename itself refuses a round another
+    # writer already committed.
 
     def _term_full(self) -> DataFrame:
         """Every terminal frontier row (segments + lazy deltas) — the
@@ -895,21 +859,18 @@ class CrawlEngine:
     ]
 
     def _write_snapshot_inner(self, cap: dict, bloom_bytes: bytes | None) -> dict:
-        """Write one committed round as a DELTA-LOG entry; runs on the
-        checkpoint thread.  The round dir holds the full (small) live
-        frontier plus, per append-only table (seen/results/term), either
-        this commit's delta or a compacted full rewrite; the manifest pins
-        the chain of immutable dirs composing the snapshot and the running
-        row totals (≙ an Iceberg append snapshot's manifest list +
-        summary).  Per-commit I/O is O(delta), not O(total state) — at a
-        10^10-row frontier this is what makes per-round durability
-        affordable.  Compaction (≙ rewrite_data_files) triggers when the
-        chain would exceed ``cfg.compact_chain`` legs or reference a dir the
-        retention window is about to expire.  Returns the commit record the
-        join point applies."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        self._check_writer()
+        """Commit one round as a DELTA-LOG entry through the store; runs on
+        the checkpoint thread.  The engine picks what the snapshot holds —
+        the full (small) live frontier plus, per append-only table
+        (seen/results/term), either this commit's delta or a compacted full
+        rewrite — and the manifest fields: the chain of immutable legs
+        composing the snapshot and the running row totals (≙ an Iceberg
+        append snapshot's manifest list + summary).  ``store.commit`` owns
+        the layout and the atomic publish.  Compaction (≙
+        rewrite_data_files) triggers when the chain would exceed
+        ``cfg.compact_chain`` legs or reference a round the retention window
+        is about to expire.  Returns the commit record the join point
+        applies."""
         # writer-owned chain state: seeded from the driver's durable view at
         # the first write after init/resume/sync-apply (no commits are in
         # flight at those points), then advanced per commit ON THIS THREAD —
@@ -920,11 +881,6 @@ class CrawlEngine:
             self._wtotals = json.loads(json.dumps(self._totals))
             self._wparent = self._durable_round
         rnd = cap["round"]
-        rd = self.workdir / f"round={rnd:04d}"
-        tmp = self.workdir / f".tmp.round={rnd:04d}"
-        for stale in (tmp, rd):  # uncommitted leftovers from a crashed attempt
-            if stale.exists():
-                shutil.rmtree(stale)
         keep = self.cfg.keep_rounds
         cutoff = rnd - max(int(keep), 2) + 1 if keep is not None else None
         n = self._state_partitions()
@@ -934,25 +890,23 @@ class CrawlEngine:
         # jobs, so status/result/seen counts cost ZERO extra scans, and the
         # delta protocol accumulates them into running totals — every
         # commit's manifest carries exact counters for free.
-        writes: list[tuple[str, DataFrame, int]] = []
         f_obs = Observation()
         live = cap["live"].observe(f_obs, *[
             F.sum(F.when(F.col("kind") == k, 1).otherwise(0))
             .cast("long").alias(f"{k}_{STATUS_NEW}")
             for k in (KIND_SEARCH, KIND_PLACE, KIND_EMAIL, KIND_REVIEWS)
         ])
-        writes.append(("frontier", live, n))
+        writes: dict[str, tuple[DataFrame, int]] = {"frontier": (live, n)}
 
         actions: dict[str, str] = {}
         obs: dict[str, Observation] = {}
-        rel = {t: f"round={rnd:04d}/{t}" for t in ("seen", "results", "term")}
         for t in ("seen", "results", "term"):
             prev, deltas = self._wlog[t], cap["deltas"][t]
             grown = len(prev) + (1 if deltas else 0)
             compact = bool(prev) and (
                 grown > self.cfg.compact_chain
                 or (cutoff is not None
-                    and any(self._round_of(p) < cutoff for p in prev))
+                    and self.store.references_before(prev, cutoff))
             )
             if compact:
                 df, parts = cap["full"][t], n
@@ -986,122 +940,84 @@ class CrawlEngine:
             else:
                 df = df.observe(o, F.count(F.lit(1)).alias("n"))
             obs[t] = o
-            writes.append((t, df, parts))
+            writes[t] = (df, parts)
 
-        def _one_write(w):
-            name, df, parts = w
-            t0 = time.perf_counter() if self.cfg.timing else 0.0
-            df.coalesce(parts).write.mode("overwrite").parquet(str(tmp / name))
-            if self.cfg.timing:
-                # per-table write wall (concurrent writers: these overlap each
-                # other, so the sum exceeds the snapshot_write phase wall)
-                self.phase_times[f"write_{name}"] += time.perf_counter() - t0
+        def manifest(legs: dict[str, str]) -> dict:
+            # called by the store once the writes are done: the riding
+            # Observations are filled
+            totals = json.loads(json.dumps(self._wtotals))
+            log = {t: list(self._wlog[t]) for t in ("seen", "results", "term")}
+            for t in ("seen", "results"):
+                if actions[t] == "compact":
+                    totals[t] = obs[t].get["n"]
+                    log[t] = [legs[t]]
+                elif actions[t] == "delta":
+                    totals[t] += obs[t].get["n"]
+                    log[t].append(legs[t])
+            if actions["term"] == "compact":
+                totals["term"] = {k: v for k, v in obs["term"].get.items() if v}
+                log["term"] = [legs["term"]]
+            elif actions["term"] == "delta":
+                for k, v in obs["term"].get.items():
+                    if v:
+                        totals["term"][k] = totals["term"].get(k, 0) + v
+                log["term"].append(legs["term"])
 
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            list(ex.map(_one_write, writes))
+            wc = {k: v for k, v in f_obs.get.items() if v}
+            for k, v in totals["term"].items():
+                wc[k] = wc.get(k, 0) + v
+            wc["seen"] = totals["seen"]
+            wc["results"] = totals["results"]
+            # snapshot summary (≙ Iceberg's snapshot parent-id + summary
+            # map): per-table action taken this commit, rows appended by it,
+            # and the chain depth — the per-partition lineage a
+            # monitoring/debug read needs without opening any parquet footer
+            appended = {}
+            for t in ("seen", "results"):
+                appended[t] = obs[t].get["n"] if actions[t] != "none" else 0
+            appended["term"] = (
+                {k: v for k, v in obs["term"].get.items() if v}
+                if actions["term"] != "none" else {}
+            )
+            return {
+                "round": rnd,
+                "parent_round": self._wparent,
+                "counters": {**wc, "round": rnd},
+                "chain": log,
+                "totals": totals,
+                "commit_meta": {
+                    "actions": actions,
+                    "appended": appended,
+                    "chain_len": {t: len(log[t]) for t in log},
+                    "live_rows": sum(v for v in f_obs.get.values() if v),
+                },
+                "bloom": (
+                    {"m_bits": self._bloom.m_bits, "k": self._bloom.k}
+                    if bloom_bytes is not None else None
+                ),
+            }
 
-        totals = json.loads(json.dumps(self._wtotals))
-        log = {t: list(self._wlog[t]) for t in ("seen", "results", "term")}
-        for t in ("seen", "results"):
-            if actions[t] == "compact":
-                totals[t] = obs[t].get["n"]
-                log[t] = [rel[t]]
-            elif actions[t] == "delta":
-                totals[t] += obs[t].get["n"]
-                log[t].append(rel[t])
-        if actions["term"] == "compact":
-            totals["term"] = {k: v for k, v in obs["term"].get.items() if v}
-            log["term"] = [rel["term"]]
-        elif actions["term"] == "delta":
-            for k, v in obs["term"].get.items():
-                if v:
-                    totals["term"][k] = totals["term"].get(k, 0) + v
-            log["term"].append(rel["term"])
-
-        wc = {k: v for k, v in f_obs.get.items() if v}
-        for k, v in totals["term"].items():
-            wc[k] = wc.get(k, 0) + v
-        wc["seen"] = totals["seen"]
-        wc["results"] = totals["results"]
-
-        if bloom_bytes is not None:
-            (tmp / "bloom.bin").write_bytes(bloom_bytes)
-        # snapshot summary (≙ Iceberg's snapshot parent-id + summary map):
-        # per-table action taken this commit, rows appended by it, and the
-        # chain depth — the per-partition lineage a monitoring/debug read
-        # needs without opening any parquet footer
-        appended = {}
-        for t in ("seen", "results"):
-            appended[t] = obs[t].get["n"] if actions[t] != "none" else 0
-        appended["term"] = (
-            {k: v for k, v in obs["term"].get.items() if v}
-            if actions["term"] != "none" else {}
+        m = self.store.commit(
+            rnd, writes, manifest, self._writer_token,
+            None if bloom_bytes is None else {"bloom.bin": bloom_bytes},
         )
-        manifest = {
-            "round": rnd,
-            "parent_round": self._wparent,
-            "counters": {**wc, "round": rnd},
-            "chain": log,
-            "totals": totals,
-            "commit_meta": {
-                "actions": actions,
-                "appended": appended,
-                "chain_len": {t: len(log[t]) for t in log},
-                "live_rows": sum(v for v in f_obs.get.values() if v),
-            },
-            "bloom": (
-                {"m_bits": self._bloom.m_bits, "k": self._bloom.k}
-                if bloom_bytes is not None else None
-            ),
-        }
-        (tmp / "manifest.json").write_text(json.dumps(manifest, indent=2))
-        self._check_writer()      # fencing: re-verify right before commit
-        # lineage-regression guard (narrows the residual check-then-act
-        # window of the advisory WRITER fencing, round-3 ADVICE): if LATEST
-        # already reached this round number, a takeover writer committed a
-        # divergent lineage while this snapshot was being written —
-        # publishing would regress LATEST onto stale state.  Refuse.
-        latest_p = self.workdir / "LATEST"
-        if latest_p.exists():
-            try:
-                committed = int(latest_p.read_text().strip())
-            except ValueError:
-                committed = -1
-            if committed >= rnd:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise ConcurrentWriterError(
-                    f"LATEST={committed} already covers round {rnd}; another "
-                    "writer committed a divergent lineage — refusing to "
-                    "regress the commit point"
-                )
-        os.replace(tmp, rd)       # atomic publish
-        latest_tmp = self.workdir / ".LATEST.tmp"
-        latest_tmp.write_text(str(rnd))
-        os.replace(latest_tmp, self.workdir / "LATEST")
-        # retention (keep-last-K): prune round dirs older than the window
-        # unless the NEW chain still references them (the compaction trigger
-        # above makes the new chain self-contained within the window, so the
-        # reference check is a belt-and-suspenders guard).  Post-flip, rnd is
-        # the commit point; the writes above already consumed any parquet the
+        # retention (keep-last-K): prune rounds older than the window unless
+        # the NEW chain still references them (the compaction trigger above
+        # makes the new chain self-contained within the window, so the
+        # reference check is a belt-and-suspenders guard).  rnd is now the
+        # commit point; the writes above already consumed any parquet the
         # captured deltas referenced, so pruning here cannot starve them.
         if cutoff is not None:
-            referenced = {self._round_of(p) for ps in log.values() for p in ps}
-            for d in sorted(self.workdir.glob("round=*")):
-                try:
-                    r_old = int(d.name.split("=")[1])
-                except ValueError:
-                    continue
-                if r_old < cutoff and r_old not in referenced:
-                    shutil.rmtree(d, ignore_errors=True)
+            self.store.prune_before(cutoff, m["chain"])
         # advance the writer-owned chain state for the NEXT queued commit
-        self._wlog = {t: list(v) for t, v in log.items()}
-        self._wtotals = json.loads(json.dumps(totals))
+        self._wlog = {t: list(v) for t, v in m["chain"].items()}
+        self._wtotals = json.loads(json.dumps(m["totals"]))
         self._wparent = rnd
         return {
             "round": rnd,
-            "log": log,
-            "totals": totals,
-            "counters": wc,
+            "log": m["chain"],
+            "totals": m["totals"],
+            "counters": m["counters"],
             "marks": cap["marks"],
         }
 
@@ -1160,7 +1076,7 @@ class CrawlEngine:
         self._results_new = self._results_new[m["results"]:]
         for t in ("seen", "results", "term"):
             self._cap_heads[t] -= m[t]
-        self._results_base = self._read_chain(rec["log"]["results"], RESULT_SCHEMA)
+        self._results_base = self.store.read("results", rec["round"])
         self._rebuild_results_view()
 
     def _drain_done_checkpoints(self) -> None:
@@ -1185,23 +1101,20 @@ class CrawlEngine:
         commit, then re-root ALL state at the committed chain (metadata-only
         parquet reads for any later consumer; lineage fully truncated).
         Commits stop here, so chain-parquet views cannot dangle under
-        retention — LATEST is never pruned."""
+        retention — the commit point is never pruned."""
         self._join_pending_checkpoint()
         rec = self._write_snapshot(
             self._capture_commit(),
             self._bloom.to_bytes() if self._bloom is not None else None,
         )
         self._apply_commit(rec)
-        rd = self.workdir / f"round={rec['round']:04d}"
         # the live table holds exactly the NEW rows; terminal segments keep
         # their existing materialized blocks (block-backed segments cannot
-        # dangle if a later resume's retention prunes this round dir)
-        self._frontier = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-            str(rd / "frontier")
-        )
+        # dangle if a later resume's retention prunes this snapshot)
+        self._frontier = self.store.read("frontier", rec["round"])
         self._live_parquet_rooted = True
         self._pending_term = None
-        self._seen_segs = [self._read_chain(rec["log"]["seen"], SEEN_SCHEMA)]
+        self._seen_segs = [self.store.read("seen", rec["round"])]
         self._seen_since_durable = []
         self._rebuild_seen_view()
 
@@ -1214,40 +1127,38 @@ class CrawlEngine:
         config: CrawlConfig | None = None,
         from_round: int | None = None,
     ) -> "CrawlEngine":
-        """Resume from the latest committed round manifest (kill-safe: a
-        partially written round directory is ignored until LATEST points at
-        it, and LATEST is written last).
+        """Resume from the store's commit point (kill-safe: a partially
+        written commit is a private temp dir until its one atomic rename,
+        so it is never read).
 
         ``from_round`` is snapshot TIME TRAVEL (≙ Iceberg
         ``rollback_to_snapshot``): resume from any RETAINED older round.
-        Rounds newer than the target are a now-divergent lineage — they are
-        pruned and LATEST is rewound to the target before any new work, so
-        later commits (target+1, ...) replay forward deterministically and
-        the LATEST-regression fencing guard stays monotonic."""
-        from .store import ParquetDeltaLogStore
-
+        Rounds newer than the target are a now-divergent lineage — the
+        store prunes them before any new work, so later commits (target+1,
+        ...) replay forward deterministically and the commit point only
+        moves forward."""
         eng = cls(spark, pages, workdir, config)
-        eng._stamp_writer()  # take over: fences out any still-live old writer
-        latest = int((eng.workdir / "LATEST").read_text().strip())
+        store = eng.store
+        if store.current() is None:
+            raise ValueError(
+                f"{workdir} has no committed snapshot to resume from"
+            )
+        eng._writer_token = store.take_over()  # fences out any old writer
         if from_round is not None:
-            # rollback semantics live on the store seam (plans/store.py ≙
-            # Iceberg manageSnapshots().rollbackTo) — one implementation,
-            # contract-tested in tests/test_store_contract.py
-            ParquetDeltaLogStore(spark, eng.workdir).rollback_to(from_round)
-            latest = from_round
-        rd = eng.workdir / f"round={latest:04d}"
-        manifest = json.loads((rd / "manifest.json").read_text())
+            # rollback semantics live on the store seam (≙ Iceberg
+            # manageSnapshots().rollbackTo), contract-tested in
+            # tests/test_store_contract.py
+            store.rollback_to(from_round)
+        at = store.current()
+        if not store.is_resumable(at):
+            raise ValueError(
+                f"round {at}'s chain references a round that retention has "
+                "pruned — this snapshot is no longer resumable (pick a newer "
+                "round or disable keep_rounds)"
+            )
+        manifest = store.manifest(at)
         eng.round = manifest["round"]
-        chain = manifest["chain"]
-        for t, paths in chain.items():
-            for p in paths:
-                if not (eng.workdir / p).exists():
-                    raise ValueError(
-                        f"round {latest}'s {t} chain references {p}, which "
-                        "retention has pruned — this snapshot is no longer "
-                        "resumable (pick a newer round or disable keep_rounds)"
-                    )
-        restored = spark.read.schema(FRONTIER_SCHEMA).parquet(str(rd / "frontier"))
+        restored = store.read("frontier", at)
         denied = None
         if eng.cfg.robots:
             # robots rules may differ from the run that wrote this snapshot
@@ -1278,7 +1189,7 @@ class CrawlEngine:
                 return df
             return eng._ckpt(df.coalesce(n))
 
-        eng._frontier_done = [_root(eng._read_chain(chain["term"], FRONTIER_SCHEMA))]
+        eng._frontier_done = [_root(store.read("term", at))]
         eng._pending_term = None
         eng._term_lazy = []
         eng._term_lazy_rows = 0
@@ -1294,22 +1205,21 @@ class CrawlEngine:
                 eng._ckpt(eng._frontier.coalesce(n))
             )
             eng._live_parquet_rooted = False
-        eng._seen_segs = [_root(eng._read_chain(chain["seen"], SEEN_SCHEMA))]
+        eng._seen_segs = [_root(store.read("seen", at))]
         eng._seen_since_durable = []
         eng._rebuild_seen_view()
-        eng._results_base = eng._read_chain(chain["results"], RESULT_SCHEMA)
+        eng._results_base = store.read("results", at)
         eng._results_new = []
         eng._rebuild_results_view()
-        eng._log = {t: list(p) for t, p in chain.items()}
+        eng._log = {t: list(p) for t, p in manifest["chain"].items()}
         eng._totals = manifest["totals"]
         eng._durable_round = eng.round
-        if manifest.get("bloom") and (rd / "bloom.bin").exists():
+        bloom = store.blob(at, "bloom.bin") if manifest.get("bloom") else None
+        if bloom is not None:
             from ..operators.bloom import BloomFilter
 
             b = manifest["bloom"]
-            eng._bloom = BloomFilter(
-                b["m_bits"], b["k"], (rd / "bloom.bin").read_bytes()
-            )
+            eng._bloom = BloomFilter(b["m_bits"], b["k"], bloom)
         elif eng._bloom is not None:
             # seen_bloom requested but the snapshot has no persisted filter
             # (e.g. the prior run had seen_bloom=False).  A fresh empty Bloom
@@ -2062,22 +1972,12 @@ class CrawlEngine:
         """Public commit seam (used by jobs-mode and run()): join any
         in-flight overlapped snapshot, then ensure the CURRENT round has a
         committed durable snapshot with final counters in its manifest.
-        Skipped when the final round's write already committed — a second
-        overwrite would target the very parquet dirs the re-rooted state
-        DataFrames are reading and destroy the last checkpoint."""
+        Skipped when the final round's write already committed: its
+        manifest already carries the write-observed counters, and the store
+        refuses a second commit of the same round."""
         self._join_pending_checkpoint()
         if self._durable_round != self.round:
             self._checkpoint()
-            return
-        # final round's overlapped write already committed: backfill the
-        # manifest's counters (mid-run manifests carry null by design)
-        rd = self.workdir / f"round={self.round:04d}"
-        mpath = rd / "manifest.json"
-        if mpath.exists():
-            manifest = json.loads(mpath.read_text())
-            if manifest.get("counters") is None:
-                manifest["counters"] = self.counters()
-                mpath.write_text(json.dumps(manifest, indent=2))
 
     # ---------------- outputs -------------------------------------------------
 

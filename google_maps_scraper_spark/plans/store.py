@@ -1,14 +1,34 @@
-"""Snapshot-store seam: the table-format contract the crawl engine's durable
-state sits behind, written so that swapping the parquet delta log for real
-Apache Iceberg is configuration, not surgery.
+"""Snapshot store: the one owner of the crawl engine's durable state, behind
+a table-format contract written so that swapping the parquet delta log for
+real Apache Iceberg is configuration, not surgery.
 
 ``SnapshotStore`` is the abstract seam — every method's docstring names the
 Iceberg API call it corresponds to, and ``tests/test_store_contract.py``
 exercises the contract purely through this interface, so an Iceberg-backed
 implementation can be dropped in and certified by the SAME suite.
-``ParquetDeltaLogStore`` is the shipped implementation over the crawl
-engine's workdir layout (``plans/crawl.py`` delta-log protocol:
-``round=NNNN/`` dirs + ``manifest.json`` + ``LATEST`` + ``WRITER``).
+``ParquetDeltaLogStore`` is the shipped implementation and the only code
+that knows the workdir layout:
+
+    round=NNNN/              one committed snapshot: per-table parquet (a
+                             delta or a compacted rewrite), the full live
+                             ``frontier``, an optional ``bloom.bin``, and the
+                             ``manifest.json`` pinning the chain + totals
+    .tmp.round=NNNN.<id>/    a commit being staged (unique per attempt)
+    .drop.<name>.<id>/       a dir being pruned (renamed aside first)
+    WRITER                   the writer lease token
+
+Commit protocol (≙ Iceberg's file-system catalog, which commits by one
+atomic rename of the next metadata version): ``commit`` stages every table,
+then the manifest, in a private temp dir, checks the lease and that the
+commit point has not already reached this round, and ``os.rename``s the
+temp dir onto ``round=NNNN``.  The rename IS the commit — a round dir exists
+only with its manifest inside — and a rename onto an existing round dir
+fails (ENOTEMPTY) instead of replacing it, so a racing writer gets
+``ConcurrentWriterError`` and no commit path ever removes a round dir.  The
+commit point is the highest round dir holding a manifest; there is no
+pointer file to flip.  Pruning (retention, expiry, rollback) renames each
+victim aside before deleting it, so a crash mid-prune never leaves a
+half-deleted dir that looks committed.
 
 Reference parity: the reference keeps durable job state behind the
 ``JobProvider``/``JobRepository`` interfaces (postgres/provider.go:23,
@@ -23,26 +43,30 @@ plan lives in COVERAGE.md:
 SnapshotStore           parquet delta-log impl              Apache Iceberg
 =====================  ==================================  =========================================
 snapshots()             round=NNNN dirs with manifest.json  Table.snapshots()
-current()               LATEST file                         Table.currentSnapshot().snapshotId()
+current()               highest committed round dir         Table.currentSnapshot().snapshotId()
 manifest(at)            round=NNNN/manifest.json            Snapshot.summary() + manifest list
 read(table, at)         union over the manifest chain       spark.read.option("snapshot-id", id)
 totals(at)              manifest["totals"]                  summary "total-records" per table
 is_resumable(at)        chain paths all present             snapshot not yet expired
-rollback_to(at)         prune newer dirs + rewind LATEST    manageSnapshots().rollbackTo(id)
-expire_snapshots(k)     delete unreferenced old round dirs  expireSnapshots().retainLast(k)
+rollback_to(at)         prune newer dirs, newest first      manageSnapshots().rollbackTo(id)
+expire_snapshots(k)     prune unreferenced old round dirs   expireSnapshots().retainLast(k)
 rewrite_data_files()    compacted full rewrite, new round   rewriteDataFiles() compaction action
-take_over()/fencing     WRITER token + LATEST-regression    optimistic-concurrency commit conflict
+take_over()/fencing     WRITER token + rename-no-replace    optimistic-concurrency commit conflict
+commit() (engine)       staged dir + one atomic rename      newAppend().appendFile(...).commit()
 =====================  ==================================  =========================================
 """
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import shutil
 import uuid
 from abc import ABC, abstractmethod
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -54,6 +78,19 @@ _TABLE_SCHEMAS = {
     "term": FRONTIER_SCHEMA,
     "frontier": FRONTIER_SCHEMA,
 }
+_CHAINED = ("seen", "results", "term")  # append-only, delta-chained tables
+
+
+class ConcurrentWriterError(RuntimeError):
+    """Another writer took over this store (its WRITER lease changed) or
+    committed the same snapshot id first; the losing writer must abort
+    instead of committing a split-brain snapshot (≙ the reference's
+    single-writer postgres job table guarded by SELECT ... FOR UPDATE SKIP
+    LOCKED claims, postgres/provider.go:148-244)."""
+
+
+def _write_table(df: DataFrame, parts: int, path: str) -> None:
+    df.coalesce(parts).write.mode("overwrite").parquet(path)
 
 
 class SnapshotStore(ABC):
@@ -126,19 +163,21 @@ class SnapshotStore(ABC):
 
 
 class ParquetDeltaLogStore(SnapshotStore):
-    """The shipped implementation over ``CrawlEngine``'s workdir delta log.
-
-    Pure read/admin layer: the ENGINE is the only appender (its
-    ``_write_snapshot_inner`` plays Iceberg's ``newAppend().commit()``);
-    this class covers everything an operator or a resuming run does to the
-    store between and after crawls.  ``CrawlEngine.resume(from_round=N)``
-    delegates its rollback step here so the semantics exist exactly once."""
+    """The shipped implementation: every read and write of the crawl's
+    workdir goes through this class.  ``CrawlEngine`` keeps only policy —
+    what each commit writes (delta vs compaction, the manifest fields, the
+    counters riding the writes) — and appends through ``commit`` (≙
+    ``newAppend().commit()``); operators and resuming runs use the contract
+    methods between and after crawls."""
 
     def __init__(self, spark: SparkSession, workdir: str | os.PathLike):
         self.spark = spark
         self.workdir = Path(workdir)
 
-    # -- helpers ------------------------------------------------------------
+    # -- layout -------------------------------------------------------------
+
+    def _dir(self, at: int) -> Path:
+        return self.workdir / f"round={at:04d}"
 
     def _round_dirs(self) -> list[tuple[int, Path]]:
         out = []
@@ -157,6 +196,8 @@ class ParquetDeltaLogStore(SnapshotStore):
         return int(rel_path.split("/", 1)[0].split("=")[1])
 
     def _chain_df(self, rel_paths: list[str], schema) -> DataFrame:
+        """Union view over a manifest chain's immutable parquet dirs
+        (bounded legs: compaction caps chain length)."""
         if not rel_paths:
             return self.spark.createDataFrame([], schema)
         df = self.spark.read.schema(schema).parquet(
@@ -168,19 +209,43 @@ class ParquetDeltaLogStore(SnapshotStore):
             )
         return df
 
+    def _drop(self, path: Path) -> None:
+        """Rename ``path`` aside, then delete it: the rename is atomic, so a
+        crash mid-delete leaves only a ``.drop.*`` dir that no read lists."""
+        aside = path.with_name(f".drop.{path.name}.{uuid.uuid4().hex}")
+        try:
+            os.rename(path, aside)
+        except FileNotFoundError:
+            return
+        shutil.rmtree(aside, ignore_errors=True)
+
+    def _prune(self, victims: Iterable[int]) -> list[int]:
+        """The one prune routine (retention, expiry, rollback): drops round
+        dirs newest first, so a crash part-way leaves a committed prefix of
+        the history whose head is still a resumable snapshot."""
+        victims = sorted(victims)
+        for r in reversed(victims):
+            self._drop(self._dir(r))
+        return victims
+
+    def _check_lease(self, expected_token: str | None) -> None:
+        if expected_token is not None and self.writer_token() != expected_token:
+            raise ConcurrentWriterError(
+                f"workdir {self.workdir} was taken over by another writer "
+                f"(WRITER token != {expected_token!r}); refusing to commit"
+            )
+
     # -- contract -----------------------------------------------------------
 
     def snapshots(self) -> list[int]:
         return [r for r, d in self._round_dirs() if (d / "manifest.json").exists()]
 
     def current(self) -> int | None:
-        latest = self.workdir / "LATEST"
-        if not latest.exists():
-            return None
-        return int(latest.read_text().strip())
+        snaps = self.snapshots()
+        return snaps[-1] if snaps else None
 
     def manifest(self, at: int) -> dict:
-        p = self.workdir / f"round={at:04d}" / "manifest.json"
+        p = self._dir(at) / "manifest.json"
         if not p.exists():
             raise ValueError(f"no committed snapshot for round {at}")
         return json.loads(p.read_text())
@@ -195,7 +260,7 @@ class ParquetDeltaLogStore(SnapshotStore):
         if table == "frontier":
             # the live frontier is stored full per snapshot, not chained
             return self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-                str(self.workdir / f"round={at:04d}" / "frontier")
+                str(self._dir(at) / "frontier")
             )
         return self._chain_df(m["chain"][table], _TABLE_SCHEMAS[table])
 
@@ -222,33 +287,26 @@ class ParquetDeltaLogStore(SnapshotStore):
             raise ValueError("store has no committed snapshot")
         if at > latest:
             raise ValueError(
-                f"from_round={at} is ahead of the commit point (LATEST={latest})"
+                f"from_round={at} is ahead of the commit point (round {latest})"
             )
-        if not (self.workdir / f"round={at:04d}" / "manifest.json").exists():
+        if not (self._dir(at) / "manifest.json").exists():
             raise ValueError(
                 f"round {at} has no committed snapshot in {self.workdir} "
                 "(pruned by retention, or never durable with "
                 "checkpoint_every > 1)"
             )
-        # newer rounds are a now-divergent lineage: prune, then rewind LATEST
-        # (order matters for kill-safety — a crash between the two leaves
-        # LATEST pointing at a pruned dir only if the prune half-finished,
-        # and re-running rollback_to is idempotent)
-        for r_old, d in self._round_dirs():
-            if r_old > at:
-                shutil.rmtree(d, ignore_errors=True)
-        latest_tmp = self.workdir / ".LATEST.tmp"
-        latest_tmp.write_text(str(at))
-        os.replace(latest_tmp, self.workdir / "LATEST")
+        # newer rounds are a now-divergent lineage; dropping them IS the
+        # rewind (the commit point is the highest committed dir), and
+        # re-running rollback_to after a crash part-way is idempotent
+        self._prune(r for r, _ in self._round_dirs() if r > at)
 
     def expire_snapshots(self, keep_last: int) -> list[int]:
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        committed = self.snapshots()
-        retained = committed[-keep_last:]
-        cutoff = retained[0] if retained else None
-        if cutoff is None:
+        retained = self.snapshots()[-keep_last:]
+        if not retained:
             return []
+        cutoff = retained[0]
         referenced = {
             self._round_of(p)
             for r in retained
@@ -263,104 +321,44 @@ class ParquetDeltaLogStore(SnapshotStore):
                 "run rewrite_data_files() first so the retained chain is "
                 "self-contained (Iceberg never expires referenced files)"
             )
-        for r, d in self._round_dirs():
-            if r < cutoff:
-                shutil.rmtree(d, ignore_errors=True)
-        return doomed
+        return self._prune(doomed)
 
     def rewrite_data_files(self, expected_token: str | None = None) -> int:
         cur = self.current()
         if cur is None:
             raise ValueError("store has no committed snapshot")
-        if expected_token is not None and self.writer_token() != expected_token:
-            from .crawl import ConcurrentWriterError
-
-            raise ConcurrentWriterError(
-                "writer lease changed under this compaction (WRITER token "
-                f"!= {expected_token!r}); refusing to commit"
-            )
         m = self.manifest(cur)
         rnd = cur + 1
-        rd = self.workdir / f"round={rnd:04d}"
-        tmp = self.workdir / f".tmp.round={rnd:04d}"
-        # our own tmp dir is always safe to clean; an EXISTING round dir is
-        # not — a concurrent writer may have committed round `rnd` since
-        # current() was read above, in which case removing it would destroy
-        # committed snapshot data while LATEST still points at it (r5
-        # ADVICE, medium).  Re-check the lease and LATEST immediately
-        # before the destructive step and refuse instead.
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        if rd.exists():
-            if expected_token is not None and self.writer_token() != expected_token:
-                from .crawl import ConcurrentWriterError
-
-                raise ConcurrentWriterError(
-                    "writer lease changed under this compaction; refusing to "
-                    f"remove existing {rd.name}"
-                )
-            committed = self.current()
-            if committed is not None and committed >= rnd:
-                from .crawl import ConcurrentWriterError
-
-                raise ConcurrentWriterError(
-                    f"LATEST={committed} already covers round {rnd}; another "
-                    f"writer committed {rd.name} — refusing to remove it"
-                )
-            shutil.rmtree(rd)
-        tmp.mkdir(parents=True)
-        chain: dict[str, list[str]] = {}
-        for t in ("seen", "results", "term"):
-            legs = m["chain"][t]
-            if not legs:
-                chain[t] = []
-                continue
-            # admin-path compaction: small fixed writer parallelism is fine
-            # (the engine's in-run compaction sizes by state; this runs
-            # between crawls)
-            self._chain_df(legs, _TABLE_SCHEMAS[t]).coalesce(8).write.mode(
-                "overwrite"
-            ).parquet(str(tmp / t))
-            chain[t] = [f"round={rnd:04d}/{t}"]
-        src = self.workdir / f"round={cur:04d}"
-        shutil.copytree(src / "frontier", tmp / "frontier")
+        # admin-path compaction: small fixed writer parallelism is fine (the
+        # engine's in-run compaction sizes by state; this runs between
+        # crawls)
+        tables = {
+            t: (self._chain_df(m["chain"][t], _TABLE_SCHEMAS[t]), 8)
+            for t in _CHAINED
+            if m["chain"][t]
+        }
+        src = self._dir(cur)
+        files = {"frontier": src / "frontier"}
         if (src / "bloom.bin").exists():
-            shutil.copy2(src / "bloom.bin", tmp / "bloom.bin")
-        manifest = dict(
-            m,
-            round=rnd,
-            parent_round=cur,
-            chain=chain,
-            counters={**m.get("counters", {}), "round": rnd},
-            commit_meta={
-                "actions": {t: "compact" for t in ("seen", "results", "term")},
-                "appended": {"seen": 0, "results": 0, "term": {}},
-                "chain_len": {t: len(chain[t]) for t in chain},
-                "live_rows": m.get("commit_meta", {}).get("live_rows"),
-            },
-        )
-        (tmp / "manifest.json").write_text(json.dumps(manifest, indent=2))
-        if expected_token is not None and self.writer_token() != expected_token:
-            from .crawl import ConcurrentWriterError
+            files["bloom.bin"] = src / "bloom.bin"
 
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise ConcurrentWriterError(
-                "writer lease changed while compacting; refusing to commit"
+        def manifest(legs: dict[str, str]) -> dict:
+            chain = {t: [legs[t]] if t in legs else [] for t in _CHAINED}
+            return dict(
+                m,
+                round=rnd,
+                parent_round=cur,
+                chain=chain,
+                counters={**m.get("counters", {}), "round": rnd},
+                commit_meta={
+                    "actions": {t: "compact" for t in _CHAINED},
+                    "appended": {"seen": 0, "results": 0, "term": {}},
+                    "chain_len": {t: len(chain[t]) for t in chain},
+                    "live_rows": m.get("commit_meta", {}).get("live_rows"),
+                },
             )
-        # LATEST-regression guard, same as the engine's append path
-        committed = self.current()
-        if committed is not None and committed >= rnd:
-            from .crawl import ConcurrentWriterError
 
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise ConcurrentWriterError(
-                f"LATEST={committed} already covers round {rnd}; another "
-                "writer committed a divergent lineage"
-            )
-        os.replace(tmp, rd)
-        latest_tmp = self.workdir / ".LATEST.tmp"
-        latest_tmp.write_text(str(rnd))
-        os.replace(latest_tmp, self.workdir / "LATEST")
+        self.commit(rnd, tables, manifest, expected_token, files)
         return rnd
 
     def writer_token(self) -> str | None:
@@ -371,7 +369,97 @@ class ParquetDeltaLogStore(SnapshotStore):
 
     def take_over(self) -> str:
         token = uuid.uuid4().hex
-        tmp = self.workdir / ".WRITER.tmp"
+        tmp = self.workdir / f".WRITER.{token}"
         tmp.write_text(token)
         os.replace(tmp, self.workdir / "WRITER")
         return token
+
+    # -- engine-facing (beyond the contract) --------------------------------
+
+    def reset(self) -> None:
+        """Empty the store for a fresh crawl: every snapshot and the lease
+        go (the whole workdir is dropped and recreated)."""
+        if self.workdir.exists():
+            self._drop(self.workdir)
+        self.workdir.mkdir(parents=True, exist_ok=True)
+
+    def commit(
+        self,
+        at: int,
+        tables: dict[str, tuple[DataFrame, int]],
+        manifest: Callable[[dict[str, str]], dict],
+        expected_token: str | None = None,
+        files: dict[str, bytes | Path] | None = None,
+    ) -> dict:
+        """The one publish routine: commit snapshot ``at``.
+
+        Writes ``tables`` ({name: (df, partitions)}) concurrently into a
+        private temp dir and adds ``files`` ({name: bytes, or a path to
+        copy}).  Then ``manifest(legs)`` builds the manifest — ``legs`` maps
+        each written table to its chain entry, and Observations riding the
+        writes are filled by then — and it is written last.  After the
+        lease check and the guard against an already-advanced commit point,
+        one ``os.rename`` onto ``round=NNNN`` commits.  Any failure removes
+        only this attempt's temp dir; a lost race (lease moved, commit
+        point at or past ``at``, or the rename target already exists)
+        raises ConcurrentWriterError.  Returns the manifest."""
+        self._check_lease(expected_token)
+        rd = self._dir(at)
+        tmp = self.workdir / f".tmp.{rd.name}.{uuid.uuid4().hex}"
+        tmp.mkdir(parents=True)
+        try:
+            with ThreadPoolExecutor(max_workers=4) as ex:
+                writes = [
+                    ex.submit(_write_table, df, parts, str(tmp / name))
+                    for name, (df, parts) in tables.items()
+                ]
+                for w in writes:
+                    w.result()
+            for name, src in (files or {}).items():
+                if isinstance(src, bytes):
+                    (tmp / name).write_bytes(src)
+                elif src.is_dir():
+                    shutil.copytree(src, tmp / name)
+                else:
+                    shutil.copy2(src, tmp / name)
+            m = manifest({t: f"{rd.name}/{t}" for t in tables})
+            (tmp / "manifest.json").write_text(json.dumps(m, indent=2))
+            self._check_lease(expected_token)
+            committed = self.current()
+            if committed is not None and committed >= at:
+                raise ConcurrentWriterError(
+                    f"the commit point is already round {committed}, not "
+                    f"below {at}; another writer committed a divergent "
+                    "lineage — refusing to regress the commit point"
+                )
+            try:
+                os.rename(tmp, rd)
+            except OSError as e:
+                if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
+                    raise
+                raise ConcurrentWriterError(
+                    f"another writer committed {rd.name} first; refusing "
+                    "to replace it"
+                ) from e
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        return m
+
+    def blob(self, at: int, name: str) -> bytes | None:
+        """A side file committed with snapshot ``at`` (e.g. ``bloom.bin``),
+        or None if that commit carried none."""
+        p = self._dir(at) / name
+        return p.read_bytes() if p.exists() else None
+
+    def references_before(self, legs: list[str], cutoff: int) -> bool:
+        """True iff a chain leg lives in a round dir older than ``cutoff``."""
+        return any(self._round_of(p) < cutoff for p in legs)
+
+    def prune_before(self, cutoff: int, chain: dict[str, list[str]]) -> list[int]:
+        """Retention: drop round dirs older than round number ``cutoff``
+        that ``chain`` (the newest commit's) does not reference."""
+        referenced = {self._round_of(p) for ps in chain.values() for p in ps}
+        return self._prune(
+            r for r, _ in self._round_dirs() if r < cutoff and r not in referenced
+        )

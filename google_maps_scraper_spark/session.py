@@ -8,12 +8,17 @@ sizing, runner/runner.go:109).  AQE stays on so skew joins split at runtime.
 from __future__ import annotations
 
 import os
+import weakref
 
 import pandas as pd
 
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "release_cached", "stop_spark"]
+
+# sessions already warmed: get_spark() returning an existing session must
+# not pay the warm-up jobs again
+_WARMED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 def get_spark(
@@ -89,8 +94,9 @@ def get_spark(
             k, _, v = kv.partition("=")
             builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
-    if os.environ.get("GMS_SESSION_WARMUP", "1") != "0":
+    if os.environ.get("GMS_SESSION_WARMUP", "1") != "0" and spark not in _WARMED:
         _warm_session_infra(spark)
+        _WARMED.add(spark)
     return spark
 
 

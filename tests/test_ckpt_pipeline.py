@@ -16,6 +16,7 @@ import pathlib
 import pytest
 
 from google_maps_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
+from google_maps_scraper_spark.plans.store import ParquetDeltaLogStore
 from google_maps_scraper_spark.sources.corpus import corpus_to_spark, generate_corpus
 
 NOW = 1786838400000000
@@ -163,7 +164,7 @@ def test_tight_retention_degrades_to_serial(spark, pages_and_seeds, tmp_path_fac
 def test_failed_commit_is_fail_stop(spark, pages_and_seeds, tmp_path_factory):
     """If commit N fails while commit N+1 is already queued, N+1 must NOT
     publish: its capture assumes N's deltas are in the chain, so publishing
-    would flip LATEST to a manifest that silently skips those rows.  The
+    would commit a manifest that silently skips those rows.  The
     run must raise and the store must end at a pre-failure commit point."""
     pages, seeds = pages_and_seeds
     wd = str(tmp_path_factory.mktemp("failstop"))
@@ -182,7 +183,7 @@ def test_failed_commit_is_fail_stop(spark, pages_and_seeds, tmp_path_factory):
     eng.seed_from_queries(seeds)
     with pytest.raises((OSError, RuntimeError)):
         eng.run()
-    latest = int((pathlib.Path(wd) / "LATEST").read_text())
+    latest = ParquetDeltaLogStore(spark, wd).current()
     assert latest < 2
     for d in pathlib.Path(wd).glob("round=*"):
         if (d / "manifest.json").exists():
@@ -197,7 +198,7 @@ def test_failed_commit_is_fail_stop(spark, pages_and_seeds, tmp_path_factory):
 
 def test_resume_mid_pipeline_crash(spark, pages_and_seeds, tmp_path_factory):
     """Abandoning the engine with commits still in flight (crash analog)
-    must leave a resumable store: LATEST points at a fully committed round,
+    must leave a resumable store: the commit point is a fully committed round,
     and resume + rerun reproduces the serial engine's final output."""
     pages, seeds = pages_and_seeds
     wd = str(tmp_path_factory.mktemp("crash"))

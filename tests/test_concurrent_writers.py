@@ -2,7 +2,7 @@
 
 SURVEY §7 plans an Iceberg/Delta table format for the crawl state; this
 sandbox ships no table-format jars (re-verified round 3 — see
-plans/crawl.py module docstring), so the write-then-flip parquet protocol
+plans/crawl.py module docstring), so the rename-commit parquet protocol
 must itself refuse split-brain: if a second engine resumes the same workdir
 (≙ another scraper instance claiming the same postgres job table), the
 fenced-out first writer must ABORT its next durable commit instead of
@@ -48,10 +48,9 @@ def test_second_writer_fences_out_first(spark, tmp_path_factory):
     assert counters["results"] > 0
 
     # A never published past round 1: B's history is the only one on disk
-    import pathlib
+    from google_maps_scraper_spark.plans.store import ParquetDeltaLogStore
 
-    latest = int((pathlib.Path(wd) / "LATEST").read_text().strip())
-    assert latest == b.round
+    assert ParquetDeltaLogStore(spark, wd).current() == b.round
 
 
 def test_sequential_resume_still_allowed(spark, tmp_path_factory):

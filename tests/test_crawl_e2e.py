@@ -178,11 +178,11 @@ def test_fixpoint_even_round_checkpoint(spark, corpus, tmp_path_factory, engine_
 def test_checkpoint_kill_during_write(spark, corpus, tmp_path_factory, engine_out, monkeypatch):
     """Kill injected INSIDE the snapshot writer (at the atomic publish step):
     the previous committed round must survive untouched, and resume + rerun
-    must reach the same final results (write-then-flip protocol proof).
+    must reach the same final results (rename-commit protocol proof).
     Durable writes are overlapped with the next round since round 3, so the
     injected error surfaces at the JOIN point (next run_round/finalize), not
     inside the round that submitted the write."""
-    import google_maps_scraper_spark.plans.crawl as crawl_mod
+    import google_maps_scraper_spark.plans.store as store_mod
 
     eng_full, counters = engine_out
     pages_df = corpus_to_spark(spark, corpus)
@@ -194,20 +194,19 @@ def test_checkpoint_kill_during_write(spark, corpus, tmp_path_factory, engine_ou
     eng.run_round()  # round 1 submitted
     eng._join_pending_checkpoint()  # round-1 snapshot durably committed
 
-    real_replace = crawl_mod.os.replace
+    real_rename = store_mod.os.rename
 
     def boom(*a, **k):
         raise RuntimeError("injected kill during checkpoint publish")
 
-    monkeypatch.setattr(crawl_mod.os, "replace", boom)
+    monkeypatch.setattr(store_mod.os, "rename", boom)
     eng.run_round()  # round 2: overlapped checkpoint dies in the background
     with pytest.raises(RuntimeError, match="injected kill"):
         eng.finalize()  # join point re-raises the write error
-    monkeypatch.setattr(crawl_mod.os, "replace", real_replace)
+    monkeypatch.setattr(store_mod.os, "rename", real_rename)
     del eng
 
-    import pathlib
-    assert (pathlib.Path(wd) / "LATEST").read_text().strip() == "1"
+    assert store_mod.ParquetDeltaLogStore(spark, wd).current() == 1
     eng2 = CrawlEngine.resume(spark, pages_df, wd, cfg)
     assert eng2.round == 1
     eng2.run()

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from google_maps_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
+from google_maps_scraper_spark.plans.store import ParquetDeltaLogStore
 from google_maps_scraper_spark.schemas import SEEN_SCHEMA, STATUS_NEW
 from google_maps_scraper_spark.sources.corpus import corpus_to_spark, generate_corpus
 
@@ -79,7 +80,7 @@ def test_commits_write_only_deltas(spark, pages_and_seeds, tmp_path_factory):
     assert all(v < term_total for v in term_dirs.values())
 
     # chain union == in-memory table, row for row
-    chain_df = eng._read_chain(final["chain"]["seen"], SEEN_SCHEMA)
+    chain_df = ParquetDeltaLogStore(spark, wd).read("seen", max(manifests))
     assert (
         chain_df.select("url").subtract(eng.seen.select("url")).count() == 0
         and eng.seen.select("url").subtract(chain_df.select("url")).count() == 0
@@ -140,11 +141,12 @@ def test_broken_chain_resume_is_loud(spark, pages_and_seeds, tmp_path_factory):
     eng.seed_from_queries(seeds)
     eng.run()
     final = _manifests(wd)[eng.round]
+    round_of = ParquetDeltaLogStore._round_of
     victims = {
-        CrawlEngine._round_of(p)
+        round_of(p)
         for ps in final["chain"].values()
         for p in ps
-        if CrawlEngine._round_of(p) < eng.round
+        if round_of(p) < eng.round
     }
     assert victims, "multi-round chain must reference an older dir"
     shutil.rmtree(pathlib.Path(wd) / f"round={min(victims):04d}")

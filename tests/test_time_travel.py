@@ -1,13 +1,13 @@
 """Snapshot time travel + retention on the parquet state store, the
-LATEST-regression fencing guard, robots re-stamping on resume, and the
+commit-point regression fencing guard, robots re-stamping on resume, and the
 stats-reset hardening (round-3 VERDICT #3/#5/#8 + ADVICE robots/fencing).
 
 Time travel ≙ Iceberg ``rollback_to_snapshot`` / snapshot-id reads — the one
 MERGE-store capability gap the sandbox's plain-parquet protocol could still
 close (round-3 VERDICT "what's missing" #1)."""
 
-import json
 import pathlib
+import shutil
 
 import pytest
 
@@ -16,6 +16,7 @@ from google_maps_scraper_spark.plans.crawl import (
     CrawlConfig,
     CrawlEngine,
 )
+from google_maps_scraper_spark.plans.store import ParquetDeltaLogStore
 from google_maps_scraper_spark.sources.corpus import corpus_to_spark, generate_corpus
 
 NOW = 1786838400000000
@@ -56,12 +57,12 @@ def test_resume_from_older_round_replays_identically(
     # travel back to round 1, replay forward: identical final tables
     b = CrawlEngine.resume(spark, pages, wd, cfg, from_round=1)
     assert b.round == 1
-    # newer (now-divergent) round dirs were pruned, LATEST rewound
+    # newer (now-divergent) round dirs were pruned, commit point rewound
     rounds_left = sorted(
         int(d.name.split("=")[1]) for d in pathlib.Path(wd).glob("round=*")
     )
     assert rounds_left == [0, 1]
-    assert int((pathlib.Path(wd) / "LATEST").read_text()) == 1
+    assert ParquetDeltaLogStore(spark, wd).current() == 1
 
     b.run()
     assert b.round == final_round
@@ -101,17 +102,18 @@ def test_retention_keeps_last_k(spark, pages_and_seeds, tmp_path_factory):
 
 def test_latest_regression_refused(spark, pages_and_seeds, tmp_path_factory):
     """Narrowed check-then-act window (round-3 ADVICE): a writer whose round
-    number no longer exceeds the published LATEST must refuse to commit even
-    if its WRITER token still matches (e.g. the takeover happened between
-    the final token check and the publish)."""
+    number no longer exceeds the published commit point must refuse to
+    commit even if its WRITER token still matches (e.g. the takeover
+    happened between the final token check and the publish)."""
     pages, seeds = pages_and_seeds
     wd = str(tmp_path_factory.mktemp("tt-fence"))
     a = CrawlEngine(spark, pages, wd, CrawlConfig(now_micros=NOW))
     a.seed_from_queries(seeds)
     a.run_round()
     a._join_pending_checkpoint()
-    # simulate a racing writer having advanced the commit point
-    (pathlib.Path(wd) / "LATEST").write_text("7")
+    # simulate a racing writer having advanced the commit point: a
+    # committed round dir above this writer's next round
+    shutil.copytree(pathlib.Path(wd) / "round=0001", pathlib.Path(wd) / "round=0007")
     a.run_round()
     with pytest.raises(ConcurrentWriterError, match="refusing to regress"):
         a.finalize()
