@@ -1337,19 +1337,21 @@ _POS_KG_CTE = r"""
 def _pos_kgrams(d: DataFrame, k: int = _SPAN_K) -> DataFrame:
     """(doc_id, pos, g): the k-gram starting at 1-based token position pos.
     All JVM-side (split -> transform(sequence) -> explode); one row per
-    position, so downstream joins see positions, not documents."""
-    # explode_outer + isnotnull prefilter: dodge the generator-cloning
-    # InferFiltersFromGenerate rule (the k-gram array is never empty for
-    # non-null text — sequence over >= 1 element); identical semantics
+    position, so downstream joins see positions, not documents.  A NULL
+    text has one position whose gram is NULL, as in the DuckDB oracle, so
+    it counts as a position but joins no other document."""
+    # explode_outer dodges the generator-cloning InferFiltersFromGenerate
+    # rule; the k-gram array is never empty (sequence over >= 1 element), so
+    # it yields exactly explode's rows
     return (
-        d.filter(F.col("text").isNotNull())
-        .withColumn("_toks", F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+        d.withColumn("_toks", F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
         .select(
             "doc_id",
             F.explode_outer(
                 F.expr(
                     f"transform(sequence(1, greatest(size(_toks) - {k - 1}, 1)),"
-                    f" i -> struct(i AS pos, concat_ws(' ', slice(_toks, i, {k})) AS g))"
+                    f" i -> struct(i AS pos, IF(_toks IS NULL, NULL,"
+                    f" concat_ws(' ', slice(_toks, i, {k}))) AS g))"
                 )
             ).alias("pg"),
         )

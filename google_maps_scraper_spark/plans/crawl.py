@@ -1,21 +1,27 @@
 """The crawl engine: driver-coordinated BFS rounds over DataFrames.
 
 Round shape (≙ the reference's scrapemate loop, re-expressed as dataflow):
+``CrawlEngine.run_round`` runs one method per phase, each returning what the
+next one reads.
 
-    claim      — window-rank round selection per politeness bucket
-                 (≙ ``ORDER BY priority ASC, created_at ASC ... LIMIT``
-                 claim of postgres/provider.go:148-244, plus the per-host
-                 politeness budget the north_rule adds);
-    fetch      — equi-join frontier×pages on url (replaces the live fetch,
-                 gmaps/job.go:189-261);
-    process    — branch by job kind, vectorized extraction UDFs;
-    admit      — first-wins dedup of SERP-discovered hrefs: window rank on
-                 (parent created_path, pos) then left-anti join against the
-                 seen table (≙ deduper.AddIfNotExists under sequential DOM
-                 iteration, gmaps/job.go:159-176 + deduper/hashmap.go:16-35);
-    commit     — union results/children, flip statuses, checkpoint parquet
-                 tables + a JSON manifest (resume ≙ the DB modes' natural
-                 resumability, postgres/provider.go:17-21).
+    _claim_round    — window-rank round selection per politeness bucket
+                      (≙ ``ORDER BY priority ASC, created_at ASC ... LIMIT``
+                      claim of postgres/provider.go:148-244, plus the
+                      per-host politeness budget the north_rule adds);
+    _fetch_dispatch — equi-join claim×pages on url (replaces the live fetch,
+                      gmaps/job.go:189-261), then one kind-dispatched
+                      vectorized extraction UDF; fetch misses recovered;
+    _follow_chains  — review-RPC chains followed to exhaustion in-round;
+    _admit          — first-wins dedup of SERP-discovered hrefs: window rank
+                      on (parent created_path, pos) then left-anti join
+                      against the seen table (≙ deduper.AddIfNotExists under
+                      sequential DOM iteration, gmaps/job.go:159-176 +
+                      deduper/hashmap.go:16-35);
+    _emit           — new place/email/review jobs and result rows;
+    _retire         — flip statuses, split live/terminal, materialize the
+                      round's state and submit the durable commit (parquet
+                      tables + a JSON manifest; resume ≙ the DB modes'
+                      natural resumability, postgres/provider.go:17-21).
 
 Termination: fixpoint — no ``new`` frontier rows (≙ exiter's
 seedCompleted>=seedCount && placesCompleted>=placesFound,
@@ -55,13 +61,12 @@ changes only the store.
 from __future__ import annotations
 
 import json
-import os
 import time
 from collections import defaultdict, deque
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.extractors import dispatch_udf, etld1_col, harvest_emails_udf
@@ -112,18 +117,10 @@ class CrawlConfig:
     # truncated) and commits every N rounds + at fixpoint.  Since the delta
     # log landed, a commit writes O(rows appended since the last commit) —
     # per-round durability no longer rewrites the state tables.
-    # Durable writes OVERLAP the next round's compute (round-3 driver-latency
-    # work): round N's snapshot commits while round N+1 runs, so a crash can
-    # lose at most the most recent round — resume then deterministically
-    # re-runs it.  finalize()/run() always join and commit the final round.
-    ckpt_inflight: int = 2
-    # max durable commits in flight at once.  1 reproduces the round-3
-    # behavior (join before every submit); 2 lets commit N's writes overlap
-    # commit N+1's CAPTURE and the following round — the measured quiet-box
-    # scaling limiter was the driver blocking on the previous commit at
-    # round end (BENCH.md ckpt=1 phase profile: ckpt_join scaled 1.73x with
-    # 4x cores).  Commits still EXECUTE serially on the one writer thread
-    # (the manifest chain is ordered); only the driver's wait is removed.
+    # Durable writes OVERLAP the next round's compute: a crash can lose at
+    # most the rounds whose commits were still in flight — resume then
+    # deterministically re-runs them.
+    # finalize()/run() always join and commit the final round.
     broadcast_claim_rows: int = 100_000
     # claims up to this many rows broadcast into the pages join (the huge
     # pages table is then never shuffled); larger claims fall back to a
@@ -155,7 +152,6 @@ class CrawlConfig:
     # false positives fall through to the anti-join, false negatives are
     # impossible.
     bloom_capacity: int = 1_000_000      # expected distinct URLs (sizes m,k)
-    bloom_fpp: float = 0.01
     term_flush_rows: int = 65536
     # terminal-segment commit batching: retiring rows accumulate as lazy
     # deltas (cheap projections of already-checkpointed round outputs) and
@@ -189,12 +185,111 @@ _CHAIN_MAX_HOPS = 64
 # extract/urls.py:228-243) — the predicate that carves the chain working set
 # out of the pages table
 _REVIEW_RPC_PREFIX = "https://www.google.com/maps/rpc/listugcposts"
+# Max durable commits in flight at once: 2 lets commit N's writes overlap
+# commit N+1's CAPTURE and the following round, so the driver no longer
+# blocks on the previous commit at round end.  Commits still EXECUTE
+# serially on the one writer thread (the manifest chain is ordered).  Depth
+# 2 measured faster than 1 and than 4 (BENCH.md, BENCH_HISTORY.md).
+_CKPT_INFLIGHT = 2
+# false-positive rate the seen_bloom filter is sized for
+_BLOOM_FPP = 0.01
+# the entry fields a result row copies from a dispatched entry struct
+_ENTRY_COLS = (
+    "link", "cid", "title", "category", "categories", "address", "web_site",
+    "phone", "plus_code", "review_count", "review_rating", "latitude",
+    "longitude", "status", "place_id", "data_id",
+)
+
+
+def _union_all(parts: list[DataFrame]) -> DataFrame:
+    df = parts[0]
+    for p in parts[1:]:
+        df = df.unionByName(p)
+    return df
+
+
+def _first_wins(df: DataFrame, key: str, *order) -> DataFrame:
+    w = Window.partitionBy(key).orderBy(*order)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _latest_capture(df: DataFrame, tiebreak: str) -> DataFrame:
+    # one row per job, its url's latest capture; equal warc_ts resolve by a
+    # hash of ``tiebreak`` — identically across runs, never by partition luck
+    return _first_wins(
+        df, "job_id", F.col("warc_ts").desc_nulls_last(), F.xxhash64(tiebreak).asc()
+    )
+
+
+def _named(col: str | Column, name: str) -> Column:
+    # a same-named input column passes through unaliased
+    if isinstance(col, str):
+        return F.col(col) if col == name else F.col(col).alias(name)
+    return col.alias(name)
+
+
+def _frontier_jobs(
+    src, kind, *, key, url, parent: str, path, priority, depth, max_retries, payload
+) -> DataFrame:
+    # new ``kind`` jobs, one per ``src`` row, in FRONTIER_SCHEMA column order
+    # (_stamp_url_cols adds url_hash/host/politeness_bucket).  The job id
+    # hashes (kind, key, parent job id); ``parent`` names the src column
+    # holding that id, ``path`` is the suffix to the parent's created_path.
+    return src.select(
+        _jid(F.lit(kind), key, F.col(parent)).alias("job_id"),
+        _named(parent, "parent_id"),
+        F.col("seed_id"),
+        F.lit(kind).alias("kind"),
+        url.alias("url"),
+        F.concat_ws(".", F.col("created_path"), path).alias("created_path"),
+        F.lit(priority).alias("priority"),
+        _named(depth, "depth"),
+        F.col("max_depth"),
+        F.lit(0).alias("retries"),
+        F.lit(max_retries).alias("max_retries"),
+        F.lit(STATUS_NEW).alias("status"),
+        F.lit(None).cast("int").alias("round_claimed"),
+        F.col("extract_email"),
+        F.col("lang"),
+        payload.alias("payload"),
+    )
+
+
+def _review_continuations(src: DataFrame) -> DataFrame:
+    # one reviews job per dispatched row with a next review-RPC page, its
+    # payload the accumulated reviews; chain jobs keep the parent's depth —
+    # the page cap bounds them
+    nxt = F.col("p.reviews_next.url")
+    return _frontier_jobs(
+        src.filter(nxt.isNotNull()), KIND_REVIEWS, key=nxt, url=nxt,
+        parent="job_id", path=F.lit("r00000"), priority=PRIORITY_MEDIUM,
+        depth="depth", max_retries=3, payload=F.col("p.reviews_next.payload"),
+    )
+
+
+def _result_rows(src: DataFrame, entry: str, emails: Column, rnd: int) -> DataFrame:
+    # RESULT_SCHEMA rows from a dispatched entry struct: ``p.entry`` for
+    # place/review results, ``p.email`` for finished email jobs
+    return src.select(
+        "job_id",
+        F.col(f"{entry}.input_id").alias("input_id"),
+        F.col("url"),
+        *[F.col(f"{entry}.{c}").alias(c) for c in _ENTRY_COLS],
+        emails.alias("emails"),
+        F.col(f"{entry}.canonical_json").alias("canonical_json"),
+        F.lit(rnd).alias("round_emitted"),
+    )
 
 
 def _state_storage_level(spark: SparkSession):
     """Block-manager storage level for the engine's in-memory state
     checkpoints (frontier / seen segments / terminal segments / round
-    outputs).
+    outputs): serialized, and off the heap when the session has an off-heap
+    pool.
 
     ``localCheckpoint``'s default is MEMORY_AND_DISK **deserialized**: every
     cached row lives as Java objects on the executor heap.  That is the
@@ -205,26 +300,16 @@ def _state_storage_level(spark: SparkSession):
     scan (each state table is scanned once per round) but keep the heap
     flat; with ``spark.memory.offHeap.enabled`` the blocks leave the heap
     entirely (``OFF_HEAP`` still spills to disk when the pool fills, so
-    nothing is ever recomputed — localCheckpoint has no lineage to replay).
-
-    ``GMS_STATE_STORAGE`` overrides for A/B: ``offheap`` | ``memdisk``
-    (serialized on-heap) | ``deser`` (the old default)."""
+    nothing is ever recomputed — localCheckpoint has no lineage to replay)."""
     from pyspark import StorageLevel
 
-    mode = os.environ.get("GMS_STATE_STORAGE", "auto").lower()
-    if mode == "deser":
-        return None  # localCheckpoint default (MEMORY_AND_DISK_DESER)
-    if mode == "memdisk":
-        return StorageLevel.MEMORY_AND_DISK
-    if mode != "offheap":  # auto
-        try:
-            if spark.conf.get(
-                "spark.memory.offHeap.enabled", "false"
-            ).lower() != "true":
-                return StorageLevel.MEMORY_AND_DISK
-        except Exception:
-            return StorageLevel.MEMORY_AND_DISK
-    return StorageLevel.OFF_HEAP
+    try:
+        off_heap = spark.conf.get(
+            "spark.memory.offHeap.enabled", "false"
+        ).lower() == "true"
+    except Exception:
+        off_heap = False
+    return StorageLevel.OFF_HEAP if off_heap else StorageLevel.MEMORY_AND_DISK
 
 
 class CrawlEngine:
@@ -254,9 +339,9 @@ class CrawlEngine:
         self._chain_pages = None   # lazily materialized review-RPC page
         # subset: every chain-hop fetch probes this instead of re-scanning
         # the full pages table (built once per run, on the first multi-hop
-        # chain — see the chain loop in run_round)
+        # chain — see _follow_chains)
         self._ckpt_pool = None     # lazy single-thread executor: serializes
-        # in-flight durable snapshots, oldest first (≤ cfg.ckpt_inflight).
+        # in-flight durable snapshots, oldest first (≤ _CKPT_INFLIGHT).
         # The single worker runs them in submit order; the driver folds
         # finished records opportunistically (round start / next submit)
         # and blocks only when the queue is full or at sync points.
@@ -277,11 +362,10 @@ class CrawlEngine:
         # skips those rows
         self._ckpt_failed: BaseException | None = None
         self._bloom = None
-        if (config or CrawlConfig()).seen_bloom:
+        if self.cfg.seen_bloom:
             from ..operators.bloom import BloomFilter
 
-            c = config or CrawlConfig()
-            self._bloom = BloomFilter.sized(c.bloom_capacity, c.bloom_fpp)
+            self._bloom = BloomFilter.sized(self.cfg.bloom_capacity, _BLOOM_FPP)
         self._frontier: DataFrame | None = None   # LIVE rows (status NEW)
         self._frontier_done: list[DataFrame] = []  # terminal segments,
         # append-only: each is materialized ONCE when its round retires it
@@ -363,20 +447,23 @@ class CrawlEngine:
                 PRIORITY_LOW, path, 0, self.cfg.max_depth, 0, 3,
                 STATUS_NEW, None, self.cfg.extract_email, self.cfg.lang, None,
             ))
-        df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        self._split_frontier(self._stamp_url_cols(df), materialize_done=True)
-        self._seen_segs = []
-        self._pending_seen = None
-        self._rebuild_seen_view()
-        self._results_base = self.spark.createDataFrame([], RESULT_SCHEMA)
-        self._results_new = []
-        self._rebuild_results_view()
-        self._log = {"seen": [], "results": [], "term": []}
-        self._totals = {"term": {}, "seen": 0, "results": 0}
-        self._seen_since_durable = []
-        # robots can deny SEED urls: the split's terminal part (possibly
-        # empty) must reach the durable term log like any other retirement
-        self._term_since_durable = [self._frontier_done[0]]
+        full = self._stamp_url_cols(self.spark.createDataFrame(rows, FRONTIER_SCHEMA))
+        # the terminal part (robots-denied seeds, possibly empty) is
+        # materialized ONCE, like every terminal segment: segments are
+        # immutable and never re-persisted
+        done = self._ckpt(
+            full.filter(F.col("status") != STATUS_NEW)
+            .coalesce(self._state_partitions())
+        )
+        self._root_state(
+            full.filter(F.col("status") == STATUS_NEW), done, [],
+            self.spark.createDataFrame([], RESULT_SCHEMA),
+            {"seen": [], "results": [], "term": []},
+            {"term": {}, "seen": 0, "results": 0},
+        )
+        # robots can deny SEED urls: the terminal part must reach the
+        # durable term log like any other retirement
+        self._term_since_durable = [done]
         self.round = 0
         self.store.reset()
         self._writer_token = self.store.take_over()
@@ -416,10 +503,9 @@ class CrawlEngine:
         )
         # robots gating (engine-new, north_rule) applied at ADMISSION, not at
         # claim: rules are static for the run, so stamping denial once on the
-        # claim-sized children delta replaces the per-round join over the full
-        # NEW backlog the round-2 engine paid (round-3 VERDICT #8).  Denied
-        # jobs enter the frontier already terminally FAILED — they can never
-        # be claimed, retried, or block the fixpoint.
+        # claim-sized children delta avoids a per-round join over the full
+        # NEW backlog.  Denied jobs enter the frontier already terminally
+        # FAILED — they can never be claimed, retried, or block the fixpoint.
         if self.cfg.robots:
             path = F.regexp_replace(F.col("url"), r"^https?://[^/]+", "")
             if len(self.cfg.robots) <= 256:
@@ -471,59 +557,42 @@ class CrawlEngine:
         the audit/counters/snapshot view.  Claims never build this (they
         read the live set only), so the union's width costs nothing on the
         per-round hot path; segment count is bounded by round count."""
-        df = self._frontier
-        for seg in self._frontier_done:
-            df = df.unionByName(seg)
-        for seg in self._term_lazy:
-            df = df.unionByName(seg)
-        if self._pending_term is not None:
-            df = df.unionByName(self._pending_term)
-        return df
+        pending = [] if self._pending_term is None else [self._pending_term]
+        return _union_all(
+            [self._frontier, *self._frontier_done, *self._term_lazy, *pending]
+        )
 
-    def _split_frontier(self, full: DataFrame, materialize_done: bool = False) -> None:
-        """Root live/terminal state at a full-frontier DataFrame (seed,
-        checkpoint re-root, resume).
-
-        ``materialize_done=True`` (seed/resume — the engine will keep
-        running) copies the terminal part into the block manager ONCE:
-        terminal segments are immutable and never re-persisted, so a
-        segment left as a parquet view would outlive its round directory
-        when ``keep_rounds`` retention prunes it mid-run.  The finalize
-        re-root keeps the free view — commits stop there and the commit
-        point is never pruned."""
-        self._frontier = full.filter(F.col("status") == STATUS_NEW)
-        done = full.filter(F.col("status") != STATUS_NEW)
-        if materialize_done:
-            done = self._ckpt(done.coalesce(self._state_partitions()))
-        self._frontier_done = [done]
+    def _root_state(self, live, term, seen_segs, results, log, totals) -> None:
+        """Root the state at the given tables and durable chain (seed,
+        resume): nothing pending, nothing lazy, nothing since-durable."""
+        self._frontier = live
+        self._frontier_done = [term]
         self._pending_term = None
         self._term_lazy = []
         self._term_lazy_rows = 0
+        self._term_since_durable = []
+        self._seen_segs = seen_segs
+        self._pending_seen = None
+        self._seen_since_durable = []
+        self._rebuild_seen_view()
+        self._results_base = results
+        self._results_new = []
+        self._rebuild_results_view()
+        self._log = log
+        self._totals = totals
 
     def _rebuild_seen_view(self) -> None:
         """self._seen = union of the immutable admission segments (+ the
         not-yet-materialized current round's delta, so mid-round consumers
-        see a consistent set)."""
-        df = self.spark.createDataFrame([], SEEN_SCHEMA)
-        for seg in self._seen_segs:
-            df = df.unionByName(seg)
-        if self._pending_seen is not None:
-            df = df.unionByName(self._pending_seen)
-        self._seen = df
+        see a consistent set).  The leading empty leg gives the view
+        SEEN_SCHEMA's types before any segment exists."""
+        pending = [] if self._pending_seen is None else [self._pending_seen]
+        self._seen = _union_all(
+            [self.spark.createDataFrame([], SEEN_SCHEMA), *self._seen_segs, *pending]
+        )
 
     def _rebuild_results_view(self) -> None:
-        df = self._results_base
-        for d in self._results_new:
-            df = df.unionByName(d)
-        self._results = df
-
-    def _union_all(self, parts: list[DataFrame], schema) -> DataFrame:
-        if not parts:
-            return self.spark.createDataFrame([], schema)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
+        self._results = _union_all([self._results_base, *self._results_new])
 
     # in-memory seen-segment compaction threshold: past this many union legs
     # the per-round anti-join plan's compile cost starts to matter, so the
@@ -575,23 +644,15 @@ class CrawlEngine:
             # segment re-root logic guards against)
             or self._live_parquet_rooted
         )
-        tables = [("frontier", (self._frontier, n))]
+        tables = {"frontier": (self._frontier, n)}
         seen_obs = Observation()
         if self._pending_seen is not None:
-            tables.append((
-                "seen_delta",
-                (
-                    self._pending_seen.observe(
-                        seen_obs, F.count(F.lit(1)).alias("n")
-                    ),
-                    n_delta,
-                ),
-            ))
+            tables["seen_delta"] = (
+                self._pending_seen.observe(seen_obs, F.count(F.lit(1)).alias("n")),
+                n_delta,
+            )
         if flush:
-            batch = self._term_lazy[0]
-            for seg in self._term_lazy[1:]:
-                batch = batch.unionByName(seg)
-            tables.append(("term", (batch, n)))
+            tables["term"] = (_union_all(self._term_lazy), n)
         with self._timed("persist"), self._timed(
             f"persist/round{self.round:02d}"
         ), ThreadPoolExecutor(max_workers=3) as ex:
@@ -599,7 +660,7 @@ class CrawlEngine:
                 name: ex.submit(
                     lambda df, k: self._ckpt(df.coalesce(k)), df, k
                 )
-                for name, (df, k) in tables
+                for name, (df, k) in tables.items()
             }
             self._frontier = self._reset_stats(fs["frontier"].result())
             self._live_parquet_rooted = False  # live now on fresh blocks
@@ -649,10 +710,9 @@ class CrawlEngine:
             keep_tail = len(self._seen_since_durable)
             prefix = self._seen_segs[: len(self._seen_segs) - keep_tail]
             if len(prefix) > 1:
-                merged = prefix[0]
-                for seg in prefix[1:]:
-                    merged = merged.unionByName(seg)
-                merged = self._reset_stats(self._ckpt(merged.coalesce(n)))
+                merged = self._reset_stats(
+                    self._ckpt(_union_all(prefix).coalesce(n))
+                )
                 self._seen_segs = [merged] + self._seen_segs[len(prefix):]
         self._rebuild_seen_view()
 
@@ -766,13 +826,13 @@ class CrawlEngine:
     # snapshot is reading (locked by tests/test_commit_protocol.py and
     # tests/test_crawl_e2e.py::test_checkpoint_kill_during_write).
     #
-    # The round-2 engine blocked the driver on the three parquet writes plus
-    # three counter aggregations EVERY durable round — the measured fixed
-    # latency that capped end-to-end scaling at 0.523 (round-2 VERDICT #1).
-    # Round 3 submits the write to a single-thread executor and runs the NEXT
-    # round's claim/dispatch concurrently; the future is joined at the next
-    # round's start (or at finalize), which also surfaces write errors and
-    # re-roots the append-only results table at the committed chain.
+    # Blocking the driver on the parquet writes and counter aggregations
+    # every durable round is a fixed latency that caps end-to-end scaling,
+    # so the write runs on a single-thread executor while the NEXT round's
+    # claim/dispatch proceeds; the future is joined later (at most
+    # _CKPT_INFLIGHT in flight, all at finalize), which also surfaces write
+    # errors and re-roots the append-only results table at the committed
+    # chain.
     # Counters ride the delta writes as Observations folded into the running
     # totals, so EVERY commit's manifest carries exact counters for free.
     #
@@ -789,12 +849,7 @@ class CrawlEngine:
         has moved it into the lazy list, and a pending delta is not yet in
         ``_term_since_durable`` — including it here would double-count its
         rows at the next delta commit."""
-        df = self._frontier_done[0]
-        for seg in self._frontier_done[1:]:
-            df = df.unionByName(seg)
-        for seg in self._term_lazy:
-            df = df.unionByName(seg)
-        return df
+        return _union_all(self._frontier_done + self._term_lazy)
 
     def _capture_commit(self) -> dict:
         """Snapshot the durable-commit inputs on the DRIVER thread: delta
@@ -802,7 +857,7 @@ class CrawlEngine:
         record how much of each since-durable list the commit covers, and the
         full views back the compaction path.
 
-        Pipelining contract (cfg.ckpt_inflight > 1): each capture takes only
+        Pipelining contract (_CKPT_INFLIGHT > 1): each capture takes only
         the suffix past ``_cap_heads`` — the entries no earlier in-flight
         commit already covers — and marks are RELATIVE counts, applied in
         commit order by ``_apply_commit`` (entries captured-but-unapplied
@@ -912,9 +967,7 @@ class CrawlEngine:
                 df, parts = cap["full"][t], n
                 actions[t] = "compact"
             elif deltas:
-                df = deltas[0]
-                for d in deltas[1:]:
-                    df = df.unionByName(d)
+                df = _union_all(deltas)
                 # row-aware writer parallelism: a steady-state delta is
                 # claim-sized (few partitions, few files — the Iceberg
                 # small-commit shape), but a fixpoint/first commit's delta
@@ -947,38 +1000,35 @@ class CrawlEngine:
             # Observations are filled
             totals = json.loads(json.dumps(self._wtotals))
             log = {t: list(self._wlog[t]) for t in ("seen", "results", "term")}
-            for t in ("seen", "results"):
+            # snapshot summary (≙ Iceberg's snapshot parent-id + summary
+            # map): per-table action taken this commit, rows appended by it,
+            # and the chain depth — the per-partition lineage a
+            # monitoring/debug read needs without opening any parquet footer
+            appended = {
+                t: obs[t].get["n"] if actions[t] != "none" else 0
+                for t in ("seen", "results")
+            }
+            appended["term"] = (
+                {k: v for k, v in obs["term"].get.items() if v}
+                if actions["term"] != "none" else {}
+            )
+            for t in ("seen", "results", "term"):
                 if actions[t] == "compact":
-                    totals[t] = obs[t].get["n"]
+                    totals[t] = appended[t]
                     log[t] = [legs[t]]
                 elif actions[t] == "delta":
-                    totals[t] += obs[t].get["n"]
+                    if t == "term":
+                        for k, v in appended[t].items():
+                            totals[t][k] = totals[t].get(k, 0) + v
+                    else:
+                        totals[t] += appended[t]
                     log[t].append(legs[t])
-            if actions["term"] == "compact":
-                totals["term"] = {k: v for k, v in obs["term"].get.items() if v}
-                log["term"] = [legs["term"]]
-            elif actions["term"] == "delta":
-                for k, v in obs["term"].get.items():
-                    if v:
-                        totals["term"][k] = totals["term"].get(k, 0) + v
-                log["term"].append(legs["term"])
 
             wc = {k: v for k, v in f_obs.get.items() if v}
             for k, v in totals["term"].items():
                 wc[k] = wc.get(k, 0) + v
             wc["seen"] = totals["seen"]
             wc["results"] = totals["results"]
-            # snapshot summary (≙ Iceberg's snapshot parent-id + summary
-            # map): per-table action taken this commit, rows appended by it,
-            # and the chain depth — the per-partition lineage a
-            # monitoring/debug read needs without opening any parquet footer
-            appended = {}
-            for t in ("seen", "results"):
-                appended[t] = obs[t].get["n"] if actions[t] != "none" else 0
-            appended["term"] = (
-                {k: v for k, v in obs["term"].get.items() if v}
-                if actions["term"] != "none" else {}
-            )
             return {
                 "round": rnd,
                 "parent_round": self._wparent,
@@ -1032,21 +1082,18 @@ class CrawlEngine:
         from concurrent.futures import ThreadPoolExecutor
 
         # fold any finished commits first (free), then block ONLY if the
-        # pipeline is already at depth — the round-3 engine joined the
-        # previous commit unconditionally here, which made the driver's
-        # round-end wait the measured quiet-box scaling limiter
+        # pipeline is already at depth — an unconditional join here makes
+        # the driver's round-end wait the scaling limiter
         self._drain_done_checkpoints()
-        depth = max(int(self.cfg.ckpt_inflight), 1)
+        depth = _CKPT_INFLIGHT
         keep = self.cfg.keep_rounds
         if keep is not None and int(keep) < depth + 2:
             # tight retention: a lazily-applied driver view could outlive a
-            # pruned round dir, so degrade to the round-3 depth-1 behavior
-            # (join-before-submit) instead of widening the prune window past
-            # what the user asked to keep
+            # pruned round dir, so degrade to depth 1 (join-before-submit)
+            # instead of widening the prune window past what the user asked
+            # to keep
             depth = 1
-        while len(self._pending_ckpts) >= depth:
-            with self._timed("ckpt_join"):
-                self._apply_commit(self._pending_ckpts.popleft().result())
+        self._join_pending_checkpoint(depth)
         if self._ckpt_pool is None:
             self._ckpt_pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="gms-ckpt"
@@ -1085,15 +1132,16 @@ class CrawlEngine:
         while self._pending_ckpts and self._pending_ckpts[0].done():
             self._apply_commit(self._pending_ckpts.popleft().result())
 
-    def _join_pending_checkpoint(self) -> None:
-        """Block until every in-flight commit is folded (in commit order);
-        re-raises write errors.  The sync points — round-0 seed, fixpoint,
-        finalize, resume-time rebuilds — all funnel through here, so lazy
-        applies can never be observed by a durable-state consumer."""
-        if not self._pending_ckpts:
+    def _join_pending_checkpoint(self, depth: int = 1) -> None:
+        """Block until fewer than ``depth`` commits are in flight (by
+        default: all of them), folding each in commit order; re-raises write
+        errors.  The sync points — round-0 seed, fixpoint, finalize,
+        resume-time rebuilds — join fully here, so lazy applies can never be
+        observed by a durable-state consumer."""
+        if len(self._pending_ckpts) < depth:
             return
         with self._timed("ckpt_join"):
-            while self._pending_ckpts:
+            while len(self._pending_ckpts) >= depth:
                 self._apply_commit(self._pending_ckpts.popleft().result())
 
     def _checkpoint(self) -> None:
@@ -1163,7 +1211,7 @@ class CrawlEngine:
         if eng.cfg.robots:
             # robots rules may differ from the run that wrote this snapshot
             # (admission-time stamping alone would let already-persisted NEW
-            # jobs slip past newly added rules — round-3 ADVICE).  Re-stamp
+            # jobs slip past newly added rules).  Re-stamp
             # the restored LIVE frontier: deterministic and idempotent (same
             # hash/host/bucket values recomputed; only NEW rows can flip).
             # Freshly denied rows retire immediately — and, because they are
@@ -1172,8 +1220,6 @@ class CrawlEngine:
             stamped = eng._stamp_url_cols(restored)
             restored = stamped.filter(F.col("status") == STATUS_NEW)
             denied = stamped.filter(F.col("status") != STATUS_NEW)
-        eng._frontier = restored
-        eng._live_parquet_rooted = True
         # terminal history comes from the manifest's term chain.  Chain dirs
         # are immutable but PRUNABLE when keep_rounds retention is active, so
         # that configuration copies the restored segments into block-manager
@@ -1189,11 +1235,13 @@ class CrawlEngine:
                 return df
             return eng._ckpt(df.coalesce(n))
 
-        eng._frontier_done = [_root(store.read("term", at))]
-        eng._pending_term = None
-        eng._term_lazy = []
-        eng._term_lazy_rows = 0
-        eng._term_since_durable = []
+        eng._root_state(
+            restored, _root(store.read("term", at)),
+            [_root(store.read("seen", at))], store.read("results", at),
+            {t: list(p) for t, p in manifest["chain"].items()},
+            manifest["totals"],
+        )
+        eng._live_parquet_rooted = True
         if denied is not None:
             dseg = eng._ckpt(denied.coalesce(n))
             eng._frontier_done.append(dseg)
@@ -1205,14 +1253,6 @@ class CrawlEngine:
                 eng._ckpt(eng._frontier.coalesce(n))
             )
             eng._live_parquet_rooted = False
-        eng._seen_segs = [_root(store.read("seen", at))]
-        eng._seen_since_durable = []
-        eng._rebuild_seen_view()
-        eng._results_base = store.read("results", at)
-        eng._results_new = []
-        eng._rebuild_results_view()
-        eng._log = {t: list(p) for t, p in manifest["chain"].items()}
-        eng._totals = manifest["totals"]
         eng._durable_round = eng.round
         bloom = store.blob(at, "bloom.bin") if manifest.get("bloom") else None
         if bloom is not None:
@@ -1235,56 +1275,71 @@ class CrawlEngine:
 
     # ---------------- round ---------------------------------------------------
 
-    def _claim(self) -> tuple[DataFrame, DataFrame]:
-        """Select this round's jobs.  Returns (claimed, claim_eligible_new).
-        Robots-denied jobs never reach here — they are stamped terminally
-        FAILED at admission (``_stamp_url_cols``), so the per-round claim is
-        a pure status filter + politeness window with no joins."""
-        new = self._frontier.filter(F.col("status") == STATUS_NEW)
-
-        if self.cfg.host_budget is None:
-            return new, new
-
-        # politeness: exact per-host budget B distributed over S salt shards
-        # (shard s gets B//S plus one of the B%S remainder units); rank
-        # windows are per (host, salt) so one hot host never serializes into
-        # a single task.  The remainder units ROTATE by round number: with
-        # B < S a fixed assignment would give some shards a permanent budget
-        # of zero and starve their jobs forever (caught by
-        # tests/test_politeness.py).
-        b, s = self.cfg.host_budget, self.cfg.politeness_salts
-        w = Window.partitionBy("host", "politeness_bucket").orderBy(
-            "priority", "created_path", "job_id"
-        )
-        rotated = F.pmod(
-            F.col("politeness_bucket") + F.lit(int(self.round)), F.lit(s)
-        )
-        shard_budget = F.lit(b // s) + (rotated < F.lit(b % s)).cast("int")
-        ranked = new.withColumn("_rk", F.row_number().over(w))
-        claimed = ranked.filter(F.col("_rk") <= shard_budget).drop("_rk")
-        return claimed, new
-
     def run_round(self) -> dict:
         """Execute one round; returns per-round stats.
 
-        One Python pass per round: the claimed jobs join the pages table
-        (broadcast of the claim when it is budget-bounded small, shuffle
-        otherwise — chosen from the known claim count) and a single
-        kind-dispatched pandas UDF processes every fetched page.  The html
-        column dies inside that stage: only the compact dispatch output is
-        materialized, so executor/driver memory scales with results, never
-        with page bodies."""
+        The round is a fixed sequence of bulk phases, each a method that
+        returns what the next one reads: claim → fetch + dispatch →
+        review chains → admission → children + results → retire.  One
+        Python pass per round: a single kind-dispatched pandas UDF processes
+        every fetched page, and the html column dies inside that stage, so
+        executor/driver memory scales with results, never with page
+        bodies."""
         # fold any FINISHED overlapped durable writes (non-blocking): surfaces
         # their write errors, advances _durable_round, re-roots results.  A
         # still-running commit keeps running — the driver blocks only when
-        # the in-flight pipeline is full (cfg.ckpt_inflight) or at sync
-        # points (seed/fixpoint/finalize).
+        # the in-flight pipeline is full or at sync points
+        # (seed/fixpoint/finalize).
         self._drain_done_checkpoints()
         self.round += 1
-        cfg = self.cfg
-        claimed, eligible = self._claim()
+        claimed, counts = self._claim_round()
+        if claimed is None:
+            return counts
+        n_claimed = counts["n"]
+        processed, processed_all, n_next, n_links = self._fetch_dispatch(
+            claimed, counts
+        )
+        processed_emit, reviews_src, chain_records, hops, hops_rows = (
+            self._follow_chains(processed, processed_all, n_next)
+        )
+        admitted, new_seen = self._admit(processed_all, n_links)
+        new_children, term_children, results = self._emit(
+            admitted, processed_emit, processed_all, reviews_src, chain_records
+        )
+        self._retire(
+            processed_all, new_children, term_children, new_seen, results,
+            n_claimed, hops_rows,
+        )
+        return {"round": self.round, "claimed": n_claimed, "chain_hops": hops, "done": False}
+
+    def _claim_round(self) -> tuple[DataFrame | None, dict]:
+        """Claim phase: the materialized claim and its observed counts, or
+        ``(None, stats)`` when nothing was claimed.  Robots-denied jobs
+        never reach here — they are stamped terminally FAILED at admission
+        (``_stamp_url_cols``), so the claim is a pure status filter +
+        politeness window with no joins."""
+        new = self._frontier.filter(F.col("status") == STATUS_NEW)
+        claimed = new
+        if self.cfg.host_budget is not None:
+            # politeness: exact per-host budget B distributed over S salt
+            # shards (shard s gets B//S plus one of the B%S remainder units);
+            # rank windows are per (host, salt) so one hot host never
+            # serializes into a single task.  The remainder units ROTATE by
+            # round number: with B < S a fixed assignment would give some
+            # shards a permanent budget of zero and starve their jobs forever
+            # (caught by tests/test_politeness.py).
+            b, s = self.cfg.host_budget, self.cfg.politeness_salts
+            w = Window.partitionBy("host", "politeness_bucket").orderBy(
+                "priority", "created_path", "job_id"
+            )
+            rotated = F.pmod(
+                F.col("politeness_bucket") + F.lit(int(self.round)), F.lit(s)
+            )
+            shard_budget = F.lit(b // s) + (rotated < F.lit(b % s)).cast("int")
+            ranked = new.withColumn("_rk", F.row_number().over(w))
+            claimed = ranked.filter(F.col("_rk") <= shard_budget).drop("_rk")
         # claim counts ride the materialization job as observed metrics — no
-        # separate count() action per round (round-3 driver-latency work)
+        # separate count() action per round
         obs = Observation()
         claimed = claimed.observe(
             obs,
@@ -1299,31 +1354,82 @@ class CrawlEngine:
             # multiset fingerprint of the claimed job ids: compared against
             # the same pair observed on the dispatch output to detect
             # duplicate captures / fetch misses without a second driver
-            # action (round-3 VERDICT #4).  decimal(38,0) so the ANSI sum
-            # can never overflow (|xxhash64| < 1e19; 1e19 rows fit in 38
-            # digits).
+            # action.  decimal(38,0) so the ANSI sum can never overflow
+            # (|xxhash64| < 1e19; 1e19 rows fit in 38 digits).
             F.sum(F.xxhash64("job_id").cast("decimal(38,0)")).alias("h"),
         )
         self._capture_plan("claim", claimed)
         with self._timed("claim"):
             claimed = self._ckpt(claimed.coalesce(self._state_partitions()))
-            _c = obs.get
-        n_claimed, n_payload, claim_h = _c["n"], _c["n_payload"], _c["h"]
-        n_payload_email = _c["n_payload_email"]
-        if n_claimed == 0:
+            counts = obs.get
+        if counts["n"] == 0:
             # Empty claim ≠ fixpoint when budget-remainder rotation is live:
             # with host_budget < politeness_salts a round's rotation can meet
             # only empty shards while other shards still hold NEW jobs
             # (starvation regression caught by tests/test_politeness.py).
             # Consume the round number (advances the rotation) unless no
             # claim-eligible NEW work remains at all.
-            if self.cfg.host_budget is not None and eligible.count() > 0:
-                return {"claimed": 0, "done": False, "rotation_miss": True}
+            if self.cfg.host_budget is not None and new.count() > 0:
+                return None, {"claimed": 0, "done": False, "rotation_miss": True}
             self.round -= 1
-            return {"claimed": 0, "done": True}
-        self._cum_claimed += n_claimed
+            return None, {"claimed": 0, "done": True}
+        self._cum_claimed += counts["n"]
+        return claimed, counts
 
-        # Fetch + dispatch, shaped to keep html out of every shuffle:
+    def _fetch_pages(self) -> DataFrame:
+        # warc_ts rides along so multiple captures of one url can be resolved
+        # to the latest one after dispatch (deduping the full pages table per
+        # round would rescan/shuffle it; deduping the claim-sized dispatch
+        # output is ~free and only paid when duplicates actually exist)
+        if "warc_ts" in self.pages.columns:
+            return self.pages.select("url", "html", "warc_ts")
+        return self.pages.select(
+            "url", "html", F.lit(None).cast("timestamp").alias("warc_ts")
+        )
+
+    @staticmethod
+    def _bcast(df: DataFrame, small: bool) -> DataFrame:
+        # small claims broadcast (pages side untouched, zero shuffle); large
+        # claims hint a SHUFFLED-HASH build on the claim side: with a
+        # url-bucketed pages table (the Iceberg bucket(url) analog —
+        # sources/corpus.py:write_bucketed_pages) the scan already satisfies
+        # the join's distribution, so ONLY the slim claim keys shuffle and
+        # html stays inside the scan stage, while the driver never serially
+        # builds a 10^6-row broadcast hash (a fixed cost identical at every
+        # cluster size).  SHJ over SMJ also skips sorting multi-KB page rows
+        # when pages must shuffle (plain-parquet fallback).
+        return F.broadcast(df) if small else df.hint("shuffle_hash")
+
+    def _dispatch(self, df: DataFrame) -> DataFrame:
+        """The kind-dispatched extraction UDF over fetched rows, as ``p``."""
+        # inputs differ in what they fetched: html for search/place/reviews
+        # pages, a scan-side email harvest for the payload hop (the html
+        # never leaves the pages scan there)
+        ep = (
+            F.col("emails_pre")
+            if "emails_pre" in df.columns
+            else F.lit(None).cast("array<string>")
+        )
+        html_c = (
+            F.col("html")
+            if "html" in df.columns
+            else F.lit(None).cast("binary")
+        )
+        now = F.lit(self.cfg.now_micros).cast("long")
+        return df.withColumn(
+            "p",
+            dispatch_udf(
+                "kind", html_c, "payload", "seed_id", "url", now,
+                F.lit(self.cfg.extra_reviews), ep,
+            ),
+        ).drop("html", "emails_pre")
+
+    def _fetch_dispatch(self, claimed: DataFrame, counts: dict):
+        """Fetch + dispatch phase.  Returns (processed, processed_all,
+        n_next, n_links): the claim's dispatch output, the same plus the
+        recovered fetch misses, and the observed review-continuation and
+        SERP-link counts."""
+        # Shaped to keep html out of every shuffle:
         #
         #   payload-free claims (search/place/reviews): broadcast the SLIM
         #   claim columns straight into the pages scan and run the dispatch
@@ -1332,64 +1438,21 @@ class CrawlEngine:
         #
         #   payload-bearing claims (email jobs carry multi-KB parked
         #   entries): broadcast only (job_id, url) keys (broadcasting
-        #   payloads measurably thrashed every scan task), then shuffle-join
-        #   the fetched html back to the claim rows — both sides claim-sized.
+        #   payloads measurably thrashed every scan task), then join the
+        #   claim-sized fetch result back to the claim rows.
         #
-        # Fetch misses are recovered afterwards with an anti-join and a lazy
+        # Fetch misses are recovered afterwards with an anti-join and a
         # dispatch over html-null rows (≙ the fetch-error path: jobs still
         # Process — job.go:114-116, place.go:68-70, emailjob.go:100-102).
-        # warc_ts rides along so multiple captures of one url can be resolved
-        # to the latest one after dispatch (deduping the full pages table per
-        # round would rescan/shuffle it; deduping the claim-sized dispatch
-        # output is ~free and only paid when duplicates actually exist).
-        if "warc_ts" in self.pages.columns:
-            pages = self.pages.select("url", "html", "warc_ts")
-        else:
-            pages = self.pages.select(
-                "url", "html", F.lit(None).cast("timestamp").alias("warc_ts")
-            )
-        now = F.lit(cfg.now_micros).cast("long")
-        xr = F.lit(cfg.extra_reviews)
+        cfg = self.cfg
+        n_claimed, n_payload = counts["n"], counts["n_payload"]
+        n_payload_email = counts["n_payload_email"]
+        pages = self._fetch_pages()
         slim_cols = [
             "job_id", "kind", "url", "seed_id", "created_path",
             "depth", "max_depth", "extract_email", "lang",
         ]
         small = n_claimed <= cfg.broadcast_claim_rows
-
-        def bcast(df):
-            # small claims broadcast (pages side untouched, zero shuffle);
-            # large claims hint a SHUFFLED-HASH build on the claim side:
-            # with a url-bucketed pages table (the Iceberg bucket(url)
-            # analog — sources/corpus.py:write_bucketed_pages) the scan
-            # already satisfies the join's distribution, so ONLY the slim
-            # claim keys shuffle and html stays inside the scan stage, while
-            # the driver never serially builds a 10^6-row broadcast hash
-            # (a fixed cost identical at every cluster size).  SHJ over SMJ
-            # also skips sorting multi-KB page rows when pages must shuffle
-            # (plain-parquet fallback).
-            return F.broadcast(df) if small else df.hint("shuffle_hash")
-
-        def dispatch(df):
-            # branches differ in what they fetched: html for search/place/
-            # reviews pages, a scan-side email harvest for the payload hop
-            # (the html never leaves the pages scan there)
-            ep = (
-                F.col("emails_pre")
-                if "emails_pre" in df.columns
-                else F.lit(None).cast("array<string>")
-            )
-            html_c = (
-                F.col("html")
-                if "html" in df.columns
-                else F.lit(None).cast("binary")
-            )
-            return df.withColumn(
-                "p",
-                dispatch_udf(
-                    "kind", html_c, "payload", "seed_id", "url", now, xr, ep
-                ),
-            ).drop("html", "emails_pre")
-
         claim_np = claimed.filter(F.col("payload").isNull()).select(
             *slim_cols, F.lit(None).cast("string").alias("payload")
         )
@@ -1401,18 +1464,19 @@ class CrawlEngine:
         # pages scan, and rounds are usually kind-homogeneous
         parts = []
         if n_claimed - n_payload > 0:
-            parts.append(dispatch(pages.join(bcast(claim_np), "url", "inner")))
+            parts.append(
+                self._dispatch(pages.join(self._bcast(claim_np, small), "url", "inner"))
+            )
         if n_payload_email > 0:
             # email hop: harvest the emails INSIDE the pages scan (the only
             # thing the finalize needs from the page) and join the tiny
             # (job_id, emails) result back to the payload claim — the page
             # body dies in the scan and the multi-KB parked entries never
-            # shuffle.  The round-4 phase attribution showed the previous
-            # shape (shuffle-joining html against payloads) as a GB-class
-            # per-round exchange at headline scale.
+            # shuffle (shuffle-joining html against payloads is a GB-class
+            # per-round exchange at headline scale).
             claim_e = claim_p.filter(F.col("kind") == KIND_EMAIL)
             got_e = pages.join(
-                bcast(claim_e.select("job_id", "url")), "url", "inner"
+                self._bcast(claim_e.select("job_id", "url"), small), "url", "inner"
             ).select(
                 "job_id",
                 harvest_emails_udf("html").alias("emails_pre"),
@@ -1420,21 +1484,18 @@ class CrawlEngine:
             )
             if n_payload_email <= cfg.broadcast_claim_rows:
                 got_e = F.broadcast(got_e)
-            parts.append(dispatch(claim_e.join(got_e, "job_id", "inner")))
+            parts.append(self._dispatch(claim_e.join(got_e, "job_id", "inner")))
         if n_payload - n_payload_email > 0:
             # reviews continuations claimed from the frontier (hop-cap
             # leftovers / resumed chains): the RPC page body must reach the
             # accumulator, so this branch keeps the claim-sized html join
             claim_r = claim_p.filter(F.col("kind") != KIND_EMAIL)
             got = pages.join(
-                bcast(claim_r.select("job_id", "url")), "url", "inner"
+                self._bcast(claim_r.select("job_id", "url"), small), "url", "inner"
             ).select("job_id", "html", "warc_ts")
-            parts.append(dispatch(claim_r.join(got, "job_id", "inner")))
-        processed = parts[0]
-        for extra in parts[1:]:
-            processed = processed.unionByName(extra.select(processed.columns))
-        # Dup/miss detection rides the materialization as observed metrics
-        # (round-3 VERDICT #4 — previously a blocking agg ran every round):
+            parts.append(self._dispatch(claim_r.join(got, "job_id", "inner")))
+        processed = _union_all(parts)
+        # Dup/miss detection rides the materialization as observed metrics:
         # pages.url is NOT assumed unique (warc_ts makes multiple captures
         # legal), so the dispatch output's (count, Σ xxhash64(job_id))
         # fingerprint is compared against the claim-side pair.  Equality ⇒
@@ -1449,9 +1510,9 @@ class CrawlEngine:
             F.sum(F.xxhash64("job_id").cast("decimal(38,0)")).alias("h"),
             F.count(F.col("p.reviews_next.url")).alias("n_next"),
             # admitted-candidate volume (SERP feed links): the seen-probe
-            # strategy below keys off THIS, not the claim size — a tiny
-            # search claim can fan out to 10^2× candidates, and broadcasting
-            # those is a driver-serial build the claim count cannot predict
+            # strategy keys off THIS, not the claim size — a tiny search
+            # claim can fan out to 10^2× candidates, and broadcasting those
+            # is a driver-serial build the claim count cannot predict
             F.sum(
                 F.when(
                     F.col("p.links").isNotNull(), F.size("p.links")
@@ -1463,49 +1524,38 @@ class CrawlEngine:
             f"dispatch/round{self.round:02d}"
         ):
             processed = self._ckpt(processed)
-            _pm = pobs.get
-        n_links = int(_pm["n_links"] or 0)
+            pm = pobs.get
+        n_links = int(pm["n_links"] or 0)
         self._cum_admitted += n_links
-        if _pm["n"] == n_claimed and (_pm["h"] or 0) == (claim_h or 0):
-            nd, n_next = n_claimed, _pm["n_next"]
+        if pm["n"] == n_claimed and (pm["h"] or 0) == (counts["h"] or 0):
+            nd, n_next = n_claimed, pm["n_next"]
         else:
-            _p = processed.agg(
+            agg = processed.agg(
                 F.count("*").alias("n"), F.countDistinct("job_id").alias("nd")
             ).head()
-            nd = _p["nd"]
-            if nd < _p["n"]:
-                # deterministic tiebreaker (round-3 ADVICE): two captures
-                # with identical warc_ts must resolve identically across
-                # runs — order ties by a hash of the dispatch output, never
-                # by partition luck
-                w_cap = Window.partitionBy("job_id").orderBy(
-                    F.col("warc_ts").desc_nulls_last(), F.xxhash64("p").asc()
-                )
-                processed = self._ckpt(
-                    processed.withColumn("_rn", F.row_number().over(w_cap))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
+            nd = agg["nd"]
+            if nd < agg["n"]:
+                # deterministic tiebreaker: two captures with identical
+                # warc_ts must resolve identically across runs — order ties
+                # by a hash of the dispatch output, never by partition luck
+                processed = self._ckpt(_latest_capture(processed, "p"))
             n_next = processed.agg(
                 F.count(F.col("p.reviews_next.url")).alias("nn")
             ).head()["nn"]
         processed = processed.drop("warc_ts")
-        n_missing = n_claimed - nd
-        if n_missing > 0:
-            # Materialized ONCE (round-4 snapshot-write attribution): this
-            # branch roots processed_all, which every round-end state
-            # materialization re-evaluates (frontier persist, term flush,
-            # results delta write).  Left lazy, each of those re-ran the
-            # claim-sized anti-join — whose driver-built broadcast hash is a
-            # SERIAL cost that repeats identically at every parallelism
-            # level (measured 1.3x scaling on the commit writes at 2.1M
-            # pages).  The miss set itself is small (null-html dispatch
-            # short-circuits), so one eager claim-bounded job here buys
-            # block-backed reads everywhere downstream.
+        if n_claimed - nd > 0:
+            # Materialized ONCE: this branch roots processed_all, which every
+            # round-end state materialization re-evaluates (frontier persist,
+            # term flush, results delta write).  Left lazy, each of those
+            # would re-run the claim-sized anti-join, whose driver-built
+            # broadcast hash is a SERIAL cost that repeats identically at
+            # every parallelism level.  The miss set itself is small
+            # (null-html dispatch short-circuits), so one eager claim-bounded
+            # job here buys block-backed reads everywhere downstream.
             slim_all = claim_np.unionByName(claim_p)
             with self._timed("miss_recover"):
                 missing = self._ckpt(
-                    dispatch(
+                    self._dispatch(
                         slim_all.join(
                             processed.select("job_id"), "job_id", "left_anti"
                         ).withColumn("html", F.lit(None).cast("binary"))
@@ -1515,156 +1565,124 @@ class CrawlEngine:
             processed_all = processed.unionByName(missing.select(processed.columns))
         else:
             processed_all = processed
+        return processed, processed_all, n_next, n_links
 
-        # --- intra-round review-RPC chain following ---------------------------
+    def _follow_chains(self, processed: DataFrame, processed_all: DataFrame, n_next: int):
+        """Review-chain phase.  Returns (processed_emit, reviews_src,
+        chain_records, hops, hops_rows): the round's dispatch output plus
+        every hop's, the rows whose continuations become frontier jobs, the
+        hops' frontier-shaped terminal rows, and the hop and hop-row
+        counts."""
         # The reference walks a place's review RPC pages inside the claimed
         # job (gmaps/reviews.go:77-97 pagination loop, ≤50 pages); chain
         # continuations need no admission/dedup/claim/commit — only fetch +
-        # dispatch.  Round 3 modeled each hop as a NEW frontier job, which
-        # charged one GLOBAL round per chain hop (depth-sequential rounds,
-        # round-3 VERDICT #2).  Round 4 follows the chain to exhaustion
-        # WITHIN the round: an inner fetch+dispatch loop drains the chain
-        # frontier, then admission/status/commit run once.  Followed hops are
-        # still recorded in the frontier as terminal rows (audit trail +
-        # counters parity); politeness budget is charged to the claimed
+        # dispatch — so an inner loop drains the chain frontier WITHIN the
+        # round instead of charging one global round per hop.  Followed hops
+        # are still recorded in the frontier as terminal rows (audit trail +
+        # counters parity); the politeness budget is charged to the claimed
         # parent job, exactly as the reference's pagination occupies its
-        # job's concurrency slot.  Robots gating still applies per hop
-        # (denied continuations are recorded FAILED, never fetched — same
-        # outcome as round 3's admission-time stamping).
+        # job's concurrency slot.  Robots gating applies per hop (denied
+        # continuations are recorded FAILED, never fetched).
+        cfg = self.cfg
         chain_parts: list[DataFrame] = []       # dispatch outputs (emission source)
         chain_records: list[DataFrame] = []     # frontier-shaped terminal rows
         chain_src = processed                   # hop-1 continuations come from the claim's dispatch
-        hops = 0
-        hops_rows = 0
-        _chain_t0 = time.perf_counter() if self.cfg.timing else 0.0
-        while n_next > 0 and hops < _CHAIN_MAX_HOPS:
-            hops += 1
-            claim = chain_src.filter(F.col("p.reviews_next.url").isNotNull()).select(
-                _jid(
-                    F.lit(KIND_REVIEWS), F.col("p.reviews_next.url"), F.col("job_id")
-                ).alias("job_id"),
-                F.col("job_id").alias("parent_id"),
-                F.col("seed_id"),
-                F.lit(KIND_REVIEWS).alias("kind"),
-                F.col("p.reviews_next.url").alias("url"),
-                F.concat_ws(".", F.col("created_path"), F.lit("r00000")).alias("created_path"),
-                F.lit(PRIORITY_MEDIUM).alias("priority"),
-                F.col("depth"),
-                F.col("max_depth"),
-                F.lit(0).alias("retries"),
-                F.lit(3).alias("max_retries"),
-                F.lit(STATUS_NEW).alias("status"),
-                F.lit(None).cast("int").alias("round_claimed"),
-                F.col("extract_email"),
-                F.col("lang"),
-                F.col("p.reviews_next.payload").alias("payload"),
-            )
-            stamped = self._stamp_url_cols(claim)
-            if cfg.robots:  # without rules `denied` is provably empty — do
-                # not grow the frontier-union plan by an empty branch per hop
-                chain_records.append(stamped.filter(F.col("status") != STATUS_NEW))
-                live = stamped.filter(F.col("status") == STATUS_NEW)
-            else:
-                live = stamped
-            # fetch: broadcast KEYS only (chain payloads are multi-KB review
-            # accumulators — never broadcast), shuffle-join html back; the
-            # html column is born in the scan and dies in this hop's
-            # dispatch.  Misses keep a null-html row via the left join
-            # (dispatch marks them failed, as the reference's fetch-error
-            # path Processes).  Dup captures (multiple warc_ts per url) are
-            # DETECTED from the hop's observed row count and only then paid
-            # for: the resolving window shuffles claim-sized html, so the
-            # dup-free common case must not run it every hop (same
-            # detect-then-diagnose shape as the main fetch above).  With
-            # robots rules live the pre-fetch live-count is unknown without
-            # an action, so that rare configuration keeps the deterministic
-            # window unconditionally.
-            # Chain working set (round-4 VERDICT #4 — the per-hop sequential
-            # fetch joins were the chain-corpus scaling tail): every
-            # continuation URL is a listugcposts RPC page by construction
-            # (build_review_rpc_url is the only producer of reviews_next.url,
-            # operators/extractors.py:302-314,330-337), so from the second
-            # hop onward the fetch probes a ONCE-materialized review-page
-            # subset instead of re-scanning the full pages table.  A 50-hop
-            # chain round drops from 50 full scans to 2 full scans (hop 1 +
-            # the subset build) + 49 block-manager probes; at 10^10 URLs the
-            # subset is the chain phase's hot working set and the same
-            # persist-the-probe-side discipline a real cluster wants.  Built
-            # at hop 2 so single-hop chains never pay the materialization;
-            # reused across every later round (pages are immutable).
-            if self._chain_pages is None and hops >= 2:
-                with self._timed("chain_pages_build"):
-                    self._chain_pages = self._ckpt(
-                        pages.filter(
-                            F.col("url").startswith(_REVIEW_RPC_PREFIX)
+        hops = hops_rows = 0
+        with self._timed("chains") if n_next else nullcontext():
+            pages = self._fetch_pages()
+            while n_next > 0 and hops < _CHAIN_MAX_HOPS:
+                hops += 1
+                stamped = self._stamp_url_cols(_review_continuations(chain_src))
+                if cfg.robots:  # without rules `denied` is provably empty — do
+                    # not grow the frontier-union plan by an empty branch per hop
+                    chain_records.append(stamped.filter(F.col("status") != STATUS_NEW))
+                    live = stamped.filter(F.col("status") == STATUS_NEW)
+                else:
+                    live = stamped
+                # fetch: broadcast KEYS only (chain payloads are multi-KB
+                # review accumulators — never broadcast), join html back; the
+                # html column is born in the scan and dies in this hop's
+                # dispatch.  Misses keep a null-html row via the left join
+                # (dispatch marks them failed, as the reference's fetch-error
+                # path Processes).  Dup captures (multiple warc_ts per url)
+                # are DETECTED from the hop's observed row count and only
+                # then paid for: the resolving window shuffles claim-sized
+                # html, so the dup-free common case must not run it every
+                # hop.  With robots rules live the pre-fetch live-count is
+                # unknown without an action, so that configuration keeps the
+                # deterministic window unconditionally.
+                # Chain working set: every continuation URL is a
+                # listugcposts RPC page by construction (build_review_rpc_url
+                # is the only producer of reviews_next.url,
+                # operators/extractors.py:302-314,330-337), so from the
+                # second hop onward the fetch probes a ONCE-materialized
+                # review-page subset instead of re-scanning the full pages
+                # table: a 50-hop chain round costs 2 full scans (hop 1 + the
+                # subset build) + 49 block-manager probes.  Built at hop 2 so
+                # single-hop chains never pay the materialization; reused
+                # across every later round (pages are immutable).
+                if self._chain_pages is None and hops >= 2:
+                    with self._timed("chain_pages_build"):
+                        self._chain_pages = self._ckpt(
+                            pages.filter(F.col("url").startswith(_REVIEW_RPC_PREFIX))
                         )
+                cpages = self._chain_pages if self._chain_pages is not None else pages
+                keys = live.select("job_id", "url")
+                got = cpages.join(
+                    F.broadcast(keys) if n_next <= cfg.broadcast_claim_rows else keys,
+                    "url", "inner",
+                ).select("job_id", "html", "warc_ts")
+                if cfg.robots:
+                    got = _latest_capture(got, "html")
+                cproc, cm = self._chain_hop(live, got)
+                if not cfg.robots and cm["n"] > n_next:
+                    # dup captures — redo the hop windowed
+                    cproc, cm = self._chain_hop(live, _latest_capture(got, "html"))
+                n_next = cm["n_next"]
+                self._cum_claimed += cm["n"]
+                hops_rows += cm["n"]
+                chain_parts.append(cproc)
+                chain_records.append(
+                    cproc.withColumn(
+                        "status", F.coalesce(F.col("p.new_status"), F.lit(STATUS_FAILED))
                     )
-            cpages = self._chain_pages if self._chain_pages is not None else pages
-            keys = live.select("job_id", "url")
-            got = cpages.join(
-                F.broadcast(keys) if n_next <= cfg.broadcast_claim_rows else keys,
-                "url", "inner",
-            ).select("job_id", "html", "warc_ts")
-            w_cap = Window.partitionBy("job_id").orderBy(
-                F.col("warc_ts").desc_nulls_last(), F.xxhash64("html").asc()
-            )
-
-            def _hop(got_df):
-                cobs = Observation()
-                cp = self._ckpt(
-                    dispatch(live.join(got_df, "job_id", "left"))
-                    .drop("warc_ts")
-                    .observe(
-                        cobs,
-                        F.count(F.lit(1)).alias("n"),
-                        F.count(F.col("p.reviews_next.url")).alias("n_next"),
-                    )
+                    .withColumn("round_claimed", F.lit(self.round))
+                    # done payloads are dead weight in a 10^10-row frontier —
+                    # drop them from the terminal record (the reference keeps
+                    # no completed-job payloads either)
+                    .withColumn("payload", F.lit(None).cast("string"))
+                    .drop("p")
                 )
-                return cp, cobs.get
-
-            def _dedup(got_df):
-                return (
-                    got_df.withColumn("_rn", F.row_number().over(w_cap))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-
-            n_hop = n_next  # rows in this hop's claim (= prev continuations)
-            if cfg.robots:
-                cproc, _cm = _hop(_dedup(got))
-            else:
-                cproc, _cm = _hop(got)
-                if _cm["n"] > n_hop:  # dup captures — redo the hop windowed
-                    cproc, _cm = _hop(_dedup(got))
-            n_next = _cm["n_next"]
-            self._cum_claimed += _cm["n"]
-            hops_rows += _cm["n"]
-            chain_parts.append(cproc)
-            chain_records.append(
-                cproc.withColumn(
-                    "status", F.coalesce(F.col("p.new_status"), F.lit(STATUS_FAILED))
-                )
-                .withColumn("round_claimed", F.lit(self.round))
-                # done payloads are dead weight in a 10^10-row frontier —
-                # drop them from the terminal record (the reference keeps no
-                # completed-job payloads either)
-                .withColumn("payload", F.lit(None).cast("string"))
-                .drop("p")
-            )
-            chain_src = cproc
+                chain_src = cproc
         # hop-cap leftovers (cycle guard) fall back to inter-round frontier
-        # jobs via the reviews_jobs block below; normally the loop drains.
+        # jobs (reviews jobs in _emit); normally the loop drains
         reviews_src = chain_parts[-1] if chain_parts else processed_all
-        processed_emit = processed_all
-        for cp in chain_parts:
-            processed_emit = processed_emit.unionByName(
-                cp.select(processed_all.columns)
+        processed_emit = _union_all(
+            [processed_all] + [cp.select(processed_all.columns) for cp in chain_parts]
+        )
+        return processed_emit, reviews_src, chain_records, hops, hops_rows
+
+    def _chain_hop(self, live: DataFrame, got: DataFrame):
+        # one hop's materialized dispatch output and its observed (n, n_next)
+        obs = Observation()
+        out = self._ckpt(
+            self._dispatch(live.join(got, "job_id", "left"))
+            .drop("warc_ts")
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.count(F.col("p.reviews_next.url")).alias("n_next"),
             )
+        )
+        return out, obs.get
 
-        if self.cfg.timing and hops:
-            self.phase_times["chains"] += time.perf_counter() - _chain_t0
-
-        # --- search: feed links → admission → place children -----------------
+    def _admit(self, processed_all: DataFrame, n_links: int):
+        """Admission phase: SERP feed links → (admitted children, their
+        seen-table rows)."""
+        # first-wins: within the round, the earliest (created_path, pos)
+        # occurrence wins (≙ sequential DOM iteration order across SERPs);
+        # then exact left-anti vs the seen table.
+        cfg = self.cfg
         search = processed_all.filter(F.col("kind") == KIND_SEARCH)
         place_children = search.filter(F.col("p.links").isNotNull()).select(
             F.col("job_id").alias("parent_id"),
@@ -1673,16 +1691,8 @@ class CrawlEngine:
             (~F.col("p.direct")).alias("dedup"),   # direct /maps/place/ URLs skip dedup (job.go:145-157)
             F.posexplode("p.links").alias("pos", "child_url"),
         )
-
-        # first-wins admission: within the round, the earliest
-        # (created_path, pos) occurrence wins (≙ sequential DOM iteration
-        # order across SERPs); then exact left-anti vs the seen table.
-        w_first = Window.partitionBy("child_url").orderBy("created_path", "pos")
-        dd = place_children.filter("dedup")
-        dd_first = (
-            dd.withColumn("_rn", F.row_number().over(w_first))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        dd_first = _first_wins(
+            place_children.filter("dedup"), "child_url", "created_path", "pos"
         )
 
         # Bloom pre-filter (optional): definite-new candidates skip the exact
@@ -1720,169 +1730,96 @@ class CrawlEngine:
             else confirmed_new.unionByName(definite_new)
         )
         admitted = admitted_new.unionByName(place_children.filter(~F.col("dedup")))
-
         new_seen = admitted_new.select(
             F.xxhash64("child_url").alias("url_hash"),
             F.col("child_url").alias("url"),
             F.col("seed_id").alias("admitting_parent"),
             F.lit(self.round).alias("round_admitted"),
         )
+        return admitted, new_seen
 
-        place_jobs = admitted.filter(F.col("depth") < F.col("max_depth")).select(
-            _jid(F.lit(KIND_PLACE), F.col("child_url"), F.col("parent_id")).alias("job_id"),
-            F.col("parent_id"),
-            F.col("seed_id"),
-            F.lit(KIND_PLACE).alias("kind"),
-            F.col("child_url").alias("url"),
-            F.concat_ws(
-                ".", F.col("created_path"), F.format_string("%06d", F.col("pos"))
-            ).alias("created_path"),
-            F.lit(PRIORITY_MEDIUM).alias("priority"),
-            (F.col("depth") + 1).alias("depth"),
-            F.col("max_depth"),
-            F.lit(0).alias("retries"),
-            F.lit(3).alias("max_retries"),
-            F.lit(STATUS_NEW).alias("status"),
-            F.lit(None).cast("int").alias("round_claimed"),
-            F.col("extract_email"),
-            F.col("lang"),
-            F.lit(None).cast("string").alias("payload"),
+    def _emit(self, admitted, processed_emit, processed_all, reviews_src, chain_records):
+        """Children + results phase.  Returns (new_children, term_children,
+        results): the round's live new jobs, the ones born terminal, and
+        its result rows."""
+        place_jobs = _frontier_jobs(
+            admitted.filter(F.col("depth") < F.col("max_depth")),
+            KIND_PLACE, key=F.col("child_url"), url=F.col("child_url"),
+            parent="parent_id", path=F.format_string("%06d", F.col("pos")),
+            priority=PRIORITY_MEDIUM, depth=F.col("depth") + 1, max_retries=3,
+            payload=F.lit(None).cast("string"),
         )
 
-        # --- place / finished review chains: results vs email hop ------------
-        # (a finished reviews chain emits exactly like a place job; the entry
-        # it carries already holds user_reviews_extended.  processed_emit =
-        # this round's dispatch output PLUS every intra-round chain hop.)
+        # place / finished review chains: results vs email hop (a finished
+        # reviews chain emits exactly like a place job; the entry it carries
+        # already holds user_reviews_extended)
         place = processed_emit.filter(
             F.col("kind").isin(KIND_PLACE, KIND_REVIEWS)
             & F.col("p.entry").isNotNull()
         )
         ok = place.filter(F.col("p.entry.error").isNull())
-        hop = F.lit(cfg.extract_email) & F.col("p.entry.email_eligible")
-        email_hop = ok.filter(hop)
-        emit_now = ok.filter(~hop)
-
-        results_now = emit_now.filter(F.col("p.entry.valid")).select(
-            "job_id",
-            F.col("p.entry.input_id").alias("input_id"),
-            F.col("url"),
-            *[
-                F.col(f"p.entry.{c}").alias(c)
-                for c in (
-                    "link", "cid", "title", "category", "categories",
-                    "address", "web_site", "phone", "plus_code",
-                    "review_count", "review_rating", "latitude",
-                    "longitude", "status", "place_id", "data_id",
-                )
-            ],
-            F.lit(None).cast("array<string>").alias("emails"),
-            F.col("p.entry.canonical_json").alias("canonical_json"),
-            F.lit(self.round).alias("round_emitted"),
+        hop = F.lit(self.cfg.extract_email) & F.col("p.entry.email_eligible")
+        results_now = _result_rows(
+            ok.filter(~hop).filter(F.col("p.entry.valid")), "p.entry",
+            F.lit(None).cast("array<string>"), self.round,
         )
-
         # email child carries its parked entry as the job payload
         # (≙ EmailExtractJob.Entry, gmaps/emailjob.go:32-41; the place result
-        # is suppressed: UsageInResults=false, place.go:124-138)
-        email_jobs = email_hop.select(
-            _jid(F.lit(KIND_EMAIL), F.col("p.entry.web_site"), F.col("job_id")).alias("job_id"),
-            F.col("job_id").alias("parent_id"),
-            F.col("seed_id"),
-            F.lit(KIND_EMAIL).alias("kind"),
-            F.col("p.entry.email_url").alias("url"),   # normalized (emailjob.go:37,153-176)
-            F.concat_ws(".", F.col("created_path"), F.lit("000000")).alias("created_path"),
-            F.lit(PRIORITY_HIGH).alias("priority"),
-            (F.col("depth") + 1).alias("depth"),
-            F.col("max_depth"),
-            F.lit(0).alias("retries"),
-            F.lit(0).alias("max_retries"),  # emailjob.go:29
-            F.lit(STATUS_NEW).alias("status"),
-            F.lit(None).cast("int").alias("round_claimed"),
-            F.col("extract_email"),
-            F.col("lang"),
-            F.col("p.entry.entry_json").alias("payload"),
+        # is suppressed: UsageInResults=false, place.go:124-138).  The url is
+        # normalized (emailjob.go:37,153-176); email jobs never retry
+        # (emailjob.go:29).
+        email_jobs = _frontier_jobs(
+            ok.filter(hop), KIND_EMAIL, key=F.col("p.entry.web_site"),
+            url=F.col("p.entry.email_url"), parent="job_id",
+            path=F.lit("000000"), priority=PRIORITY_HIGH,
+            depth=F.col("depth") + 1, max_retries=0,
+            payload=F.col("p.entry.entry_json"),
         )
+        # chains are followed to exhaustion intra-round; this only fires for
+        # leftovers past _CHAIN_MAX_HOPS (cycle guard): one frontier job per
+        # RPC page, its payload the accumulated reviews (gmaps/reviews.go:70-97)
+        reviews_jobs = _review_continuations(reviews_src)
 
-        # --- review-RPC chain continuations (hop-cap fallback only) ----------
-        # Chains are followed to exhaustion intra-round above; this block only
-        # fires for leftovers past _CHAIN_MAX_HOPS (cycle guard), falling back
-        # to round 3's one-frontier-job-per-RPC-page shape (payload carries
-        # the accumulated reviews, gmaps/reviews.go:70-97, page cap 50).
-        # Chain jobs keep the parent's depth: the page cap bounds them.
-        reviews_jobs = reviews_src.filter(
-            F.col("p.reviews_next.url").isNotNull()
-        ).select(
-            _jid(
-                F.lit(KIND_REVIEWS), F.col("p.reviews_next.url"), F.col("job_id")
-            ).alias("job_id"),
-            F.col("job_id").alias("parent_id"),
-            F.col("seed_id"),
-            F.lit(KIND_REVIEWS).alias("kind"),
-            F.col("p.reviews_next.url").alias("url"),
-            F.concat_ws(".", F.col("created_path"), F.lit("r00000")).alias("created_path"),
-            F.lit(PRIORITY_MEDIUM).alias("priority"),
-            F.col("depth"),
-            F.col("max_depth"),
-            F.lit(0).alias("retries"),
-            F.lit(3).alias("max_retries"),
-            F.lit(STATUS_NEW).alias("status"),
-            F.lit(None).cast("int").alias("round_claimed"),
-            F.col("extract_email"),
-            F.col("lang"),
-            F.col("p.reviews_next.payload").alias("payload"),
-        )
-
-        # --- email: finalized rows come straight from the dispatch output ----
+        # email: finalized rows come straight from the dispatch output
         email = processed_all.filter(F.col("kind") == KIND_EMAIL)
-        email_results = (
-            email.filter(F.col("p.email.valid") & F.col("payload").isNotNull())
-            .select(
-                "job_id",
-                F.col("p.email.input_id").alias("input_id"),
-                F.col("url"),
-                *[
-                    F.col(f"p.email.{c}").alias(c)
-                    for c in (
-                        "link", "cid", "title", "category", "categories",
-                        "address", "web_site", "phone", "plus_code",
-                        "review_count", "review_rating", "latitude",
-                        "longitude", "status", "place_id", "data_id",
-                        "emails", "canonical_json",
-                    )
-                ],
-                F.lit(self.round).alias("round_emitted"),
-            )
+        email_results = _result_rows(
+            email.filter(F.col("p.email.valid") & F.col("payload").isNotNull()),
+            "p.email", F.col("p.email.emails"), self.round,
         )
 
-        # --- status flips -----------------------------------------------------
+        new_children = self._stamp_url_cols(
+            _union_all([place_jobs, email_jobs, reviews_jobs])
+        )
+        # robots-denied children are born terminal (stamped FAILED at
+        # admission): they retire straight into this round's terminal
+        # segment and never touch the live set.  Intra-round chain hops
+        # enter the frontier as TERMINAL rows too (status done/failed,
+        # already robots-stamped), for counters/audit parity without
+        # charging a global round.
+        term_children = new_children.filter(F.col("status") != STATUS_NEW)
+        term_children = _union_all(
+            [term_children]
+            + [cr.select(term_children.columns) for cr in chain_records]
+        )
+        new_children = new_children.filter(F.col("status") == STATUS_NEW)
+        return new_children, term_children, results_now.unionByName(email_results)
+
+    def _retire(
+        self, processed_all, new_children, term_children, new_seen, results,
+        n_claimed: int, hops_rows: int,
+    ) -> None:
+        """Retire phase: status flips, the live/terminal split and the state
+        hand-off, then the round's materialization and durable commit."""
         # (robots denials never appear here: they are stamped terminally
         # FAILED at admission and are never claimed — see _stamp_url_cols)
         status_of_claimed = processed_all.select(
             "job_id",
             F.col("p.new_status").alias("new_status"),
         )
-
-        new_children = place_jobs.unionByName(
-            email_jobs.select(place_jobs.columns)
-        ).unionByName(reviews_jobs.select(place_jobs.columns))
-        new_children = self._stamp_url_cols(new_children)
-        # robots-denied children are born terminal (stamped FAILED at
-        # admission): they retire straight into this round's terminal
-        # segment and never touch the live set
-        term_children = new_children.filter(F.col("status") != STATUS_NEW)
-        new_children = new_children.filter(F.col("status") == STATUS_NEW)
-        # intra-round chain hops enter the frontier as TERMINAL rows (status
-        # done/failed, already robots-stamped): counters/audit parity with
-        # round 3's one-job-per-hop shape, without charging a global round
-        for cr in chain_records:
-            term_children = term_children.unionByName(
-                cr.select(term_children.columns)
-            )
-
         # Status flip with retry semantics (≙ scrapemate requeue up to
         # MaxRetries, gmaps/job.go:57): a failed job with retries left goes
         # back to NEW with retries+1 — on a static corpus the retry fails
-        # deterministically again, so outcomes equal the reference's; robots
-        # denials (in status_of_claimed via `denied`) are terminal.
+        # deterministically again, so outcomes equal the reference's.
         retryable = (
             (F.col("new_status") == STATUS_FAILED)
             & (F.col("retries") < F.col("max_retries"))
@@ -1914,24 +1851,14 @@ class CrawlEngine:
         # payloads are dead weight in a 10^10-row frontier — the terminal
         # record drops them (the reference keeps no completed-job payloads
         # either, and the audit columns all survive).
-        updated_frontier = updated_live.filter(
+        self._frontier = updated_live.filter(
             F.col("status") == STATUS_NEW
         ).unionByName(new_children)
-        term_delta = (
+        self._pending_term = (
             updated_live.filter(F.col("status") != STATUS_NEW)
             .withColumn("payload", F.lit(None).cast("string"))
             .unionByName(term_children)
         )
-
-        stats = {
-            "round": self.round,
-            "claimed": n_claimed,
-            "chain_hops": hops,
-            "done": False,
-        }
-
-        self._frontier = updated_frontier
-        self._pending_term = term_delta
         # upper-bound estimate for the flush heuristic: every claimed job
         # plus every chain-hop record can retire this round
         self._pending_term_rows = n_claimed + hops_rows
@@ -1942,13 +1869,13 @@ class CrawlEngine:
         # the next durable commit (it roots in this round's checkpointed
         # dispatch output)
         self._pending_seen = new_seen
-        if cfg.seen_bloom and self._bloom is not None:
+        if self.cfg.seen_bloom and self._bloom is not None:
             from ..operators.bloom import build_bloom
 
             self._bloom.merge(
                 build_bloom(new_seen.select("url"), "url", proto=self._bloom)
             )
-        self._results_new.append(results_now.unionByName(email_results))
+        self._results_new.append(results)
         self._rebuild_results_view()
         # in-memory materialization every round (claim windows + anti-joins
         # read these next round); the durable parquet snapshot is submitted
@@ -1956,7 +1883,6 @@ class CrawlEngine:
         self._persist_state()
         if self.round % max(self.cfg.checkpoint_every, 1) == 0:
             self._checkpoint_async()
-        return stats
 
     def run(self) -> dict:
         """Run rounds to fixpoint; returns final counters."""

@@ -17,6 +17,9 @@ that knows the workdir layout:
     .drop.<name>.<id>/       a dir being pruned (renamed aside first)
     WRITER                   the writer lease token
 
+``take_over()`` sweeps the ``.tmp.*`` and ``.drop.*`` dirs older writers
+left behind: it fences those writers out first.
+
 Commit protocol (≙ Iceberg's file-system catalog, which commits by one
 atomic rename of the next metadata version): ``commit`` stages every table,
 then the manifest, in a private temp dir, checks the lease and that the
@@ -372,6 +375,14 @@ class ParquetDeltaLogStore(SnapshotStore):
         tmp = self.workdir / f".WRITER.{token}"
         tmp.write_text(token)
         os.replace(tmp, self.workdir / "WRITER")
+        # every older writer is fenced out now, so what its crashed commits
+        # and prunes left behind can go: a staged commit is dropped through
+        # a rename aside, so a fenced writer's concurrent publish rename
+        # either lands whole before it or fails (ENOENT) after it
+        for stale in self.workdir.glob(".tmp.*"):
+            self._drop(stale)
+        for stale in self.workdir.glob(".drop.*"):
+            shutil.rmtree(stale, ignore_errors=True)
         return token
 
     # -- engine-facing (beyond the contract) --------------------------------
@@ -400,9 +411,10 @@ class ParquetDeltaLogStore(SnapshotStore):
         writes are filled by then — and it is written last.  After the
         lease check and the guard against an already-advanced commit point,
         one ``os.rename`` onto ``round=NNNN`` commits.  Any failure removes
-        only this attempt's temp dir; a lost race (lease moved, commit
-        point at or past ``at``, or the rename target already exists)
-        raises ConcurrentWriterError.  Returns the manifest."""
+        only this attempt's temp dir; a lost race (lease moved before or
+        during the commit, commit point at or past ``at``, or the rename
+        target already exists) raises ConcurrentWriterError.  Returns the
+        manifest."""
         self._check_lease(expected_token)
         rd = self._dir(at)
         tmp = self.workdir / f".tmp.{rd.name}.{uuid.uuid4().hex}"
@@ -441,8 +453,20 @@ class ParquetDeltaLogStore(SnapshotStore):
                     f"another writer committed {rd.name} first; refusing "
                     "to replace it"
                 ) from e
-        except BaseException:
+        except BaseException as e:
             shutil.rmtree(tmp, ignore_errors=True)
+            if (
+                isinstance(e, Exception)
+                and not isinstance(e, ConcurrentWriterError)
+                and expected_token is not None
+                and self.writer_token() != expected_token
+            ):
+                # e.g. a take_over() swept the staged dir: the lost lease is
+                # the cause, whatever the failed file operation says
+                raise ConcurrentWriterError(
+                    f"lost the writer lease on {self.workdir} while "
+                    f"committing {rd.name}"
+                ) from e
             raise
         return m
 

@@ -1,5 +1,6 @@
-"""Pipelined durable commits (round 4): cfg.ckpt_inflight > 1 lets commit
-N's write overlap commit N+1's capture and the following rounds' compute,
+"""Pipelined durable commits: up to ``crawl._CKPT_INFLIGHT`` (2) commits in
+flight let commit N's write overlap commit N+1's capture and the following
+rounds' compute,
 while commits still EXECUTE serially on the one writer thread (the manifest
 chain is ordered).  The driver folds finished records opportunistically and
 blocks only when the pipeline is full or at sync points.
@@ -15,6 +16,7 @@ import pathlib
 
 import pytest
 
+from google_maps_scraper_spark.plans import crawl as crawl_mod
 from google_maps_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
 from google_maps_scraper_spark.plans.store import ParquetDeltaLogStore
 from google_maps_scraper_spark.sources.corpus import corpus_to_spark, generate_corpus
@@ -49,18 +51,20 @@ def _result_set(eng):
     }
 
 
-def test_pipelined_commits_byte_identical(spark, pages_and_seeds, tmp_path_factory):
-    """inflight=2 (and deeper) must reproduce the serial engine exactly:
+def test_pipelined_commits_byte_identical(
+    spark, pages_and_seeds, tmp_path_factory, monkeypatch
+):
+    """Depth 2 (and deeper) must reproduce the serial engine exactly:
     same counters, same result bytes, and the SAME committed manifest chain
     round for round (parent links, chain legs, totals) — pipelining moves
     only WHEN the driver waits, never what gets written."""
     pages, seeds = pages_and_seeds
     runs = {}
     for depth in (1, 2, 4):
+        monkeypatch.setattr(crawl_mod, "_CKPT_INFLIGHT", depth)
         wd = str(tmp_path_factory.mktemp(f"pipe{depth}"))
         eng = CrawlEngine(
-            spark, pages, wd,
-            CrawlConfig(extract_email=True, now_micros=NOW, ckpt_inflight=depth),
+            spark, pages, wd, CrawlConfig(extract_email=True, now_micros=NOW)
         )
         eng.seed_from_queries(seeds)
         counters = eng.run()
@@ -88,7 +92,7 @@ def test_pipeline_overlap_actually_happens(spark, pages_and_seeds, tmp_path_fact
     wd = str(tmp_path_factory.mktemp("overlap"))
     eng = CrawlEngine(
         spark, pages, wd,
-        CrawlConfig(extract_email=False, now_micros=NOW, ckpt_inflight=2),
+        CrawlConfig(extract_email=False, now_micros=NOW),
     )
     inner = eng._write_snapshot_inner
     seen_depths = []
@@ -137,8 +141,7 @@ def test_tight_retention_degrades_to_serial(spark, pages_and_seeds, tmp_path_fac
     wd = str(tmp_path_factory.mktemp("tightkeep"))
     eng = CrawlEngine(
         spark, pages, wd,
-        CrawlConfig(extract_email=True, now_micros=NOW,
-                    ckpt_inflight=8, keep_rounds=2),
+        CrawlConfig(extract_email=True, now_micros=NOW, keep_rounds=2),
     )
     eng.seed_from_queries(seeds)
     depths = []
@@ -152,8 +155,7 @@ def test_tight_retention_degrades_to_serial(spark, pages_and_seeds, tmp_path_fac
 
     wd_ref = str(tmp_path_factory.mktemp("tightref"))
     ref = CrawlEngine(
-        spark, pages, wd_ref,
-        CrawlConfig(extract_email=True, now_micros=NOW, keep_rounds=2),
+        spark, pages, wd_ref, CrawlConfig(extract_email=True, now_micros=NOW)
     )
     ref.seed_from_queries(seeds)
     ref.run()
@@ -170,7 +172,7 @@ def test_failed_commit_is_fail_stop(spark, pages_and_seeds, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("failstop"))
     eng = CrawlEngine(
         spark, pages, wd,
-        CrawlConfig(extract_email=True, now_micros=NOW, ckpt_inflight=2),
+        CrawlConfig(extract_email=True, now_micros=NOW),
     )
     inner = eng._write_snapshot_inner
 
@@ -191,18 +193,20 @@ def test_failed_commit_is_fail_stop(spark, pages_and_seeds, tmp_path_factory):
     # and the pre-failure store is still a valid resume point
     resumed = CrawlEngine.resume(
         spark, pages, wd,
-        CrawlConfig(extract_email=True, now_micros=NOW, ckpt_inflight=2),
+        CrawlConfig(extract_email=True, now_micros=NOW),
     )
     assert resumed.round == latest
 
 
-def test_resume_mid_pipeline_crash(spark, pages_and_seeds, tmp_path_factory):
+def test_resume_mid_pipeline_crash(
+    spark, pages_and_seeds, tmp_path_factory, monkeypatch
+):
     """Abandoning the engine with commits still in flight (crash analog)
     must leave a resumable store: the commit point is a fully committed round,
     and resume + rerun reproduces the serial engine's final output."""
     pages, seeds = pages_and_seeds
     wd = str(tmp_path_factory.mktemp("crash"))
-    cfg = CrawlConfig(extract_email=True, now_micros=NOW, ckpt_inflight=2)
+    cfg = CrawlConfig(extract_email=True, now_micros=NOW)
     eng = CrawlEngine(spark, pages, wd, cfg)
     eng.seed_from_queries(seeds)
     for _ in range(3):
@@ -217,11 +221,9 @@ def test_resume_mid_pipeline_crash(spark, pages_and_seeds, tmp_path_factory):
     resumed = CrawlEngine.resume(spark, pages, wd, cfg)
     resumed.run()
 
+    monkeypatch.setattr(crawl_mod, "_CKPT_INFLIGHT", 1)
     wd_ref = str(tmp_path_factory.mktemp("crashref"))
-    ref = CrawlEngine(
-        spark, pages, wd_ref,
-        CrawlConfig(extract_email=True, now_micros=NOW, ckpt_inflight=1),
-    )
+    ref = CrawlEngine(spark, pages, wd_ref, cfg)
     ref.seed_from_queries(seeds)
     ref.run()
     assert resumed.counters()["results"] == ref.counters()["results"]

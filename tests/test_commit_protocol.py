@@ -6,7 +6,9 @@ before deleting it.  A failure injected at every step of that protocol must
 leave the previous snapshot as the commit point, with nothing listed above
 it, and resume + run must still reproduce the sequential oracle's results
 byte for byte.  Two writers publishing the same round number must never
-replace or delete each other's committed dir."""
+replace or delete each other's committed dir.  A take-over sweeps the
+staging dirs older writers left, and a writer whose lease moves mid-commit
+reports ConcurrentWriterError."""
 
 import os
 import shutil
@@ -201,3 +203,47 @@ def test_resume_on_empty_workdir_is_loud(spark, crawl_inputs, tmp_path):
             wd.mkdir()
         with pytest.raises(ValueError, match="no committed snapshot"):
             CrawlEngine.resume(spark, pages, str(wd), CFG)
+
+
+def test_take_over_sweeps_stale_staging_dirs(spark, tmp_path):
+    """A crashed commit's ``.tmp.*`` dir and a crashed prune's ``.drop.*``
+    dir are gone after the next ``take_over()``; snapshots stay as they
+    were."""
+    wd = tmp_path / "wd"
+    wd.mkdir()
+    store = ParquetDeltaLogStore(spark, wd)
+    _publish(spark, store, 0, "a")
+    _publish(spark, store, 1, "a")
+    before = store.snapshots()
+    for name in (".tmp.round=0002.dead", ".drop.round=0001.dead"):
+        (wd / name / "t").mkdir(parents=True)
+        (wd / name / "manifest.json").write_text("{}")
+
+    store.take_over()
+
+    assert not list(wd.glob(".tmp.*")) and not list(wd.glob(".drop.*"))
+    assert store.snapshots() == before
+
+
+def test_commit_that_loses_the_lease_raises_concurrent_writer(spark, tmp_path):
+    """A second handle takes the lease over between the first's staging and
+    its publish rename.  The take-over sweeps the staged dir, so the rename
+    fails; the first writer must report the lost lease, not the missing
+    dir, and publish nothing."""
+    wd = tmp_path / "wd"
+    wd.mkdir()
+    a, b = ParquetDeltaLogStore(spark, wd), ParquetDeltaLogStore(spark, wd)
+    token = a.take_over()
+    real_current = a.current
+
+    def current_then_lose_lease():
+        b.take_over()
+        return real_current()
+
+    a.current = current_then_lose_lease
+    df = spark.createDataFrame([("a",)], "writer string")
+    with pytest.raises(ConcurrentWriterError) as err:
+        a.commit(0, {"t": (df, 1)}, lambda legs: {"round": 0}, token)
+
+    assert isinstance(err.value.__cause__, OSError)
+    assert not list(wd.glob("round=*"))

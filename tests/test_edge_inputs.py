@@ -8,13 +8,11 @@ from pathlib import Path
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from google_maps_scraper_spark import session as session_mod
 from google_maps_scraper_spark.operators import analytics
-from google_maps_scraper_spark.operators.dedup_docs import (
-    ORACLES,
-    docs_source_template_shingles,
-)
+from google_maps_scraper_spark.operators.dedup_docs import ORACLES, QUERIES
 from tools.check_oracles import table_hash
 
 SF = Path(__file__).resolve().parents[1] / "perfbench" / "data" / "sf0.001"
@@ -38,10 +36,10 @@ def test_load_fanout_leaves_non_local_path_alone(spark, monkeypatch):
     assert analytics.load_fanout(spark, "s3a://bucket/sf", "documents") is df
 
 
-def test_null_text_document_matches_oracle(spark, tmp_path):
-    """A NULL-text document is dropped by both engines (the oracle's inner
-    unnest yields no row for it), so the outputs still hash equal."""
-    sf = tmp_path / "sf"
+@pytest.fixture(scope="module")
+def null_text_sf(tmp_path_factory):
+    """The sf0.001 tables plus one document whose text is NULL."""
+    sf = tmp_path_factory.mktemp("null-text") / "sf"
     shutil.copytree(SF, sf)
     docs = pq.read_table(sf / "documents.parquet")
     null_id = max(docs.column("doc_id").to_pylist()) + 1
@@ -51,19 +49,41 @@ def test_null_text_document_matches_oracle(spark, tmp_path):
         schema=docs.schema,
     )
     pq.write_table(pa.concat_tables([docs, row]), sf / "documents.parquet")
+    return sf, null_id
 
-    sdf = docs_source_template_shingles(spark, str(sf))
+
+# What the oracle does with a NULL-text document: the shingle queries'
+# inner unnest yields no row for it, so it is dropped; the k-gram CTE gives
+# it one position whose gram is NULL, so docs_dup_span_stats reports it, but
+# that gram joins no other document, so it is in no pair (None: the output
+# has no doc_id column).
+NULL_TEXT_KEPT = {
+    "docs_source_template_shingles": False,
+    "docs_shingle_novelty": False,
+    "docs_dup_span_stats": True,
+    "docs_dup_span_pairs": None,
+}
+
+
+@pytest.mark.parametrize("query", list(NULL_TEXT_KEPT))
+def test_null_text_document_matches_oracle(spark, null_text_sf, query):
+    """Both engines treat a NULL-text document alike, so the outputs still
+    hash equal."""
+    sf, null_id = null_text_sf
+    sdf = QUERIES[query](spark, str(sf))
     srows, scols = [tuple(r) for r in sdf.collect()], sdf.columns
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{sf / 'documents.parquet'}'"
     )
-    res = con.execute(ORACLES["docs_source_template_shingles"])
+    res = con.execute(ORACLES[query])
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()
 
-    assert null_id not in {r[scols.index("doc_id")] for r in srows}
-    assert null_id not in {r[dcols.index("doc_id")] for r in drows}
+    kept = NULL_TEXT_KEPT[query]
+    if kept is not None:
+        assert (null_id in {r[scols.index("doc_id")] for r in srows}) == kept
+        assert (null_id in {r[dcols.index("doc_id")] for r in drows}) == kept
     assert len(srows) == len(drows)
     assert sorted(scols) == sorted(dcols)
     assert table_hash(srows, scols) == table_hash(drows, dcols)

@@ -1,79 +1,32 @@
-"""State-checkpoint storage policy (round 4): every in-memory state
-materialization funnels through CrawlEngine._ckpt, which stores blocks
-SERIALIZED (off-heap when the session enables it, on-heap otherwise)
-instead of localCheckpoint's deserialized default.
+"""State-checkpoint storage policy: every in-memory state materialization
+funnels through CrawlEngine._ckpt, which stores blocks SERIALIZED —
+off-heap when the session sets ``spark.memory.offHeap.enabled``, on-heap
+otherwise — instead of localCheckpoint's deserialized default.
 
 Why pinned: deserialized state turns superlinear once it outgrows the
 heap's storage pool — a 2x bench corpus (4.2M pages, local[16], 32g heap)
 measured 4-14x phase walls (claim 14x, persist 10.6x) from old-gen churn;
 serialized blocks cut that run 12% end-to-end and the claim phase 60%,
 with no regression when state fits (same-minutes A/B at the 2.1M corpus).
-Storage level must never change a byte of output."""
+Byte parity of the crawl's output under this policy is pinned by
+tests/test_crawl_e2e.py."""
 
-import pytest
+from pyspark import StorageLevel
 
-from google_maps_scraper_spark.plans.crawl import (
-    CrawlConfig,
-    CrawlEngine,
-    _state_storage_level,
-)
-from google_maps_scraper_spark.sources.corpus import corpus_to_spark, generate_corpus
-
-NOW = 1786838400000000
-
-
-def _seeds(corpus):
-    return [(s["query"].split("#!#")[0].strip(), s["custom_id"]) for s in corpus.seeds]
-
-
-@pytest.fixture(scope="module")
-def pages_and_seeds(spark):
-    corpus = generate_corpus(n_seeds=3, places_per_serp=4, seed=53)
-    pages = corpus_to_spark(spark, corpus).localCheckpoint(eager=True)
-    return pages, _seeds(corpus)
+from google_maps_scraper_spark.plans.crawl import _state_storage_level
 
 
 def test_level_selection(spark, monkeypatch):
-    from pyspark import StorageLevel
-
-    # the test session runs without spark.memory.offHeap.enabled, so auto
-    # must pick serialized ON-HEAP (OFF_HEAP blocks need the off-heap pool)
-    monkeypatch.delenv("GMS_STATE_STORAGE", raising=False)
+    # the test session runs without spark.memory.offHeap.enabled, so the
+    # rule picks serialized ON-HEAP (OFF_HEAP blocks need the off-heap pool)
     assert _state_storage_level(spark) == StorageLevel.MEMORY_AND_DISK
 
-    monkeypatch.setenv("GMS_STATE_STORAGE", "offheap")
+    real_get = spark.conf.get
+
+    def get(key, *default):
+        if key == "spark.memory.offHeap.enabled":
+            return "TRUE"
+        return real_get(key, *default)
+
+    monkeypatch.setattr(spark.conf, "get", get)
     assert _state_storage_level(spark) == StorageLevel.OFF_HEAP
-    monkeypatch.setenv("GMS_STATE_STORAGE", "memdisk")
-    assert _state_storage_level(spark) == StorageLevel.MEMORY_AND_DISK
-    # deser = localCheckpoint's own default (None passes through)
-    monkeypatch.setenv("GMS_STATE_STORAGE", "deser")
-    assert _state_storage_level(spark) is None
-
-
-def test_serialized_state_byte_identical(
-    spark, pages_and_seeds, tmp_path_factory, monkeypatch
-):
-    """The storage level is an executor-memory policy, not a semantic: a
-    full email crawl must produce identical results and counters under the
-    deserialized default and the serialized policy."""
-    pages, seeds = pages_and_seeds
-
-    def _run(mode, wd):
-        monkeypatch.setenv("GMS_STATE_STORAGE", mode)
-        eng = CrawlEngine(
-            spark, pages, str(wd),
-            CrawlConfig(extract_email=True, now_micros=NOW, checkpoint_every=1),
-        )
-        eng.seed_from_queries(seeds)
-        counters = eng.run()
-        rows = {
-            (x["link"], x["canonical_json"])
-            for x in eng.results.select("link", "canonical_json").collect()
-        }
-        return counters, rows
-
-    c_deser, r_deser = _run("deser", tmp_path_factory.mktemp("wd-deser"))
-    c_ser, r_ser = _run("memdisk", tmp_path_factory.mktemp("wd-ser"))
-    assert c_deser == c_ser
-    assert r_deser == r_ser
-    assert len(r_ser) > 0

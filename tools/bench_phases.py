@@ -85,9 +85,6 @@ def run_level(cpus: int, pages_path: str, workroot: str, seeds_path: str) -> Non
             broadcast_claim_rows=int(
                 os.environ.get("GMS_BROADCAST_CLAIM", str(100_000))
             ),
-            # A/B knob for the commit-pipeline depth (the ckpt_join tail is
-            # the last non-scaling 1x phase — round-4 VERDICT #5)
-            ckpt_inflight=int(os.environ.get("GMS_CKPT_INFLIGHT", "2")),
             timing=True,
         ),
     )
