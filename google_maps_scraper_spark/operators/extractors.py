@@ -1,20 +1,21 @@
 """Vectorized Arrow/pandas UDFs wrapping the pure-Python parse core.
 
-All row-level work in the engine funnels through these five UDFs (the
-input_hint mandates pandas/Arrow vectorization, no per-row Python UDFs):
+Row-level work in the engine funnels through three UDFs (the input_hint
+mandates pandas/Arrow vectorization, no per-row Python UDFs):
 
-  * ``serp_links_udf``   — SERP HTML → array of place hrefs
-    (≙ GmapJob.Process feed walk, gmaps/job.go:159-176);
-  * ``entry_extract_udf``— place HTML → Entry scalars + canonical JSON +
-    error channel (≙ PlaceJob.Process → EntryFromJSON,
+  * ``dispatch_udf``       — one pass over every fetched page, by job kind:
+    SERP feed links (≙ GmapJob.Process, gmaps/job.go:145-177), place entry
+    extraction + error channel (≙ PlaceJob.Process → EntryFromJSON,
     gmaps/place.go:72-144, gmaps/entry.go:360-542; the Go panic-recover
-    wrapper at entry.go:361-367 corresponds to the try/except here);
-  * ``emails_udf``       — website HTML → ordered deduped emails
-    (≙ EmailExtractJob.Process, gmaps/emailjob.go:64-139);
-  * ``reviews_pages_udf``— array of review-RPC page bodies → extended
-    reviews JSON (≙ Entry.AddExtraReviews, gmaps/entry.go:317-328);
-  * ``serp_entries_udf`` — fast-mode payload → entries
-    (≙ ParseSearchResults, gmaps/multiple.go:11-81).
+    wrapper at entry.go:361-367 corresponds to the try/except here), a
+    review-RPC chain step (gmaps/reviews.go:70-97) and the email hop's
+    finalize (gmaps/emailjob.go:64-98);
+  * ``harvest_emails_udf`` — website HTML → ordered deduped emails, run
+    inside the pages scan (≙ EmailExtractJob.Process's ExtractEmails);
+  * ``reviews_pages_udf``  — array of review-RPC page bodies → extended
+    reviews JSON (≙ Entry.AddExtraReviews, gmaps/entry.go:317-328).
+
+``etld1_col`` is the JVM-side (no Python) eTLD+1 for politeness buckets.
 
 Each UDF is a pure function of its inputs (the pinned ``now`` for review
 timestamp bounds arrives as a literal column), so results are reproducible
@@ -42,25 +43,13 @@ from ..extract.entry import (
 )
 from ..extract.gojson import go_json_dumps
 from ..extract.place_page import extract_app_init_blob
-from ..extract.serp import extract_feed_links, parse_search_results
-from ..schemas import (
-    DISPATCH_SCHEMA,
-    EMAIL_FINALIZE_SCHEMA,
-    EMAILS_EXTRACT_SCHEMA,
-    ENTRY_EXTRACT_SCHEMA,
-    SERP_LINKS_SCHEMA,
-)
+from ..extract.serp import extract_feed_links
+from ..schemas import DISPATCH_SCHEMA, EMAIL_FINALIZE_SCHEMA, ENTRY_EXTRACT_SCHEMA
 
 __all__ = [
-    "serp_links_udf",
-    "entry_extract_udf",
     "dispatch_udf",
-    "emails_udf",
-    "finalize_email_entry_udf",
     "harvest_emails_udf",
     "reviews_pages_udf",
-    "serp_entries_json_udf",
-    "url_host_udf",
     "etld1_col",
 ]
 
@@ -71,12 +60,6 @@ def _to_text(v: Any) -> str:
     if isinstance(v, (bytes, bytearray)):
         return bytes(v).decode("utf-8", "replace")
     return str(v)
-
-
-@pandas_udf(SERP_LINKS_SCHEMA)
-def serp_links_udf(html: pd.Series) -> pd.Series:
-    """SERP page body → hrefs of ``div[role=feed] div[jsaction]>a`` anchors."""
-    return html.map(lambda h: extract_feed_links(_to_text(h)) if h is not None else [])
 
 
 def _extract_one_entry_pair(
@@ -112,10 +95,6 @@ def _extract_one_entry_pair(
 
     out.update(_entry_fields(e))
     return out, e
-
-
-def _extract_one_entry(html: Any, seed_id: str, url: str, now_micros: int) -> dict:
-    return _extract_one_entry_pair(html, seed_id, url, now_micros)[0]
 
 
 def _entry_fields(e: dict) -> dict:
@@ -156,24 +135,6 @@ def _normalize_site(site: str) -> str:
     return normalize_google_url(site or "")
 
 
-@pandas_udf(ENTRY_EXTRACT_SCHEMA)
-def entry_extract_udf(
-    html: pd.Series, seed_id: pd.Series, url: pd.Series, now_micros: pd.Series
-) -> pd.DataFrame:
-    rows = [
-        _extract_one_entry(h, s, u, int(n))
-        for h, s, u, n in zip(html, seed_id, url, now_micros)
-    ]
-    return pd.DataFrame(rows, columns=[f.name for f in ENTRY_EXTRACT_SCHEMA.fields])
-
-
-@pandas_udf(EMAILS_EXTRACT_SCHEMA)
-def emails_udf(html: pd.Series) -> pd.Series:
-    """Website page → emails; fetch-miss (null html) → empty list, matching
-    EmailExtractJob's emit-entry-anyway-on-fetch-error (emailjob.go:80-82)."""
-    return html.map(lambda h: extract_emails(_to_text(h)) if h is not None else [])
-
-
 @pandas_udf(T.StringType())
 def reviews_pages_udf(pages: pd.Series, now_micros: pd.Series) -> pd.Series:
     """Array of RPC page bodies → JSON array of extended reviews (Go-canonical
@@ -188,40 +149,6 @@ def reviews_pages_udf(pages: pd.Series, now_micros: pd.Series) -> pd.Series:
         return go_json_dumps([review_to_gostruct(r) for r in reviews])
 
     return pd.Series([run(b, n) for b, n in zip(pages, now_micros)])
-
-
-@pandas_udf(T.StringType())
-def serp_entries_json_udf(body: pd.Series) -> pd.Series:
-    """Fast-mode SERP payload → JSON array of entries (ParseSearchResults)."""
-
-    def run(raw) -> str:
-        if raw is None:
-            return "[]"
-        try:
-            entries = parse_search_results(_to_text(raw))
-        except ValueError:
-            return "[]"
-        return json.dumps([
-            {
-                "input_id": e["input_id"],
-                "title": e["title"],
-                "categories": e["categories"],
-                "web_site": e["web_site"],
-                "review_rating": e["review_rating"],
-                "review_count": e["review_count"],
-                "address": e["address"],
-                "latitude": e["latitude"],
-                "longitude": e["longtitude"],
-                "phone": e["phone"],
-                "status": e["status"],
-                "timezone": e["timezone"],
-                "data_id": e["data_id"],
-                "plus_code": e["plus_code"],
-            }
-            for e in entries
-        ])
-
-    return body.map(run)
 
 
 _EMAIL_FINALIZE_COLS = [f.name for f in EMAIL_FINALIZE_SCHEMA.fields]
@@ -266,12 +193,6 @@ def _finalize_one_email(ej: str | None, h: Any, pre: Any = None) -> dict:
         "canonical_json": entry_to_canonical_json(e),
         "valid": validate_entry(e),
     }
-
-
-@pandas_udf(EMAIL_FINALIZE_SCHEMA)
-def finalize_email_entry_udf(entry_json: pd.Series, html: pd.Series) -> pd.DataFrame:
-    rows = [_finalize_one_email(ej, h) for ej, h in zip(entry_json, html)]
-    return pd.DataFrame(rows, columns=_EMAIL_FINALIZE_COLS)
 
 
 @pandas_udf(T.ArrayType(T.StringType()))
@@ -405,14 +326,6 @@ def dispatch_udf(
     return pd.DataFrame(rows, columns=_DISPATCH_COLS)
 
 
-@pandas_udf(T.StringType())
-def url_host_udf(url: pd.Series) -> pd.Series:
-    """eTLD+1 of a URL for politeness bucketing (vectorized)."""
-    from ..extract.urls import etld1
-
-    return url.map(lambda u: etld1(u or ""))
-
-
 def etld1_col(url_col):
     """JVM-side eTLD+1 (same suffix table as ``extract.urls.etld1``) — keeps
     the per-round frontier stamping inside whole-stage codegen instead of a
@@ -436,7 +349,3 @@ def etld1_col(url_col):
         .otherwise(last2)
     )
 
-
-def now_micros_lit(now_micros: int):
-    """Literal column for the pinned clock (determinism, SURVEY §7 #2)."""
-    return F.lit(int(now_micros)).cast("long")

@@ -121,10 +121,6 @@ class CrawlConfig:
     # most the rounds whose commits were still in flight — resume then
     # deterministically re-runs them.
     # finalize()/run() always join and commit the final round.
-    broadcast_claim_rows: int = 100_000
-    # claims up to this many rows broadcast into the pages join (the huge
-    # pages table is then never shuffled); larger claims fall back to a
-    # shuffle join, where AQE picks the physical strategy.
     keep_rounds: int | None = None
     # snapshot retention: keep the last K round NUMBERS — after each commit
     # of round R (on the checkpoint thread) round dirs numbered below
@@ -136,13 +132,7 @@ class CrawlConfig:
     # NB retention interacts with the delta log: a commit whose chain would
     # reference a dir older than the window COMPACTS that table first (full
     # rewrite), so aggressive retention trades away O(delta) commit cost —
-    # keep_rounds well above compact_chain keeps both.
-    compact_chain: int = 16
-    # delta-log chain bound (≙ Iceberg rewrite_data_files cadence): when a
-    # table's manifest chain would exceed this many delta dirs, the commit
-    # rewrites it as one compacted full table.  Bounds resume/read fan-in
-    # and retention debt; amortized rewrite cost is O(total/compact_chain)
-    # per commit.
+    # keep_rounds well above _COMPACT_CHAIN keeps both.
     seen_bloom: bool = False
     # opt-in Bloom accelerator in front of the exact seen anti-join: a
     # broadcast filter (per-partition shards, treeReduce-merged, maintained
@@ -152,20 +142,7 @@ class CrawlConfig:
     # false positives fall through to the anti-join, false negatives are
     # impossible.
     bloom_capacity: int = 1_000_000      # expected distinct URLs (sizes m,k)
-    term_flush_rows: int = 65536
-    # terminal-segment commit batching: retiring rows accumulate as lazy
-    # deltas (cheap projections of already-checkpointed round outputs) and
-    # materialize into an immutable segment only once the accumulated rows
-    # pass this threshold or a durable sync checkpoint needs them — the
-    # Iceberg small-commit-batching analog.  Keeps tiny rounds from paying
-    # a fixed materialization job for a handful of retired rows; 0 flushes
-    # every round.
     capture_plans: bool = False
-    timing: bool = False
-    # debug/bench hook: accumulate driver-blocking wall time per phase in
-    # engine.phase_times (claim, dispatch, chains, persist, checkpoint,
-    # counters) — every Spark action blocks the driver, so wall around each
-    # block attributes the round's cost to its phase.  Off by default.
     # debug/test hook: record formatted physical plans of the round's three
     # load-bearing dataflows (claim window, fetch+dispatch, seen anti-join)
     # in engine.plan_log — the plan-regression pytest guard asserts on them
@@ -193,6 +170,22 @@ _REVIEW_RPC_PREFIX = "https://www.google.com/maps/rpc/listugcposts"
 _CKPT_INFLIGHT = 2
 # false-positive rate the seen_bloom filter is sized for
 _BLOOM_FPP = 0.01
+# claims (and seen-probe candidate sets) up to this many rows broadcast into
+# their join, so the huge pages / seen table is never shuffled; larger ones
+# fall back to a shuffle join, where AQE picks the physical strategy
+_BROADCAST_ROWS = 100_000
+# delta-log chain bound (≙ Iceberg rewrite_data_files cadence): when a
+# table's manifest chain would exceed this many delta dirs, the commit
+# rewrites it as one compacted full table.  Bounds resume/read fan-in and
+# retention debt; amortized rewrite cost is O(total/_COMPACT_CHAIN) per commit.
+_COMPACT_CHAIN = 16
+# terminal-segment commit batching: retiring rows accumulate as lazy deltas
+# (cheap projections of already-checkpointed round outputs) and materialize
+# into an immutable segment only once the accumulated rows reach this many
+# or a durable sync checkpoint needs them — the Iceberg small-commit-batching
+# analog.  Keeps tiny rounds from paying a fixed materialization job for a
+# handful of retired rows; 0 flushes every round.
+_TERM_FLUSH_ROWS = 65536
 # the entry fields a result row copies from a dispatched entry struct
 _ENTRY_COLS = (
     "link", "cid", "title", "category", "categories", "address", "web_site",
@@ -331,6 +324,9 @@ class CrawlEngine:
         self.pages = pages
         self.store = ParquetDeltaLogStore(spark, workdir)
         self.cfg = config or CrawlConfig()
+        # Run-scoped state: seed_from_queries and resume (through
+        # _root_state) reset every field below that describes the crawl, so
+        # a re-seeded engine starts exactly like a new one.
         self.round = 0
         self._cum_claimed = 0
         self._cum_admitted = 0   # SERP fan-out candidates (observed n_links)
@@ -338,8 +334,9 @@ class CrawlEngine:
         self._writer_token: str | None = None  # store lease (split-brain guard)
         self._chain_pages = None   # lazily materialized review-RPC page
         # subset: every chain-hop fetch probes this instead of re-scanning
-        # the full pages table (built once per run, on the first multi-hop
-        # chain — see _follow_chains)
+        # the full pages table (built once per engine, on the first
+        # multi-hop chain — see _follow_chains; pages are immutable, so it
+        # outlives a re-seed)
         self._ckpt_pool = None     # lazy single-thread executor: serializes
         # in-flight durable snapshots, oldest first (≤ _CKPT_INFLIGHT).
         # The single worker runs them in submit order; the driver folds
@@ -350,22 +347,20 @@ class CrawlEngine:
         # yet folded by _apply_commit — captures take the suffix past this
         # head, applies slice the head (in commit order)
         self._cap_heads = {"seen": 0, "results": 0, "term": 0}
-        # writer-thread-owned manifest chain state (prev log/totals/parent):
-        # commits chain through the serialized worker, so the driver never
-        # needs the previous commit's result to capture the next
-        self._wlog: dict | None = None
-        self._wtotals: dict | None = None
+        # the manifest chain the NEXT commit builds on (legs, running totals,
+        # parent round): rooted by _root_state, then advanced only by the
+        # serialized writer thread, so capturing commit N+1 never waits on N
+        self._wlog: dict = {"seen": [], "results": [], "term": []}
+        self._wtotals: dict = {"term": {}, "seen": 0, "results": 0}
         self._wparent: int = -1
         # first commit failure (fail-stop): later queued commits must NOT
         # publish — their captures assume the failed commit's deltas are in
         # the chain, so publishing would commit a manifest that silently
         # skips those rows
         self._ckpt_failed: BaseException | None = None
-        self._bloom = None
-        if self.cfg.seen_bloom:
-            from ..operators.bloom import BloomFilter
-
-            self._bloom = BloomFilter.sized(self.cfg.bloom_capacity, _BLOOM_FPP)
+        # (round, counters) observed by the last applied commit's writes
+        self._counters_from_write: tuple[int, dict] | None = None
+        self._bloom = None   # empty filter (seen_bloom) built by _root_state
         self._frontier: DataFrame | None = None   # LIVE rows (status NEW)
         self._frontier_done: list[DataFrame] = []  # terminal segments,
         # append-only: each is materialized ONCE when its round retires it
@@ -373,23 +368,19 @@ class CrawlEngine:
         # data file.  At 10^10-URL scale this is what keeps per-round state
         # maintenance O(delta) instead of O(total): done/failed jobs (with
         # their multi-KB payloads) stop riding every round's checkpoint.
-        self._pending_term: DataFrame | None = None  # this round's retiring rows
         self._term_lazy: list[DataFrame] = []  # unflushed lazy term deltas
         self._term_lazy_rows = 0               # upper-bound row estimate
         self._live_parquet_rooted = False      # live set backed by a round dir
         # The seen set is append-only too: immutable per-round admission
         # segments, each materialized once (the seen analog of
-        # _frontier_done).  self._seen stays the union VIEW every consumer
-        # reads; only the newest delta is ever materialized.
+        # _frontier_done); ``seen`` unions them on read.
         self._seen_segs: list[DataFrame] = []
-        self._pending_seen: DataFrame | None = None  # this round's admissions
-        self._seen: DataFrame | None = None          # union view over segments
         # Results are append-only: _results_base is the durably-logged part
         # (re-rooted at the delta-log parquet chain after each commit),
-        # _results_new the per-round deltas since; self._results is the view.
+        # _results_new the per-round deltas since; _results_view() unions
+        # them on read.
         self._results_base: DataFrame | None = None
         self._results_new: list[DataFrame] = []
-        self._results: DataFrame | None = None
         # Durable delta log (Iceberg-append analog): each committed round
         # dir holds ONLY the rows appended since the previous commit for the
         # append-only tables (seen / results / term) plus the full (small)
@@ -409,10 +400,9 @@ class CrawlEngine:
         # rows at bench scale), and a fixed 32-partition cap made that
         # write level-independent (measured 1.28x at 4→16)
         self._rows_since = {"seen": 0, "results": 0, "term": 0}
-        self._log: dict[str, list[str]] = {"seen": [], "results": [], "term": []}
-        self._totals: dict = {"term": {}, "seen": 0, "results": 0}
         self.plan_log: dict[str, str] = {}  # filled when cfg.capture_plans
-        self.phase_times: dict[str, float] = defaultdict(float)  # cfg.timing
+        # driver-blocking wall seconds per phase (see _timed)
+        self.phase_times: dict[str, float] = defaultdict(float)
         # serialized (off-heap when available) block storage for all state
         # checkpoints — the deserialized default turns superlinear once
         # state outgrows the heap's storage pool (see _state_storage_level)
@@ -434,6 +424,9 @@ class CrawlEngine:
 
         import hashlib
 
+        # a re-seed drops the previous crawl: its commits finish first
+        self._join_pending_checkpoint()
+        self.round = self._cum_claimed = self._cum_admitted = 0
         rows = []
         for i, (query, custom_id) in enumerate(queries):
             url = build_search_url(query)
@@ -459,12 +452,11 @@ class CrawlEngine:
             full.filter(F.col("status") == STATUS_NEW), done, [],
             self.spark.createDataFrame([], RESULT_SCHEMA),
             {"seen": [], "results": [], "term": []},
-            {"term": {}, "seen": 0, "results": 0},
+            {"term": {}, "seen": 0, "results": 0}, -1,
         )
         # robots can deny SEED urls: the terminal part must reach the
         # durable term log like any other retirement
         self._term_since_durable = [done]
-        self.round = 0
         self.store.reset()
         self._writer_token = self.store.take_over()
         if self.cfg.checkpoint_every == 1:
@@ -557,42 +549,41 @@ class CrawlEngine:
         the audit/counters/snapshot view.  Claims never build this (they
         read the live set only), so the union's width costs nothing on the
         per-round hot path; segment count is bounded by round count."""
-        pending = [] if self._pending_term is None else [self._pending_term]
-        return _union_all(
-            [self._frontier, *self._frontier_done, *self._term_lazy, *pending]
-        )
+        return _union_all([self._frontier, *self._frontier_done, *self._term_lazy])
 
-    def _root_state(self, live, term, seen_segs, results, log, totals) -> None:
+    def _results_view(self) -> DataFrame | None:
+        """Every result row: the durably-logged base plus the per-round
+        deltas since (None before seeding)."""
+        if self._results_base is None:
+            return None
+        return _union_all([self._results_base, *self._results_new])
+
+    def _root_state(self, live, term, seen_segs, results, chain, totals, parent) -> None:
         """Root the state at the given tables and durable chain (seed,
-        resume): nothing pending, nothing lazy, nothing since-durable."""
+        resume; no commit in flight): nothing lazy, nothing since-durable,
+        nothing captured, the writer's chain at ``chain`` / ``totals`` with
+        ``parent`` as the last committed round, and an empty Bloom filter."""
         self._frontier = live
         self._frontier_done = [term]
-        self._pending_term = None
         self._term_lazy = []
         self._term_lazy_rows = 0
         self._term_since_durable = []
+        self._live_parquet_rooted = False
         self._seen_segs = seen_segs
-        self._pending_seen = None
         self._seen_since_durable = []
-        self._rebuild_seen_view()
         self._results_base = results
         self._results_new = []
-        self._rebuild_results_view()
-        self._log = log
-        self._totals = totals
+        self._cap_heads = {"seen": 0, "results": 0, "term": 0}
+        self._rows_since = {"seen": 0, "results": 0, "term": 0}
+        self._wlog, self._wtotals = chain, totals
+        self._wparent = self._durable_round = parent
+        self._ckpt_failed = None
+        self._counters_from_write = None
+        self._bloom = None
+        if self.cfg.seen_bloom:
+            from ..operators.bloom import BloomFilter
 
-    def _rebuild_seen_view(self) -> None:
-        """self._seen = union of the immutable admission segments (+ the
-        not-yet-materialized current round's delta, so mid-round consumers
-        see a consistent set).  The leading empty leg gives the view
-        SEEN_SCHEMA's types before any segment exists."""
-        pending = [] if self._pending_seen is None else [self._pending_seen]
-        self._seen = _union_all(
-            [self.spark.createDataFrame([], SEEN_SCHEMA), *self._seen_segs, *pending]
-        )
-
-    def _rebuild_results_view(self) -> None:
-        self._results = _union_all([self._results_base, *self._results_new])
+            self._bloom = BloomFilter.sized(self.cfg.bloom_capacity, _BLOOM_FPP)
 
     # in-memory seen-segment compaction threshold: past this many union legs
     # the per-round anti-join plan's compile cost starts to matter, so the
@@ -601,12 +592,17 @@ class CrawlEngine:
     # never disturbed by the merge)
     _SEEN_COMPACT_SEGS = 48
 
-    def _persist_state(self) -> None:
+    def _persist_state(
+        self, term: DataFrame | None = None, term_rows: int = 0,
+        seen: DataFrame | None = None,
+    ) -> None:
         """Truncate lineage in memory (no durable write) — used between
-        durable checkpoints when ``checkpoint_every > 1``.
+        durable checkpoints when ``checkpoint_every > 1``.  ``term`` (an
+        upper bound of ``term_rows`` rows) and ``seen`` are the round's
+        retiring rows and admissions; seeding passes neither.
 
         O(delta) per round: only this round's DELTAS get materialized (the
-        live frontier for the claim, the pending seen admissions for the
+        live frontier for the claim, the round's seen admissions for the
         anti-join).  The seen table is never re-copied — admissions append
         as immutable segments, exactly like the frontier's terminal
         segments.  Results stay lazy until the next durable checkpoint —
@@ -626,18 +622,16 @@ class CrawlEngine:
 
         n = self._state_partitions()
         n_delta = max(1, min(n, 32))  # deltas are claim-bounded, not state-sized
-        if self._pending_term is not None:
+        if term is not None:
             # retiring rows accumulate lazily (projections of this round's
             # already-checkpointed outputs) until the batch is worth a
-            # materialization job (cfg.term_flush_rows); the durable log
+            # materialization job (_TERM_FLUSH_ROWS); the durable log
             # keeps its own (cheap) ref to every per-round delta
-            self._term_lazy.append(self._pending_term)
-            self._term_since_durable.append(self._pending_term)
-            self._term_lazy_rows += self._pending_term_rows
-            self._pending_term = None
+            self._term_lazy.append(term)
+            self._term_since_durable.append(term)
+            self._term_lazy_rows += term_rows
         flush = self._term_lazy and (
-            self._term_lazy_rows >= max(self.cfg.term_flush_rows, 1)
-            or self.cfg.term_flush_rows == 0
+            self._term_lazy_rows >= _TERM_FLUSH_ROWS
             # a delta built over a parquet-rooted live set must not stay
             # lazy past this persist: keep_rounds retention may prune the
             # round dir it references (the same dangling-file hazard the
@@ -646,9 +640,9 @@ class CrawlEngine:
         )
         tables = {"frontier": (self._frontier, n)}
         seen_obs = Observation()
-        if self._pending_seen is not None:
+        if seen is not None:
             tables["seen_delta"] = (
-                self._pending_seen.observe(seen_obs, F.count(F.lit(1)).alias("n")),
+                seen.observe(seen_obs, F.count(F.lit(1)).alias("n")),
                 n_delta,
             )
         if flush:
@@ -677,7 +671,6 @@ class CrawlEngine:
                     self._seen_segs.append(seg)
                     self._seen_since_durable.append(seg)
                     self._rows_since["seen"] += int(seen_obs.get["n"])
-                self._pending_seen = None
             if "term" in fs:
                 # terminal segment: materialized once, appended, never
                 # touched again (no stats reset needed — segments never
@@ -714,7 +707,6 @@ class CrawlEngine:
                     self._ckpt(_union_all(prefix).coalesce(n))
                 )
                 self._seen_segs = [merged] + self._seen_segs[len(prefix):]
-        self._rebuild_seen_view()
 
     def _reset_stats(self, df: DataFrame) -> DataFrame:
         """Rebuild ``df`` as a fresh LogicalRDD leaf over its (already
@@ -779,9 +771,8 @@ class CrawlEngine:
 
     @contextmanager
     def _timed(self, name: str):
-        if not self.cfg.timing:
-            yield
-            return
+        # every Spark action blocks the driver, so wall time around each
+        # block attributes the round's cost to its phase
         t0 = time.perf_counter()
         try:
             yield
@@ -814,7 +805,7 @@ class CrawlEngine:
     # snapshot and the running row totals.  Per-commit I/O is O(delta), not
     # O(total state) — the property that makes per-round durability
     # affordable at a 10^10-row frontier.  Chains are bounded by compaction
-    # (cfg.compact_chain, ≙ rewrite_data_files); retention (cfg.keep_rounds,
+    # (_COMPACT_CHAIN, ≙ rewrite_data_files); retention (cfg.keep_rounds,
     # ≙ expire_snapshots) prunes snapshots outside the window, forcing
     # compaction first so the surviving chain is self-contained.
     #
@@ -844,11 +835,7 @@ class CrawlEngine:
 
     def _term_full(self) -> DataFrame:
         """Every terminal frontier row (segments + lazy deltas) — the
-        compaction source for the durable term log.  ``_pending_term`` is
-        deliberately EXCLUDED: commits always run after ``_persist_state``
-        has moved it into the lazy list, and a pending delta is not yet in
-        ``_term_since_durable`` — including it here would double-count its
-        rows at the next delta commit."""
+        compaction source for the durable term log."""
         return _union_all(self._frontier_done + self._term_lazy)
 
     def _capture_commit(self) -> dict:
@@ -886,8 +873,8 @@ class CrawlEngine:
             "deltas": deltas,
             "marks": marks,
             "full": {
-                "seen": self._seen,
-                "results": self._results,
+                "seen": self.seen,
+                "results": self._results_view(),
                 "term": self._term_full(),
             },
         }
@@ -923,18 +910,9 @@ class CrawlEngine:
         append snapshot's manifest list + summary).  ``store.commit`` owns
         the layout and the atomic publish.  Compaction (≙
         rewrite_data_files) triggers when the chain would exceed
-        ``cfg.compact_chain`` legs or reference a round the retention window
+        ``_COMPACT_CHAIN`` legs or reference a round the retention window
         is about to expire.  Returns the commit record the join point
         applies."""
-        # writer-owned chain state: seeded from the driver's durable view at
-        # the first write after init/resume/sync-apply (no commits are in
-        # flight at those points), then advanced per commit ON THIS THREAD —
-        # the serialized worker is the ordering point, so the driver never
-        # waits for commit N's manifest to capture commit N+1
-        if self._wlog is None:
-            self._wlog = {k: list(v) for k, v in self._log.items()}
-            self._wtotals = json.loads(json.dumps(self._totals))
-            self._wparent = self._durable_round
         rnd = cap["round"]
         keep = self.cfg.keep_rounds
         cutoff = rnd - max(int(keep), 2) + 1 if keep is not None else None
@@ -959,7 +937,7 @@ class CrawlEngine:
             prev, deltas = self._wlog[t], cap["deltas"][t]
             grown = len(prev) + (1 if deltas else 0)
             compact = bool(prev) and (
-                grown > self.cfg.compact_chain
+                grown > _COMPACT_CHAIN
                 or (cutoff is not None
                     and self.store.references_before(prev, cutoff))
             )
@@ -1060,16 +1038,9 @@ class CrawlEngine:
         if cutoff is not None:
             self.store.prune_before(cutoff, m["chain"])
         # advance the writer-owned chain state for the NEXT queued commit
-        self._wlog = {t: list(v) for t, v in m["chain"].items()}
-        self._wtotals = json.loads(json.dumps(m["totals"]))
-        self._wparent = rnd
-        return {
-            "round": rnd,
-            "log": m["chain"],
-            "totals": m["totals"],
-            "counters": m["counters"],
-            "marks": cap["marks"],
-        }
+        # (manifest() copies it before extending, so sharing is safe)
+        self._wlog, self._wtotals, self._wparent = m["chain"], m["totals"], rnd
+        return {"round": rnd, "counters": m["counters"], "marks": cap["marks"]}
 
     def _checkpoint_async(self) -> None:
         """Submit the durable DELTA commit of the current state and return —
@@ -1107,15 +1078,13 @@ class CrawlEngine:
 
     def _apply_commit(self, rec: dict) -> None:
         """Fold a successful commit record into driver state: advance the
-        durable mark, adopt the new chain + totals, drop the covered prefix
+        durable mark, keep the write-observed counters, drop the covered prefix
         of every since-durable list, and re-root the durably-logged results
         at the committed chain parquet.  Marks are RELATIVE counts and
         records are applied in commit order, so the head slice always drops
         exactly the entries that commit captured (entries captured by
         still-pending commits remain at the new head)."""
         self._durable_round = rec["round"]
-        self._log = rec["log"]
-        self._totals = rec["totals"]
         self._counters_from_write = (rec["round"], rec["counters"])
         m = rec["marks"]
         self._seen_since_durable = self._seen_since_durable[m["seen"]:]
@@ -1124,7 +1093,6 @@ class CrawlEngine:
         for t in ("seen", "results", "term"):
             self._cap_heads[t] -= m[t]
         self._results_base = self.store.read("results", rec["round"])
-        self._rebuild_results_view()
 
     def _drain_done_checkpoints(self) -> None:
         """Fold every ALREADY-FINISHED in-flight commit, oldest first, without
@@ -1161,10 +1129,8 @@ class CrawlEngine:
         # dangle if a later resume's retention prunes this snapshot)
         self._frontier = self.store.read("frontier", rec["round"])
         self._live_parquet_rooted = True
-        self._pending_term = None
         self._seen_segs = [self.store.read("seen", rec["round"])]
         self._seen_since_durable = []
-        self._rebuild_seen_view()
 
     @classmethod
     def resume(
@@ -1239,7 +1205,7 @@ class CrawlEngine:
             restored, _root(store.read("term", at)),
             [_root(store.read("seen", at))], store.read("results", at),
             {t: list(p) for t, p in manifest["chain"].items()},
-            manifest["totals"],
+            manifest["totals"], eng.round,
         )
         eng._live_parquet_rooted = True
         if denied is not None:
@@ -1253,7 +1219,6 @@ class CrawlEngine:
                 eng._ckpt(eng._frontier.coalesce(n))
             )
             eng._live_parquet_rooted = False
-        eng._durable_round = eng.round
         bloom = store.blob(at, "bloom.bin") if manifest.get("bloom") else None
         if bloom is not None:
             from ..operators.bloom import BloomFilter
@@ -1270,7 +1235,7 @@ class CrawlEngine:
             # impossible" invariant).
             from ..operators.bloom import build_bloom
 
-            eng._bloom = build_bloom(eng._seen.select("url"), "url", proto=eng._bloom)
+            eng._bloom = build_bloom(eng.seen.select("url"), "url", proto=eng._bloom)
         return eng
 
     # ---------------- round ---------------------------------------------------
@@ -1452,7 +1417,7 @@ class CrawlEngine:
             "job_id", "kind", "url", "seed_id", "created_path",
             "depth", "max_depth", "extract_email", "lang",
         ]
-        small = n_claimed <= cfg.broadcast_claim_rows
+        small = n_claimed <= _BROADCAST_ROWS
         claim_np = claimed.filter(F.col("payload").isNull()).select(
             *slim_cols, F.lit(None).cast("string").alias("payload")
         )
@@ -1482,7 +1447,7 @@ class CrawlEngine:
                 harvest_emails_udf("html").alias("emails_pre"),
                 "warc_ts",
             )
-            if n_payload_email <= cfg.broadcast_claim_rows:
+            if n_payload_email <= _BROADCAST_ROWS:
                 got_e = F.broadcast(got_e)
             parts.append(self._dispatch(claim_e.join(got_e, "job_id", "inner")))
         if n_payload - n_payload_email > 0:
@@ -1629,7 +1594,7 @@ class CrawlEngine:
                 cpages = self._chain_pages if self._chain_pages is not None else pages
                 keys = live.select("job_id", "url")
                 got = cpages.join(
-                    F.broadcast(keys) if n_next <= cfg.broadcast_claim_rows else keys,
+                    F.broadcast(keys) if n_next <= _BROADCAST_ROWS else keys,
                     "url", "inner",
                 ).select("job_id", "html", "warc_ts")
                 if cfg.robots:
@@ -1707,8 +1672,8 @@ class CrawlEngine:
         else:
             definite_new, maybes = None, dd_first
 
-        seen_keys = self._seen.select(F.col("url").alias("child_url"))
-        if n_links <= cfg.broadcast_claim_rows:
+        seen_keys = self.seen.select(F.col("url").alias("child_url"))
+        if n_links <= _BROADCAST_ROWS:
             # scan-probe: the seen table is SCANNED with a broadcast semi-probe
             # of the (budget-bounded) candidates and never shuffled — at
             # 10^10-row seen scale the anti-join's shuffle of seen is the
@@ -1854,33 +1819,31 @@ class CrawlEngine:
         self._frontier = updated_live.filter(
             F.col("status") == STATUS_NEW
         ).unionByName(new_children)
-        self._pending_term = (
+        term = (
             updated_live.filter(F.col("status") != STATUS_NEW)
             .withColumn("payload", F.lit(None).cast("string"))
             .unionByName(term_children)
         )
         # upper-bound estimate for the flush heuristic: every claimed job
         # plus every chain-hop record can retire this round
-        self._pending_term_rows = n_claimed + hops_rows
-        self._rows_since["term"] += n_claimed + hops_rows
+        term_rows = n_claimed + hops_rows
+        self._rows_since["term"] += term_rows
         self._rows_since["results"] += n_claimed  # emitted results ≤ claims
-        # append-only state moves as DELTAS: admissions become an immutable
-        # seen segment in _persist_state; the results delta stays lazy until
-        # the next durable commit (it roots in this round's checkpointed
-        # dispatch output)
-        self._pending_seen = new_seen
         if self.cfg.seen_bloom and self._bloom is not None:
             from ..operators.bloom import build_bloom
 
             self._bloom.merge(
                 build_bloom(new_seen.select("url"), "url", proto=self._bloom)
             )
+        # append-only state moves as DELTAS: admissions become an immutable
+        # seen segment in _persist_state; the results delta stays lazy until
+        # the next durable commit (it roots in this round's checkpointed
+        # dispatch output)
         self._results_new.append(results)
-        self._rebuild_results_view()
         # in-memory materialization every round (claim windows + anti-joins
         # read these next round); the durable parquet snapshot is submitted
         # to the background writer and overlaps the next round's compute.
-        self._persist_state()
+        self._persist_state(term, term_rows, new_seen)
         if self.round % max(self.cfg.checkpoint_every, 1) == 0:
             self._checkpoint_async()
 
@@ -1915,7 +1878,7 @@ class CrawlEngine:
 
         if self._frontier is None:
             return {}
-        cw = getattr(self, "_counters_from_write", None)
+        cw = self._counters_from_write
         if cw is not None and cw[0] == self.round == self._durable_round:
             # the last committed write observed exactly the current state
             c = dict(cw[1])
@@ -1926,12 +1889,8 @@ class CrawlEngine:
             f_rows = ex.submit(
                 lambda: full.groupBy("kind", "status").count().collect()
             )
-            f_res = ex.submit(
-                lambda: self._results.count() if self._results is not None else 0
-            )
-            f_seen = ex.submit(
-                lambda: self._seen.count() if self._seen is not None else 0
-            )
+            f_res = ex.submit(self._results_view().count)
+            f_seen = ex.submit(self.seen.count)
             c: dict[str, int] = {}
             for r in f_rows.result():
                 c[f"{r['kind']}_{r['status']}"] = r["count"]
@@ -1947,15 +1906,19 @@ class CrawlEngine:
         read time: nested queries like ``entry.complete_address.city`` work
         directly, while the hot loop checkpoints only the canonical JSON
         (Catalyst prunes the parse for queries that never touch ``entry``)."""
-        if self._results is None:
+        res = self._results_view()
+        if res is None:
             return None
-        return self._results.withColumn(
-            "entry", F.from_json("canonical_json", ENTRY_STRUCT)
-        )
+        return res.withColumn("entry", F.from_json("canonical_json", ENTRY_STRUCT))
 
     @property
     def seen(self) -> DataFrame:
-        return self._seen
+        """Every admitted URL: the union of the immutable admission segments.
+        The leading empty leg gives it SEEN_SCHEMA's types before any
+        segment exists."""
+        return _union_all(
+            [self.spark.createDataFrame([], SEEN_SCHEMA), *self._seen_segs]
+        )
 
     @property
     def frontier(self) -> DataFrame:
@@ -1965,7 +1928,7 @@ class CrawlEngine:
         """36-column CSV projection (entry.go:235-315) from canonical JSON."""
         from ..operators.csv_sink import write_results_csv
 
-        write_results_csv(self._results, path)
+        write_results_csv(self._results_view(), path)
 
     def write_results(self, path: str, fmt: str = "csv") -> None:
         """Write through a registered result writer (csv/json/parquet or a
@@ -1973,5 +1936,5 @@ class CrawlEngine:
         ResultWriter surface, runner/jobs.go:267-303)."""
         from ..operators.sinks import write_results
 
-        write_results(self._results, path, fmt)
+        write_results(self._results_view(), path, fmt)
 

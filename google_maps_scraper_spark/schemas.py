@@ -31,9 +31,7 @@ __all__ = [
     "PENDING_ENTRY_SCHEMA",
     "EMAIL_FINALIZE_SCHEMA",
     "DISPATCH_SCHEMA",
-    "SERP_LINKS_SCHEMA",
     "ENTRY_EXTRACT_SCHEMA",
-    "EMAILS_EXTRACT_SCHEMA",
     "PRIORITY_HIGH",
     "PRIORITY_MEDIUM",
     "PRIORITY_LOW",
@@ -256,9 +254,8 @@ RESULT_SCHEMA = T.StructType([
 
 # UDF return schemas -----------------------------------------------------------
 
-SERP_LINKS_SCHEMA = T.ArrayType(T.StringType())
-
-# extract-entry UDF output: scalars + canonical JSON + error channel.
+# place-entry extraction output (the dispatch UDF's ``entry`` field):
+# scalars + canonical JSON + error channel.
 ENTRY_EXTRACT_SCHEMA = T.StructType([
     T.StructField("input_id", T.StringType(), True),
     T.StructField("link", T.StringType(), True),
@@ -310,8 +307,6 @@ EMAIL_FINALIZE_SCHEMA = T.StructType([
     T.StructField("canonical_json", T.StringType(), True),
     T.StructField("valid", T.BooleanType(), True),
 ])
-
-EMAILS_EXTRACT_SCHEMA = T.ArrayType(T.StringType())
 
 # Single-pass dispatch UDF output: exactly one of links/entry/email is
 # populated per row depending on the job kind, plus the job's terminal

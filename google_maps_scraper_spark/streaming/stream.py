@@ -43,20 +43,23 @@ def stream_extract_places(
     ``pages_dir``.  Exactly-once per file via the streaming checkpoint —
     kill and restart resumes at the recorded offsets (the streaming
     equivalent of the batch engine's round manifests)."""
-    from ..operators.extractors import entry_extract_udf
+    from ..operators.extractors import dispatch_udf
 
     pages = (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", 16)
         .parquet(pages_dir)
     )
+    # the batch engine's dispatch UDF, place branch (no review chain)
     entries = (
         pages.filter(F.col("url").contains("/maps/place/"))
         .withColumn(
             "e",
-            entry_extract_udf(
-                "html", F.lit(""), "url", F.lit(now_micros).cast("long")
-            ),
+            dispatch_udf(
+                F.lit("place"), "html", F.lit(None).cast("string"), F.lit(""),
+                "url", F.lit(now_micros).cast("long"), F.lit(False),
+                F.lit(None).cast("array<string>"),
+            ).getField("entry"),
         )
         .filter(F.col("e.error").isNull() & F.col("e.valid"))
         .select(

@@ -18,6 +18,7 @@ import re
 
 import pytest
 
+from google_maps_scraper_spark.plans import crawl
 from google_maps_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
 from google_maps_scraper_spark.plans.oracle import SequentialOracle
 from google_maps_scraper_spark.sources.corpus import (
@@ -69,18 +70,15 @@ def engine_out(spark, bucketed_pages, corpus, tmp_path_factory):
         spark,
         bucketed_pages,
         str(tmp_path_factory.mktemp("crawl-bkt")),
-        # broadcast_claim_rows=0 forces EVERY claim (and the seen probe's
-        # candidate gate) onto the large-scale shuffle paths — on the
-        # bucketed table that is the storage-partitioned join
-        CrawlConfig(
-            extract_email=True,
-            now_micros=NOW,
-            broadcast_claim_rows=0,
-            capture_plans=True,
-        ),
+        CrawlConfig(extract_email=True, now_micros=NOW, capture_plans=True),
     )
-    eng.seed_from_queries(seeds)
-    counters = eng.run()
+    # a zero broadcast bound forces EVERY claim (and the seen probe's
+    # candidate gate) onto the large-scale shuffle paths — on the bucketed
+    # table that is the storage-partitioned join
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(crawl, "_BROADCAST_ROWS", 0)
+        eng.seed_from_queries(seeds)
+        counters = eng.run()
     return eng, counters
 
 

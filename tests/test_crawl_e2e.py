@@ -5,10 +5,16 @@ The oracle enacts the reference's exact scheduling (priority queue drained
 must reproduce its URL-seen decisions and its result set byte-identically
 (canonical JSON per url — the BASELINE.json invariant)."""
 
+import copy
+import json
+import pathlib
 import tempfile
+from collections import deque
 
 import pytest
+from pyspark.sql import DataFrame
 
+from google_maps_scraper_spark.plans import crawl
 from google_maps_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
 from google_maps_scraper_spark.plans.oracle import SequentialOracle
 from google_maps_scraper_spark.sources.corpus import corpus_to_spark, generate_corpus
@@ -116,6 +122,70 @@ def test_bfs_rounds(engine_out):
     assert done_rounds["search"] == 1
     assert done_rounds["place"] == 2
     assert done_rounds.get("email", 3) == 3
+
+
+def test_phase_walls_recorded_by_default(engine_out):
+    """A default-config run records driver-blocking wall time per phase —
+    no special mode has to be switched on to see where a round went."""
+    eng, _ = engine_out
+    assert {"claim", "dispatch", "persist"} <= set(eng.phase_times)
+    assert all(v >= 0 for v in eng.phase_times.values())
+
+
+def test_reseed_starts_like_a_fresh_engine(spark, corpus, tmp_path_factory, engine_out):
+    """Regression: seed_from_queries on an engine that already ran starts a
+    new crawl.  The previous crawl's manifest chain, totals, counters and
+    Bloom bits used to survive the re-seed, so its round-0 commit named the
+    old parent and chain and then read dropped round dirs (PATH_NOT_FOUND)."""
+    fresh, fresh_counters = engine_out
+    pages_df = corpus_to_spark(spark, corpus)
+    seeds = [(s["query"].split("#!#")[0].strip(), s["custom_id"]) for s in corpus.seeds]
+    wd = str(tmp_path_factory.mktemp("reseed"))
+    cfg = CrawlConfig(
+        extract_email=True, now_micros=NOW, seen_bloom=True, bloom_capacity=10_000
+    )
+    eng = CrawlEngine(spark, pages_df, wd, cfg)
+    # session handles, caches of the immutable pages and the lease token are
+    # not crawl state; DataFrames compare by presence, their lists by length
+    skip = {
+        "spark", "pages", "store", "cfg", "plan_log", "phase_times",
+        "_state_level", "_writer_token", "_chain_pages", "_ckpt_pool",
+    }
+
+    def run_state():
+        return {
+            k: len(v) if isinstance(v, (list, deque))
+            else type(v) if isinstance(v, DataFrame)
+            else v.to_bytes() if k == "_bloom" else copy.deepcopy(v)
+            for k, v in vars(eng).items() if k not in skip
+        }
+
+    eng.seed_from_queries(seeds)
+    after_first_seed = run_state()
+    eng.run()
+    eng.seed_from_queries(seeds)
+    assert run_state() == after_first_seed
+    assert eng.run() == fresh_counters
+
+    def rows(df, *cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    assert rows(eng.results, "link", "canonical_json") == rows(
+        fresh.results, "link", "canonical_json"
+    )
+    seen_cols = ("url", "admitting_parent", "round_admitted")
+    assert rows(eng.seen, *seen_cols) == rows(fresh.seen, *seen_cols)
+
+    def manifests(workdir):
+        # every committed manifest but its Bloom entry (only ``eng`` runs one)
+        out = {}
+        for d in pathlib.Path(workdir).glob("round=*"):
+            out[d.name] = json.loads((d / "manifest.json").read_text())
+            out[d.name].pop("bloom")
+        return out
+
+    assert manifests(wd) == manifests(fresh.store.workdir)
+    assert CrawlEngine.resume(spark, pages_df, wd, cfg).counters() == fresh_counters
 
 
 def test_resume_equivalence(spark, corpus, tmp_path_factory, engine_out):
@@ -335,7 +405,7 @@ def test_counters_write_observed_equals_aggregation(spark, tmp_path):
     assert cached["results"] > 0 and cached["seen"] > 0
 
 
-def test_terminal_segments_are_materialized_once(spark, tmp_path):
+def test_terminal_segments_are_materialized_once(spark, tmp_path, monkeypatch):
     """Frontier terminal segments must be checkpointed leaves (immutable,
     never re-persisted) and the live set must hold only NEW rows."""
     from pyspark.sql import functions as F
@@ -349,10 +419,11 @@ def test_terminal_segments_are_materialized_once(spark, tmp_path):
 
     corpus = generate_corpus(n_seeds=2, places_per_serp=4)
     pages = corpus_to_spark(spark, corpus)
+    monkeypatch.setattr(crawl, "_TERM_FLUSH_ROWS", 0)  # flush every round
     eng = CrawlEngine(
         spark, pages, str(tmp_path / "wd"),
         CrawlConfig(extract_email=False, now_micros=1786838400000000,
-                    checkpoint_every=100, term_flush_rows=0),
+                    checkpoint_every=100),
     )
     eng.seed_from_queries(
         [(s["query"].split(" #!#")[0], s["custom_id"]) for s in corpus.seeds]
@@ -372,7 +443,7 @@ def test_terminal_segments_are_materialized_once(spark, tmp_path):
     assert full_n == parts
 
 
-def test_terminal_batching_conserves_rows(spark, tmp_path):
+def test_terminal_batching_conserves_rows(spark, tmp_path, monkeypatch):
     """With the default flush threshold, tiny rounds accumulate retiring
     rows lazily — the full view, counters, and snapshots must still see
     every row, and a durable snapshot must round-trip identically."""
@@ -391,13 +462,13 @@ def test_terminal_batching_conserves_rows(spark, tmp_path):
     )
     ca = a.run()
     assert a._term_lazy  # tiny corpus: deltas stayed lazy (batched)
-    b = CrawlEngine(
-        spark, pages, str(tmp_path / "b"), CrawlConfig(term_flush_rows=0, **kw)
-    )
-    b.seed_from_queries(
-        [(s["query"].split(" #!#")[0], s["custom_id"]) for s in corpus.seeds]
-    )
-    cb = b.run()
+    b = CrawlEngine(spark, pages, str(tmp_path / "b"), CrawlConfig(**kw))
+    with monkeypatch.context() as m:
+        m.setattr(crawl, "_TERM_FLUSH_ROWS", 0)
+        b.seed_from_queries(
+            [(s["query"].split(" #!#")[0], s["custom_id"]) for s in corpus.seeds]
+        )
+        cb = b.run()
     assert not b._term_lazy  # flush-every-round mode
     assert ca == cb
     # resume from a's durable snapshot reproduces the same counters

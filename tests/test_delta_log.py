@@ -14,6 +14,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from google_maps_scraper_spark.plans import crawl
 from google_maps_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
 from google_maps_scraper_spark.plans.store import ParquetDeltaLogStore
 from google_maps_scraper_spark.schemas import SEEN_SCHEMA, STATUS_NEW
@@ -98,27 +99,30 @@ def test_commits_write_only_deltas(spark, pages_and_seeds, tmp_path_factory):
         prev = rnd
 
 
-def test_compaction_bounds_chain_legs(spark, pages_and_seeds, tmp_path_factory):
-    """With compact_chain=2 every published manifest's chains stay ≤ 2 legs
-    and the final state is unchanged vs an uncompacted run."""
+def test_compaction_bounds_chain_legs(
+    spark, pages_and_seeds, tmp_path_factory, monkeypatch
+):
+    """With a chain bound of 2 every published manifest's chains stay ≤ 2
+    legs and the final state is unchanged vs an uncompacted run."""
     pages, seeds = pages_and_seeds
     wd_a = str(tmp_path_factory.mktemp("compact"))
     wd_b = str(tmp_path_factory.mktemp("nocompact"))
-    kw = dict(extract_email=True, now_micros=NOW)
+    cfg = CrawlConfig(extract_email=True, now_micros=NOW)
 
-    a = CrawlEngine(spark, pages, wd_a, CrawlConfig(compact_chain=2, **kw))
-    a.seed_from_queries(seeds)
-    ca = a.run()
-    b = CrawlEngine(spark, pages, wd_b, CrawlConfig(**kw))
+    b = CrawlEngine(spark, pages, wd_b, cfg)
     b.seed_from_queries(seeds)
     cb = b.run()
+    monkeypatch.setattr(crawl, "_COMPACT_CHAIN", 2)
+    a = CrawlEngine(spark, pages, wd_a, cfg)
+    a.seed_from_queries(seeds)
+    ca = a.run()
     assert ca == cb
 
     for rnd, m in _manifests(wd_a).items():
         for t, paths in m["chain"].items():
             assert len(paths) <= 2, (rnd, t, paths)
     # the resumed compacted store reproduces identical results
-    r = CrawlEngine.resume(spark, pages, wd_a, CrawlConfig(compact_chain=2, **kw))
+    r = CrawlEngine.resume(spark, pages, wd_a, cfg)
     assert r.counters() == ca
     got = {
         (x["link"], x["canonical_json"])

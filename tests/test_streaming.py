@@ -43,6 +43,26 @@ def test_stream_extract_places_incremental(spark, tmp_path):
     # exactly-once: every url appears exactly once
     assert got.select("url").distinct().count() == n2
 
+    # values: a batch dispatch pass over the same pages yields the same rows
+    import pyspark.sql.functions as F
+
+    from google_maps_scraper_spark.operators.extractors import dispatch_udf
+
+    e = dispatch_udf(
+        F.lit("place"), "html", F.lit(None).cast("string"), F.lit(""), "url",
+        F.lit(1786838400000000).cast("long"), F.lit(False),
+        F.lit(None).cast("array<string>"),
+    ).getField("entry")
+    batch = (
+        spark.read.parquet(pages_dir)
+        .filter(F.col("url").contains("/maps/place/"))
+        .select(e.alias("e"))
+        .filter(F.col("e.error").isNull() & F.col("e.valid"))
+    )
+    want = {r[0] for r in batch.select("e.canonical_json").collect()}
+    assert want
+    assert {r[0] for r in got.select("canonical_json").collect()} == want
+
 
 def test_stream_windowed_events(spark, tmp_path):
     """Windowed counts over the events table as a simulated stream match the

@@ -20,7 +20,14 @@ design.  To measure the engine rather than the lone disk, the corpus, the
 state workdir, and spark.local.dir (shuffle scratch) are placed on tmpfs
 (/dev/shm) when available — the single-box stand-in for per-node storage.
 The JSON output also reports a CPU-stage-isolated metric (a pure
-page-extraction pass over the full corpus) alongside end-to-end.
+page-extraction pass over the full corpus) alongside end-to-end, and a
+second table splits each level's crawl into driver-blocking wall seconds
+per engine phase (``CrawlEngine.phase_times``: claim, dispatch, chains,
+persist, snapshot_write, counters, round_total, ...) with each phase's own
+scaling ratio — the phase whose ratio sits far below the CPU-probe ceiling
+is the one that stops the end-to-end number from scaling.  Read a ratio
+together with both absolute walls: cutting a level-equal fixed cost raises
+it, cutting a volume cost lowers it while making both levels faster.
 
 Usage: python tools/bench_scaling.py [n_seeds] [places_per_serp]
 Prints a markdown table and one machine-readable JSON line (last line).
@@ -200,14 +207,6 @@ def run_level(cpus: int, pages_path: str, workroot: str, seeds_path: str) -> Non
             # review-RPC chain phase (GMS_SCALING_EXTRA_REVIEWS=1): exercises
             # the payload-bearing reviews continuation jobs at bench scale
             extra_reviews=os.environ.get("GMS_SCALING_EXTRA_REVIEWS") == "1",
-            # with the url-bucketed pages table the big-claim rounds take the
-            # storage-partitioned shuffled-hash join (only slim claim keys
-            # shuffle; no serial driver broadcast build), so the broadcast
-            # path is reserved for genuinely small claims.  GMS_BROADCAST_CLAIM
-            # remains the A/B knob (4000000 restores the round-3 shape).
-            broadcast_claim_rows=int(
-                os.environ.get("GMS_BROADCAST_CLAIM", "100000")
-            ),
         ),
     )
     eng.seed_from_queries(seeds)
@@ -245,6 +244,7 @@ def run_level(cpus: int, pages_path: str, workroot: str, seeds_path: str) -> Non
         "extract_stage_parsed": probe_post["parsed"],
         "extract_stage_pages_per_sec": best_probe,
         "counters": {k: v for k, v in counters.items() if isinstance(v, int)},
+        "phases": {k: round(v, 2) for k, v in eng.phase_times.items()},
     }))
 
 
@@ -332,7 +332,7 @@ def main() -> None:
                               "frontier_urls_scheduled_per_sec", "counters",
                               "crawl_probe_pre", "crawl_probe_post",
                               "loadavg_pre_crawl", "loadavg_post_crawl",
-                              "crawl_cpu"):
+                              "crawl_cpu", "phases"):
                         best[k] = r[k]
                 if r["extract_stage_pages_per_sec"] > best["extract_stage_pages_per_sec"]:
                     for k in ("extract_stage_sec", "extract_stage_pages",
@@ -375,6 +375,17 @@ def main() -> None:
             f"| local[{r['cpus']}] | {r['elapsed_sec']} | {r['results']} "
             f"| {r['pages_extracted_per_sec']} | {r['frontier_urls_scheduled_per_sec']} |"
         )
+    # per-phase driver-blocking wall, heaviest phase at the low level first
+    phases = sorted({k for r in runs for k in r["phases"]},
+                    key=lambda k: -lo["phases"].get(k, 0.0))
+    print("\n| phase | " + " | ".join(f"local[{r['cpus']}] s" for r in runs)
+          + " | ratio |")
+    print("|---|" + "---|" * (len(runs) + 1))
+    for k in phases:
+        vals = [r["phases"].get(k, 0.0) for r in runs]
+        ratio = vals[0] / vals[-1] if vals[-1] else float("inf")
+        print(f"| {k} | " + " | ".join(f"{v:.2f}" for v in vals)
+              + f" | {ratio:.2f}x |")
     print(f"\nscaling efficiency (extract): {eff_extract:.3f}")
     print(f"scaling efficiency (schedule): {eff_sched:.3f}")
     print(f"scaling efficiency (cpu extraction stage): {eff_stage:.3f}")

@@ -82,9 +82,6 @@ def run_case(pages_path: str, workroot: str, seeds_path: str, tag: str) -> None:
         spark, pages, wd,
         CrawlConfig(
             extract_email=True, max_rounds=16, checkpoint_every=100,
-            broadcast_claim_rows=int(
-                os.environ.get("GMS_BROADCAST_CLAIM", "100000")
-            ),
             # budget high enough to claim every eligible job each round: the
             # per-(host,salt) windows run for real, but both corpora take the
             # same number of rounds — elapsed is apples-to-apples
