@@ -16,6 +16,34 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "release_cached", "stop_spark"]
 
+# HotSpot's four tier-4 (C2) thresholds, each 5x the JDK 17 default
+# (5000 / 600 / 15000 / 40000).  A crawl round or a catalog query is a burst
+# of short Spark jobs, and at the defaults C2 spends most of its time on code
+# a short run never gets back: one catalog run made 3 286 C2 compiles, 1 713
+# of them JDK methods (java.lang.invoke, j.u.concurrent, String, HashMap,
+# zip, object streams), most of the rest Spark's planning and codegen
+# machinery (scala, janino, catalyst, ANTLR, ASM) and only 68 methods of
+# Spark-generated classes.  C1 (tiers 0-3) keeps its timing, so start-up and
+# warm-up behave as before; only methods that stay hot five times longer
+# reach C2, and at sf0.1 the data path still does.
+# Interleaved two-checkout A/B, 4-core host, JDK 17 (medians, default -> 5x;
+# perfbench --seconds 10, 10 pairs per workload; bench.py at sf0.1 with
+# local[4], 3 pairs):
+#   perfbench catalog pass_cpu_s               34.0 -> 24.5 s
+#   perfbench crawl_polite_resume pass_cpu_s   60.0 -> 53.2 s
+#   bench.py sf0.1 catalog+crawl_total         156.2 -> 152.7 s
+#   bench.py sf0.1 crawl_e2e                   17.5 -> 17.0 s
+# Rejected: 10x thresholds (catalog pass_cpu_s -31%, but sf0.1 total
+# 159.1 -> 171.5 s, +7.8%), 30x (sf0.1 +10%) and C1 only
+# (-XX:TieredStopAtLevel=1, sf0.1 +44%) cut short-run CPU further but give
+# the long run's C2 code back; -XX:CompileThresholdScaling=10 also scales C1
+# and slowed a crawl set-up; -XX:CICompilerCount=2 only defers C2 work past
+# the window; -XX:Tier4LoadFeedback=1 changed nothing.
+_JIT_OPTS = (
+    "-XX:Tier4InvocationThreshold=25000 -XX:Tier4MinInvocationThreshold=3000"
+    " -XX:Tier4CompileThreshold=75000 -XX:Tier4BackEdgeThreshold=200000"
+)
+
 # sessions already warmed: get_spark() returning an existing session must
 # not pay the warm-up jobs again
 _WARMED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
@@ -35,6 +63,7 @@ def get_spark(
         except ValueError:
             shuffle_partitions = 32
 
+    java_opts = f"{os.environ.get('SPARK_GC_OPTS', '-XX:+UseG1GC')} {_JIT_OPTS}"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -55,15 +84,11 @@ def get_spark(
         # crawl total, with crawl_e2e itself at 14.2 s under G1 (best
         # recorded).  GC pause totals were 8.8 s (Parallel) vs 1.8 s (G1);
         # the rest of the gap is mutator throughput during the interpreted/
-        # Arrow map stages.  Override with SPARK_GC_OPTS to re-measure.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GC_OPTS", "-XX:+UseG1GC"),
-        )
-        .config(
-            "spark.executor.extraJavaOptions",
-            os.environ.get("SPARK_GC_OPTS", "-XX:+UseG1GC"),
-        )
+        # Arrow map stages.  SPARK_GC_OPTS replaces the collector string
+        # only (_JIT_OPTS is always appended); perfbench/run.py clears it,
+        # so a collector A/B changes this default in two checkouts.
+        .config("spark.driver.extraJavaOptions", java_opts)
+        .config("spark.executor.extraJavaOptions", java_opts)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -1,4 +1,5 @@
-"""release_cached drops leaked localCheckpoint blocks between queries.
+"""Session defaults reach the JVM, and release_cached drops leaked
+localCheckpoint blocks between queries.
 
 Catalog operators localCheckpoint shared intermediates; the returned
 DataFrame references those blocks so the operator cannot unpersist them
@@ -7,9 +8,25 @@ bench.py and tools/check_oracles.py — these tests pin that it (a) empties
 the persistent-RDD map and (b) leaves already-consumed results usable.
 """
 
+from py4j.java_gateway import get_java_class
 from pyspark.sql import functions as F
 
-from google_maps_scraper_spark.session import release_cached
+from google_maps_scraper_spark.session import _JIT_OPTS, release_cached
+
+
+def test_jit_defaults_reach_the_driver_jvm(spark):
+    # Spark adds -XX:+IgnoreUnrecognizedVMOptions to the driver's options,
+    # so a mistyped flag would be dropped silently: read back what HotSpot
+    # actually runs with.
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        get_java_class(jvm.com.sun.management.HotSpotDiagnosticMXBean)
+    )
+    flags = [opt.removeprefix("-XX:").split("=") for opt in _JIT_OPTS.split()]
+    assert len(flags) == 4
+    for name, value in flags:
+        assert bean.getVMOption(name).getValue() == value, name
+    assert bean.getVMOption("UseG1GC").getValue() == "true"
 
 
 def _n_persistent(spark) -> int:
