@@ -52,10 +52,10 @@ seed/resume and checked at publish) plus that rename (two engines on one
 workdir → the stale one aborts with ConcurrentWriterError;
 tests/test_concurrent_writers.py).  Snapshot TIME TRAVEL (≙ Iceberg
 rollback_to_snapshot) via ``resume(from_round=N)`` and keep-last-K retention
-(≙ expire_snapshots) via ``CrawlConfig.keep_rounds`` close the remaining
-table-format gap (tests/test_time_travel.py).  Swapping the store for
-Iceberg tables (MERGE INTO frontier/seen, snapshot ids in the manifest)
-changes only the store.
+(≙ expire_snapshots, a store maintenance action run while no engine is
+writing) close the remaining table-format gap (tests/test_time_travel.py).
+Swapping the store for Iceberg tables (MERGE INTO frontier/seen, snapshot
+ids in the manifest) changes only the store.
 """
 
 from __future__ import annotations
@@ -121,18 +121,6 @@ class CrawlConfig:
     # most the rounds whose commits were still in flight — resume then
     # deterministically re-runs them.
     # finalize()/run() always join and commit the final round.
-    keep_rounds: int | None = None
-    # snapshot retention: keep the last K round NUMBERS — after each commit
-    # of round R (on the checkpoint thread) round dirs numbered below
-    # R-K+1 are pruned, so with checkpoint_every > 1 fewer than K committed
-    # dirs survive.  None keeps every round — full time-travel history
-    # (≙ Iceberg snapshot retention / expire_snapshots; resume(from_round=N)
-    # targets any retained round).  K < 2 acts as 2: the previous round's
-    # parquet can back live DataFrames until the next commit completes.
-    # NB retention interacts with the delta log: a commit whose chain would
-    # reference a dir older than the window COMPACTS that table first (full
-    # rewrite), so aggressive retention trades away O(delta) commit cost —
-    # keep_rounds well above _COMPACT_CHAIN keeps both.
     seen_bloom: bool = False
     # opt-in Bloom accelerator in front of the exact seen anti-join: a
     # broadcast filter (per-partition shards, treeReduce-merged, maintained
@@ -370,7 +358,6 @@ class CrawlEngine:
         # their multi-KB payloads) stop riding every round's checkpoint.
         self._term_lazy: list[DataFrame] = []  # unflushed lazy term deltas
         self._term_lazy_rows = 0               # upper-bound row estimate
-        self._live_parquet_rooted = False      # live set backed by a round dir
         # The seen set is append-only too: immutable per-round admission
         # segments, each materialized once (the seen analog of
         # _frontier_done); ``seen`` unions them on read.
@@ -562,21 +549,21 @@ class CrawlEngine:
         """Root the state at the given tables and durable chain (seed,
         resume; no commit in flight): nothing lazy, nothing since-durable,
         nothing captured, the writer's chain at ``chain`` / ``totals`` with
-        ``parent`` as the last committed round, and an empty Bloom filter."""
+        ``parent`` as the last committed snapshot id (-1: none; else it
+        holds the current round), and an empty Bloom filter."""
         self._frontier = live
         self._frontier_done = [term]
         self._term_lazy = []
         self._term_lazy_rows = 0
         self._term_since_durable = []
-        self._live_parquet_rooted = False
         self._seen_segs = seen_segs
         self._seen_since_durable = []
         self._results_base = results
         self._results_new = []
         self._cap_heads = {"seen": 0, "results": 0, "term": 0}
         self._rows_since = {"seen": 0, "results": 0, "term": 0}
-        self._wlog, self._wtotals = chain, totals
-        self._wparent = self._durable_round = parent
+        self._wlog, self._wtotals, self._wparent = chain, totals, parent
+        self._durable_round = self.round if parent >= 0 else -1
         self._ckpt_failed = None
         self._counters_from_write = None
         self._bloom = None
@@ -630,14 +617,7 @@ class CrawlEngine:
             self._term_lazy.append(term)
             self._term_since_durable.append(term)
             self._term_lazy_rows += term_rows
-        flush = self._term_lazy and (
-            self._term_lazy_rows >= _TERM_FLUSH_ROWS
-            # a delta built over a parquet-rooted live set must not stay
-            # lazy past this persist: keep_rounds retention may prune the
-            # round dir it references (the same dangling-file hazard the
-            # segment re-root logic guards against)
-            or self._live_parquet_rooted
-        )
+        flush = self._term_lazy and self._term_lazy_rows >= _TERM_FLUSH_ROWS
         tables = {"frontier": (self._frontier, n)}
         seen_obs = Observation()
         if seen is not None:
@@ -657,7 +637,6 @@ class CrawlEngine:
                 for name, (df, k) in tables.items()
             }
             self._frontier = self._reset_stats(fs["frontier"].result())
-            self._live_parquet_rooted = False  # live now on fresh blocks
             if "seen_delta" in fs:
                 # seen admissions are self-referential lineage (each delta is
                 # anti-joined against the union of all earlier ones), so a
@@ -805,9 +784,12 @@ class CrawlEngine:
     # snapshot and the running row totals.  Per-commit I/O is O(delta), not
     # O(total state) — the property that makes per-round durability
     # affordable at a 10^10-row frontier.  Chains are bounded by compaction
-    # (_COMPACT_CHAIN, ≙ rewrite_data_files); retention (cfg.keep_rounds,
-    # ≙ expire_snapshots) prunes snapshots outside the window, forcing
-    # compaction first so the surviving chain is self-contained.
+    # (_COMPACT_CHAIN, ≙ rewrite_data_files).  The engine never prunes:
+    # retention is the store's expire_snapshots, run while no engine is
+    # writing, so every parquet dir a live DataFrame reads outlives the run.
+    # A store.rewrite_data_files() between runs takes the next snapshot id
+    # without advancing the crawl, so round R commits as snapshot id
+    # max(R, last committed id + 1); manifests record the crawl round.
     #
     # The engine owns only this policy; ``self.store`` owns the layout and
     # the publish.  A commit stages every table and the manifest in a
@@ -910,12 +892,10 @@ class CrawlEngine:
         append snapshot's manifest list + summary).  ``store.commit`` owns
         the layout and the atomic publish.  Compaction (≙
         rewrite_data_files) triggers when the chain would exceed
-        ``_COMPACT_CHAIN`` legs or reference a round the retention window
-        is about to expire.  Returns the commit record the join point
+        ``_COMPACT_CHAIN`` legs.  Returns the commit record the join point
         applies."""
         rnd = cap["round"]
-        keep = self.cfg.keep_rounds
-        cutoff = rnd - max(int(keep), 2) + 1 if keep is not None else None
+        snap = max(rnd, self._wparent + 1)
         n = self._state_partitions()
 
         # counters ride the writes (≙ the exiter's incremental counting,
@@ -936,12 +916,7 @@ class CrawlEngine:
         for t in ("seen", "results", "term"):
             prev, deltas = self._wlog[t], cap["deltas"][t]
             grown = len(prev) + (1 if deltas else 0)
-            compact = bool(prev) and (
-                grown > _COMPACT_CHAIN
-                or (cutoff is not None
-                    and self.store.references_before(prev, cutoff))
-            )
-            if compact:
+            if prev and grown > _COMPACT_CHAIN:
                 df, parts = cap["full"][t], n
                 actions[t] = "compact"
             elif deltas:
@@ -1026,21 +1001,16 @@ class CrawlEngine:
             }
 
         m = self.store.commit(
-            rnd, writes, manifest, self._writer_token,
+            snap, writes, manifest, self._writer_token,
             None if bloom_bytes is None else {"bloom.bin": bloom_bytes},
         )
-        # retention (keep-last-K): prune rounds older than the window unless
-        # the NEW chain still references them (the compaction trigger above
-        # makes the new chain self-contained within the window, so the
-        # reference check is a belt-and-suspenders guard).  rnd is now the
-        # commit point; the writes above already consumed any parquet the
-        # captured deltas referenced, so pruning here cannot starve them.
-        if cutoff is not None:
-            self.store.prune_before(cutoff, m["chain"])
         # advance the writer-owned chain state for the NEXT queued commit
         # (manifest() copies it before extending, so sharing is safe)
-        self._wlog, self._wtotals, self._wparent = m["chain"], m["totals"], rnd
-        return {"round": rnd, "counters": m["counters"], "marks": cap["marks"]}
+        self._wlog, self._wtotals, self._wparent = m["chain"], m["totals"], snap
+        return {
+            "round": rnd, "snapshot": snap, "counters": m["counters"],
+            "marks": cap["marks"],
+        }
 
     def _checkpoint_async(self) -> None:
         """Submit the durable DELTA commit of the current state and return —
@@ -1056,15 +1026,7 @@ class CrawlEngine:
         # pipeline is already at depth — an unconditional join here makes
         # the driver's round-end wait the scaling limiter
         self._drain_done_checkpoints()
-        depth = _CKPT_INFLIGHT
-        keep = self.cfg.keep_rounds
-        if keep is not None and int(keep) < depth + 2:
-            # tight retention: a lazily-applied driver view could outlive a
-            # pruned round dir, so degrade to depth 1 (join-before-submit)
-            # instead of widening the prune window past what the user asked
-            # to keep
-            depth = 1
-        self._join_pending_checkpoint(depth)
+        self._join_pending_checkpoint(_CKPT_INFLIGHT)
         if self._ckpt_pool is None:
             self._ckpt_pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="gms-ckpt"
@@ -1080,10 +1042,10 @@ class CrawlEngine:
         """Fold a successful commit record into driver state: advance the
         durable mark, keep the write-observed counters, drop the covered prefix
         of every since-durable list, and re-root the durably-logged results
-        at the committed chain parquet.  Marks are RELATIVE counts and
-        records are applied in commit order, so the head slice always drops
-        exactly the entries that commit captured (entries captured by
-        still-pending commits remain at the new head)."""
+        at the committed snapshot's chain parquet.  Marks are RELATIVE
+        counts and records are applied in commit order, so the head slice
+        always drops exactly the entries that commit captured (entries
+        captured by still-pending commits remain at the new head)."""
         self._durable_round = rec["round"]
         self._counters_from_write = (rec["round"], rec["counters"])
         m = rec["marks"]
@@ -1092,7 +1054,7 @@ class CrawlEngine:
         self._results_new = self._results_new[m["results"]:]
         for t in ("seen", "results", "term"):
             self._cap_heads[t] -= m[t]
-        self._results_base = self.store.read("results", rec["round"])
+        self._results_base = self.store.read("results", rec["snapshot"])
 
     def _drain_done_checkpoints(self) -> None:
         """Fold every ALREADY-FINISHED in-flight commit, oldest first, without
@@ -1116,8 +1078,8 @@ class CrawlEngine:
         """Synchronous durable commit (seed round-0 and finalize): write,
         commit, then re-root ALL state at the committed chain (metadata-only
         parquet reads for any later consumer; lineage fully truncated).
-        Commits stop here, so chain-parquet views cannot dangle under
-        retention — the commit point is never pruned."""
+        Nothing prunes a snapshot while an engine writes, so these views
+        stay readable for the rest of the run."""
         self._join_pending_checkpoint()
         rec = self._write_snapshot(
             self._capture_commit(),
@@ -1125,11 +1087,9 @@ class CrawlEngine:
         )
         self._apply_commit(rec)
         # the live table holds exactly the NEW rows; terminal segments keep
-        # their existing materialized blocks (block-backed segments cannot
-        # dangle if a later resume's retention prunes this snapshot)
-        self._frontier = self.store.read("frontier", rec["round"])
-        self._live_parquet_rooted = True
-        self._seen_segs = [self.store.read("seen", rec["round"])]
+        # their existing materialized blocks
+        self._frontier = self.store.read("frontier", rec["snapshot"])
+        self._seen_segs = [self.store.read("seen", rec["snapshot"])]
         self._seen_since_durable = []
 
     @classmethod
@@ -1146,11 +1106,14 @@ class CrawlEngine:
         so it is never read).
 
         ``from_round`` is snapshot TIME TRAVEL (≙ Iceberg
-        ``rollback_to_snapshot``): resume from any RETAINED older round.
-        Rounds newer than the target are a now-divergent lineage — the
-        store prunes them before any new work, so later commits (target+1,
-        ...) replay forward deterministically and the commit point only
-        moves forward."""
+        ``rollback_to_snapshot``): resume from any RETAINED older snapshot.
+        It names a snapshot id (a round dir), which equals the crawl round
+        that committed it unless a ``rewrite_data_files`` compaction came
+        earlier; the crawl round itself is restored from the manifest.
+        Snapshots newer than the target are a now-divergent lineage — the
+        store prunes them before any new work, so later commits replay
+        forward deterministically and the commit point only moves
+        forward."""
         eng = cls(spark, pages, workdir, config)
         store = eng.store
         if store.current() is None:
@@ -1166,9 +1129,10 @@ class CrawlEngine:
         at = store.current()
         if not store.is_resumable(at):
             raise ValueError(
-                f"round {at}'s chain references a round that retention has "
-                "pruned — this snapshot is no longer resumable (pick a newer "
-                "round or disable keep_rounds)"
+                f"snapshot {at}'s chain references a round dir that no "
+                "longer exists — this snapshot is not resumable (the store's "
+                "expire_snapshots never drops a dir a retained snapshot "
+                "references; pick a newer snapshot)"
             )
         manifest = store.manifest(at)
         eng.round = manifest["round"]
@@ -1186,39 +1150,29 @@ class CrawlEngine:
             stamped = eng._stamp_url_cols(restored)
             restored = stamped.filter(F.col("status") == STATUS_NEW)
             denied = stamped.filter(F.col("status") != STATUS_NEW)
-        # terminal history comes from the manifest's term chain.  Chain dirs
-        # are immutable but PRUNABLE when keep_rounds retention is active, so
-        # that configuration copies the restored segments into block-manager
-        # blocks once; without retention the free parquet views are safe
-        # (nothing ever prunes a referenced dir).
+        # terminal history and the seen set are free parquet views over the
+        # manifest's chain: its dirs are immutable, and nothing prunes them
+        # while the engine writes
         eng._cum_claimed = sum(manifest["totals"]["term"].values())
         # admissions ≈ the seen-set total (every admitted URL is recorded)
         eng._cum_admitted = int(manifest["totals"].get("seen", 0))
-        n = eng._state_partitions()
-
-        def _root(df):
-            if eng.cfg.keep_rounds is None:
-                return df
-            return eng._ckpt(df.coalesce(n))
-
         eng._root_state(
-            restored, _root(store.read("term", at)),
-            [_root(store.read("seen", at))], store.read("results", at),
+            restored, store.read("term", at), [store.read("seen", at)],
+            store.read("results", at),
             {t: list(p) for t, p in manifest["chain"].items()},
-            manifest["totals"], eng.round,
+            manifest["totals"], at,
         )
-        eng._live_parquet_rooted = True
         if denied is not None:
+            n = eng._state_partitions()
             dseg = eng._ckpt(denied.coalesce(n))
             eng._frontier_done.append(dseg)
             eng._term_since_durable.append(dseg)
-            # the restored live view now depends on a re-stamp plan over the
-            # round dir's parquet; materialize it too so a later retention
-            # prune cannot dangle it mid-run
+            # materialize the re-stamped live view once, so the first claim
+            # and every later persist read blocks instead of re-running the
+            # stamp over the snapshot's parquet
             eng._frontier = eng._reset_stats(
                 eng._ckpt(eng._frontier.coalesce(n))
             )
-            eng._live_parquet_rooted = False
         bloom = store.blob(at, "bloom.bin") if manifest.get("bloom") else None
         if bloom is not None:
             from ..operators.bloom import BloomFilter

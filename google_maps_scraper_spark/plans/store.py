@@ -29,9 +29,13 @@ only with its manifest inside — and a rename onto an existing round dir
 fails (ENOTEMPTY) instead of replacing it, so a racing writer gets
 ``ConcurrentWriterError`` and no commit path ever removes a round dir.  The
 commit point is the highest round dir holding a manifest; there is no
-pointer file to flip.  Pruning (retention, expiry, rollback) renames each
-victim aside before deleting it, so a crash mid-prune never leaves a
-half-deleted dir that looks committed.
+pointer file to flip.  Pruning (expiry, rollback) renames each victim
+aside before deleting it, so a crash mid-prune never leaves a half-deleted
+dir that looks committed.
+
+Retention has one path, run while no engine is writing (as in Iceberg,
+writers never prune): ``rewrite_data_files()`` compacts the head into the
+next snapshot id, keeping its crawl round, then ``expire_snapshots(k)``.
 
 Reference parity: the reference keeps durable job state behind the
 ``JobProvider``/``JobRepository`` interfaces (postgres/provider.go:23,
@@ -53,7 +57,7 @@ totals(at)              manifest["totals"]                  summary "total-recor
 is_resumable(at)        chain paths all present             snapshot not yet expired
 rollback_to(at)         prune newer dirs, newest first      manageSnapshots().rollbackTo(id)
 expire_snapshots(k)     prune unreferenced old round dirs   expireSnapshots().retainLast(k)
-rewrite_data_files()    compacted full rewrite, new round   rewriteDataFiles() compaction action
+rewrite_data_files()    compacted full rewrite, next id     rewriteDataFiles() compaction action
 take_over()/fencing     WRITER token + rename-no-replace    optimistic-concurrency commit conflict
 commit() (engine)       staged dir + one atomic rename      newAppend().appendFile(...).commit()
 =====================  ==================================  =========================================
@@ -98,8 +102,10 @@ def _write_table(df: DataFrame, parts: int, path: str) -> None:
 
 class SnapshotStore(ABC):
     """Abstract snapshot-store seam (see module docstring for the Iceberg
-    mapping).  A snapshot id is the crawl round number that committed it —
-    strictly increasing, like Iceberg's sequence numbers."""
+    mapping).  A snapshot id is the NNNN of its round dir — strictly
+    increasing, like Iceberg's sequence numbers.  The engine commits crawl
+    round R as id R unless a compaction already took it; the manifest's
+    ``round`` is always the crawl round."""
 
     @abstractmethod
     def snapshots(self) -> list[int]:
@@ -144,13 +150,16 @@ class SnapshotStore(ABC):
         (≙ ``table.expireSnapshots().retainLast(k)``).  Refuses (raises
         ValueError) if a retained chain still references an expiring dir —
         run ``rewrite_data_files`` first (Iceberg likewise never deletes
-        files a retained snapshot references)."""
+        files a retained snapshot references).  The one retention routine:
+        run it while no engine is writing."""
 
     @abstractmethod
     def rewrite_data_files(self, expected_token: str | None = None) -> int:
         """Compact every table's chain into a single full rewrite, published
         as a NEW snapshot; returns its id (≙ the ``rewriteDataFiles``
-        compaction action, which also commits a new snapshot).  With
+        compaction action, which also commits a new snapshot).  The crawl
+        state is unchanged: the new manifest keeps the head's round and
+        counters, so a resume from it continues the same crawl.  With
         ``expected_token``, the commit is conditional on holding the writer
         lease (≙ Iceberg's optimistic-concurrency commit: conflict →
         ``CommitFailedException``)."""
@@ -223,7 +232,7 @@ class ParquetDeltaLogStore(SnapshotStore):
         shutil.rmtree(aside, ignore_errors=True)
 
     def _prune(self, victims: Iterable[int]) -> list[int]:
-        """The one prune routine (retention, expiry, rollback): drops round
+        """The one prune routine (expiry, rollback): drops round
         dirs newest first, so a crash part-way leaves a committed prefix of
         the history whose head is still a resumable snapshot."""
         victims = sorted(victims)
@@ -295,7 +304,7 @@ class ParquetDeltaLogStore(SnapshotStore):
         if not (self._dir(at) / "manifest.json").exists():
             raise ValueError(
                 f"round {at} has no committed snapshot in {self.workdir} "
-                "(pruned by retention, or never durable with "
+                "(dropped by expire_snapshots, or never durable with "
                 "checkpoint_every > 1)"
             )
         # newer rounds are a now-divergent lineage; dropping them IS the
@@ -331,7 +340,7 @@ class ParquetDeltaLogStore(SnapshotStore):
         if cur is None:
             raise ValueError("store has no committed snapshot")
         m = self.manifest(cur)
-        rnd = cur + 1
+        snap = cur + 1
         # admin-path compaction: small fixed writer parallelism is fine (the
         # engine's in-run compaction sizes by state; this runs between
         # crawls)
@@ -349,10 +358,8 @@ class ParquetDeltaLogStore(SnapshotStore):
             chain = {t: [legs[t]] if t in legs else [] for t in _CHAINED}
             return dict(
                 m,
-                round=rnd,
                 parent_round=cur,
                 chain=chain,
-                counters={**m.get("counters", {}), "round": rnd},
                 commit_meta={
                     "actions": {t: "compact" for t in _CHAINED},
                     "appended": {"seen": 0, "results": 0, "term": {}},
@@ -361,8 +368,8 @@ class ParquetDeltaLogStore(SnapshotStore):
                 },
             )
 
-        self.commit(rnd, tables, manifest, expected_token, files)
-        return rnd
+        self.commit(snap, tables, manifest, expected_token, files)
+        return snap
 
     def writer_token(self) -> str | None:
         marker = self.workdir / "WRITER"
@@ -475,15 +482,3 @@ class ParquetDeltaLogStore(SnapshotStore):
         or None if that commit carried none."""
         p = self._dir(at) / name
         return p.read_bytes() if p.exists() else None
-
-    def references_before(self, legs: list[str], cutoff: int) -> bool:
-        """True iff a chain leg lives in a round dir older than ``cutoff``."""
-        return any(self._round_of(p) < cutoff for p in legs)
-
-    def prune_before(self, cutoff: int, chain: dict[str, list[str]]) -> list[int]:
-        """Retention: drop round dirs older than round number ``cutoff``
-        that ``chain`` (the newest commit's) does not reference."""
-        referenced = {self._round_of(p) for ps in chain.values() for p in ps}
-        return self._prune(
-            r for r, _ in self._round_dirs() if r < cutoff and r not in referenced
-        )

@@ -133,36 +133,6 @@ def test_pipeline_overlap_actually_happens(spark, pages_and_seeds, tmp_path_fact
         prev = rnd
 
 
-def test_tight_retention_degrades_to_serial(spark, pages_and_seeds, tmp_path_factory):
-    """keep_rounds smaller than the pipeline window must degrade to the
-    depth-1 join-before-submit behavior (a lazily-applied driver view could
-    otherwise outlive a pruned round dir) — and results stay exact."""
-    pages, seeds = pages_and_seeds
-    wd = str(tmp_path_factory.mktemp("tightkeep"))
-    eng = CrawlEngine(
-        spark, pages, wd,
-        CrawlConfig(extract_email=True, now_micros=NOW, keep_rounds=2),
-    )
-    eng.seed_from_queries(seeds)
-    depths = []
-    for _ in range(64):
-        done = eng.run_round().get("done")
-        depths.append(len(eng._pending_ckpts))
-        if done:
-            break
-    eng.finalize()
-    assert max(depths) <= 1, depths
-
-    wd_ref = str(tmp_path_factory.mktemp("tightref"))
-    ref = CrawlEngine(
-        spark, pages, wd_ref, CrawlConfig(extract_email=True, now_micros=NOW)
-    )
-    ref.seed_from_queries(seeds)
-    ref.run()
-    assert eng.counters() == ref.counters()
-    assert _result_set(eng) == _result_set(ref)
-
-
 def test_failed_commit_is_fail_stop(spark, pages_and_seeds, tmp_path_factory):
     """If commit N fails while commit N+1 is already queued, N+1 must NOT
     publish: its capture assumes N's deltas are in the chain, so publishing

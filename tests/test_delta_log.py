@@ -1,6 +1,6 @@
 """Durable delta-log protocol (round 4): commits write O(delta), manifests
 pin the chain + running totals, compaction bounds chain legs, and a
-retention-broken chain is a loud error.
+broken chain is a loud error.
 
 ≙ Iceberg append snapshots (manifest list + summary counts), rewrite_data_files
 (compaction) and expire_snapshots (retention) — the sandbox ships no
@@ -154,7 +154,7 @@ def test_broken_chain_resume_is_loud(spark, pages_and_seeds, tmp_path_factory):
     }
     assert victims, "multi-round chain must reference an older dir"
     shutil.rmtree(pathlib.Path(wd) / f"round={min(victims):04d}")
-    with pytest.raises(ValueError, match="retention has pruned"):
+    with pytest.raises(ValueError, match="is not resumable"):
         CrawlEngine.resume(spark, pages, wd, cfg)
 
 

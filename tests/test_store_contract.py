@@ -111,9 +111,12 @@ class StoreContractSuite:
         assert _rows(store.read("results", cur)) == before["results"]
 
     def test_rewrite_totals_carried(self, store):
-        cur_totals = store.totals()
+        cur = store.manifest(store.current())
         store.rewrite_data_files()
-        assert store.totals() == cur_totals
+        assert store.totals() == cur["totals"]
+        # a compaction changes no crawl state: same round, same counters
+        new = store.manifest(store.current())
+        assert (new["round"], new["counters"]) == (cur["round"], cur["counters"])
 
     # -- expiry (expireSnapshots) -------------------------------------------
 

@@ -80,22 +80,52 @@ def test_resume_from_round_validation(spark, pages_and_seeds, tmp_path_factory):
         CrawlEngine.resume(spark, pages, wd, CrawlConfig(now_micros=NOW), from_round=99)
 
 
-def test_retention_keeps_last_k(spark, pages_and_seeds, tmp_path_factory):
+def _crawl_rows(eng):
+    """What a crawl decided and when: per-job claim round, admissions,
+    emitted results."""
+    def rows(df, *cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    return (
+        rows(eng.frontier, "job_id", "round_claimed"),
+        rows(eng.seen, "url", "admitting_parent", "round_admitted"),
+        rows(eng.results, "link", "canonical_json", "round_emitted"),
+    )
+
+
+def test_rewrite_expire_resume_keeps_crawl_clock(
+    spark, pages_and_seeds, tmp_path_factory
+):
+    """Retention's one path — ``rewrite_data_files`` then
+    ``expire_snapshots``, run between crawls — changes no crawl state: a
+    crawl resumed from the compacted head claims, admits and emits exactly
+    as an uninterrupted one.  The host budget does not divide by the salt
+    count, so the remainder rotation makes the claim schedule depend on the
+    round number, and a compaction that moved the round clock would show."""
     pages, seeds = pages_and_seeds
+    cfg = CrawlConfig(
+        extract_email=True, now_micros=NOW, host_budget=5, politeness_salts=4
+    )
+    ref = CrawlEngine(spark, pages, str(tmp_path_factory.mktemp("tt-ref")), cfg)
+    ref.seed_from_queries(seeds)
+    ref_counters = ref.run()
+
     wd = str(tmp_path_factory.mktemp("tt-keep"))
-    cfg = CrawlConfig(extract_email=True, now_micros=NOW, keep_rounds=2)
     a = CrawlEngine(spark, pages, wd, cfg)
     a.seed_from_queries(seeds)
-    a.run()
-    assert a.round >= 2
-    rounds_left = sorted(
-        int(d.name.split("=")[1]) for d in pathlib.Path(wd).glob("round=*")
-    )
-    assert rounds_left == [a.round - 1, a.round]
-    # the retained commit point still resumes cleanly
+    a.run_round()
+    a.finalize()
+    store = ParquetDeltaLogStore(spark, wd)
+    head = store.rewrite_data_files()
+    assert store.manifest(head)["round"] == 1
+    assert store.expire_snapshots(keep_last=1) == [0, 1]
+    assert store.snapshots() == [head]
+
     b = CrawlEngine.resume(spark, pages, wd, cfg)
-    assert b.round == a.round
-    # ...and a pruned round is a loud error, not silent corruption
+    assert b.round == 1
+    assert b.run() == ref_counters
+    assert _crawl_rows(b) == _crawl_rows(ref)
+    # an expired snapshot is a loud error, not silent corruption
     with pytest.raises(ValueError, match="no committed snapshot"):
         CrawlEngine.resume(spark, pages, wd, cfg, from_round=0)
 
