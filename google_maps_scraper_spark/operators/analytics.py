@@ -87,7 +87,14 @@ def ordered(df: DataFrame, *cols) -> DataFrame:
     are bounded (≤ ~25k rows), so one round-robin exchange into a single
     partition plus an in-partition sort yields the identical total order
     with the child executed exactly once.  Only for driver-bounded outputs;
-    a genuinely large sorted result still wants rangepartitioning."""
+    a genuinely large sorted result still wants rangepartitioning.
+
+    Contract: ``ordered`` is the LAST operator of a query.  The total order
+    lives only in the one partition its sort writes: a later shuffle (a
+    join, an aggregate, another repartition) discards it, and every
+    operator above it runs in a single task.  ``tests/test_plan_guard.py``
+    checks every catalog plan: each ``repartition(1)`` exchange feeds a
+    Sort and nothing else."""
     return df.repartition(1).sortWithinPartitions(*cols)
 
 
@@ -2175,73 +2182,11 @@ _URL_CANON_CTES = f"""
 """
 
 
-def _url_canonicalize_hof(d):
-    """The retired JVM withColumn/regex formulation of the canonicalizer —
-    kept as the value reference for the Arrow fast path (r6): once
-    CollapseProject inlines the dependent withColumns, every downstream
-    use re-embeds its upstream regexes, and the resulting expression tree
-    made this the catalog's single heaviest Janino/JIT compile (≈3 s of
-    first-execution wall for ~5 ms of actual regex work)."""
-    return (
-        d.select("doc_id", F.expr(_URL_RAW_SQL).alias("url_raw"))
-        .withColumn(
-            "scheme", F.expr("lower(regexp_extract(url_raw, '^([A-Za-z]+)://', 1))")
-        )
-        .withColumn("rest", F.expr("substr(url_raw, instr(url_raw, '://') + 3)"))
-        .withColumn("hostport", F.expr("regexp_extract(rest, '^[^/?#]*', 0)"))
-        .withColumn("pathqf", F.expr("substr(rest, length(hostport) + 1)"))
-        .withColumn(
-            "host0", F.expr("regexp_replace(lower(hostport), ':[0-9]+$', '')")
-        )
-        .withColumn(
-            "port", F.expr("regexp_extract(lower(hostport), ':([0-9]+)$', 1)")
-        )
-        .withColumn("path0", F.expr("regexp_extract(pathqf, '^[^?#]*', 0)"))
-        .withColumn("query0", F.expr("regexp_extract(pathqf, '[?]([^#]*)', 1)"))
-        .withColumn(
-            "host",
-            F.expr(
-                "CASE WHEN host0 LIKE 'www.%' THEN substr(host0, 5) ELSE host0 END"
-            ),
-        )
-        .withColumn(
-            "portpart",
-            F.expr(
-                "CASE WHEN port = '' THEN ''"
-                " WHEN scheme = 'http' AND port = '80' THEN ''"
-                " WHEN scheme = 'https' AND port = '443' THEN ''"
-                " ELSE ':' || port END"
-            ),
-        )
-        .withColumn(
-            "path",
-            F.expr(
-                "CASE WHEN regexp_replace(path0, '/+$', '') = '' THEN '/'"
-                " ELSE regexp_replace(path0, '/+$', '') END"
-            ),
-        )
-        .withColumn(
-            "qcanon",
-            F.expr(
-                "array_join(array_sort(filter(split(query0, '&'),"
-                " x -> x != '' AND substr(x, 1, 4) != 'utm_')), '&')"
-            ),
-        )
-        .select(
-            "doc_id",
-            "url_raw",
-            F.expr(
-                "scheme || '://' || host || portpart || path"
-                " || CASE WHEN qcanon = '' THEN '' ELSE '?' || qcanon END"
-            ).alias("url_canon"),
-        )
-    )
-
-
 def _canon_and_surt(url_raw: str) -> tuple[str, str]:
     """Pure-Python canonicalization + SURT key, rule-for-rule identical to
-    the JVM chains (``_url_canonicalize_hof`` / frontier_surt_key's
-    formulation): Java and Python regexes agree on these ASCII-only
+    the JVM withColumn/regex chain (kept as ``_url_canonicalize_hof_reference``
+    in tests/test_pipeline_ops_r4f.py) and frontier_surt_key's
+    formulation: Java and Python regexes agree on these ASCII-only
     character-class patterns, Spark's ``split`` keeps empty tokens like
     ``str.split``, and string sort orders agree on ASCII."""
     m = _RE_SCHEME.search(url_raw)
@@ -2301,8 +2246,8 @@ def frontier_url_canon_base(spark, sf) -> DataFrame:
     composition base for the canonicalize / SURT / robots / blocklist
     operators.  One Arrow-vectorized map replaces the collapsed-Project
     regex chain whose inlined expression tree dominated first-execution
-    compile time (guide §4.2; parity pinned against the retained JVM
-    formulation by tests/test_frontier_ops.py)."""
+    compile time (guide §4.2; parity pinned against the JVM formulation
+    by tests/test_pipeline_ops_r4f.py)."""
 
     @F.pandas_udf("struct<url_canon: string, surt_key: string>")
     def _canon(url_raw: pd.Series) -> pd.DataFrame:
@@ -2344,8 +2289,8 @@ def frontier_url_canonicalize(spark, sf):
     sensitive; hosts are not).
 
     r6: one Arrow-vectorized map (``frontier_url_canon_base``) — the JVM
-    withColumn chain is retained as ``_url_canonicalize_hof`` and pinned
-    value-equal by test; the DuckDB oracle re-derives the same
+    withColumn chain is kept in tests/test_pipeline_ops_r4f.py as its
+    value reference; the DuckDB oracle re-derives the same
     normalization from the same six synthesized mess patterns, proving
     rule-for-rule parity."""
     return ordered(

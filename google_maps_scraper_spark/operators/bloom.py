@@ -1,20 +1,24 @@
-"""Distributed Bloom filter for the URL-seen set.
+"""Distributed Bloom filter for a URL-seen set.
 
 The reference's seen-set is an in-process ``map[uint64]struct{}``
-(deduper/hashmap.go:11-42).  At 10^10-URL scale the exact set lives in the
-``seen`` table; this Bloom is the broadcast *accelerator* in front of it
-(BASELINE.json north_star: "distributed Bloom/cuckoo URL-seen set, broadcast
-+ per-partition shards, merged via treeAggregate"):
+(deduper/hashmap.go:11-42).  At 10^10-URL scale the crawl engine keeps the
+exact set in the ``seen`` table and probes it with an exact anti-join every
+round, with no filter in front: that probe scans the seen table either way,
+so a pre-filter only shrank its broadcast side and measured slower on every
+corpus tried (ROADMAP.md, direction 5).  This module keeps the distributed
+build (BASELINE.json north_star: "distributed Bloom/cuckoo URL-seen set,
+broadcast + per-partition shards, merged via treeAggregate"), whose OR-fold
+the catalog's ``seen_bloom_build`` query mirrors:
 
   * build: per-partition byte shards via ``mapPartitions``, OR-merged with
     ``treeReduce`` (log-depth merge, never a driver-side concat of all
     shards);
-  * maintain: each crawl round builds a delta Bloom over just that round's
-    newly admitted URLs and ORs it into the running filter driver-side —
-    the full seen table is never rescanned;
+  * maintain: a delta filter built over only the new keys, with the running
+    filter's geometry (``proto``), ORs into it driver-side — the full set
+    is never rescanned;
   * probe: broadcast the bytes; a vectorized pandas UDF marks candidates
-    ``might_be_seen``.  False positives fall through to the exact anti-join;
-    false negatives are impossible, so dedup decisions stay exact.
+    ``might_be_seen``.  False positives must fall through to an exact
+    check; false negatives are impossible.
 
 Hashing: k indexes from two independent 64-bit halves of ``blake2b(url)``
 (double hashing, Kirsch–Mitzenmacher) — deterministic across processes, no

@@ -11,8 +11,8 @@ tokenizer, each exact-integer/string so the DuckDB comparison is bit-exact:
   reproducible language-mix downsampler (a ``rand()`` sample reshuffles on
   every plan change; a salted-hash rank never does, and largest-remainder
   makes the per-stratum counts sum EXACTLY to the target);
-* a distributed Bloom-filter build — the crawl engine's URL-seen sketch
-  (``plans/crawl.py`` broadcast Bloom + per-partition shards) surfaced as a
+* a distributed Bloom-filter build — the URL-seen sketch of
+  ``operators/bloom.py`` (per-partition shards, OR-merged) surfaced as a
   catalog query: per-word OR-folds are exposed as rows so the oracle
   verifies every bit, not just a cardinality.
 
@@ -205,18 +205,18 @@ def _bloom_oracle() -> str:
 
 @_q("seen_bloom_build", _bloom_oracle())
 def seen_bloom_build(spark, sf):
-    """Distributed Bloom-filter build over document content — the crawl
-    engine's URL-seen sketch (``plans/crawl.py`` broadcast Bloom over
-    canonical-URL hashes, ≙ ``deduper/hasher.go``) surfaced as a catalog
-    query with every WORD of the filter exposed as a row, so the oracle
-    verifies the exact bit pattern, not a summary statistic.
+    """Distributed Bloom-filter build over document content — the URL-seen
+    sketch of ``operators/bloom.py`` (≙ ``deduper/hasher.go``'s hashed
+    seen-set) surfaced as a catalog query with every WORD of the filter
+    exposed as a row, so the oracle verifies the exact bit pattern, not a
+    summary statistic.
 
     k={K} salted md5 positions per key spray into m={M} bits grouped as
     {W}-bit words; the build is one explode (k rows per key, map-side) and
     one groupBy on word index whose ``bit_or`` partial-aggregates BEFORE
     the exchange — at most m/{W} rows ever cross the wire per partition,
     regardless of corpus size.  That map-side-combine OR-fold is exactly
-    how the engine's per-partition Bloom shards merge via treeAggregate;
+    how ``operators/bloom.py``'s per-partition shards merge via treeReduce;
     at 10^10 keys only m grows (and the same plan holds — the shuffle
     stays bounded by filter size, not key count)."""
     d = load(spark, sf, "documents")

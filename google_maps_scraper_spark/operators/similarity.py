@@ -80,27 +80,6 @@ def _dot(a, b):
     )
 
 
-def lsh_signature_hof(
-    df: DataFrame, n_planes: int = N_PLANES, dim: int = EMB_DIM
-) -> DataFrame:
-    """JVM higher-order-function formulation of ``lsh_signature`` — kept as
-    the value reference for the vectorized default (HOFs run interpreted,
-    outside whole-stage codegen, so n_planes×dim lambda evaluations per row
-    made this the emb family's hottest shared expression)."""
-    w = plane_weights(n_planes, dim)
-    bits = []
-    for p in range(n_planes):
-        arr = F.array(*[F.lit(float(x)) for x in w[p]])
-        dot = _dot(F.col("embedding"), arr)
-        bits.append(
-            F.when(dot > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
-        )
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return df.withColumn("lsh_bucket", bucket)
-
-
 def lsh_signature(
     df: DataFrame, n_planes: int = N_PLANES, dim: int = EMB_DIM
 ) -> DataFrame:
@@ -113,7 +92,8 @@ def lsh_signature(
     STRICTLY left-to-right via ``np.cumsum`` (a sequential prefix sum, the
     same IEEE addition order as ``F.aggregate``'s left fold), so the sign
     of a near-zero dot can never flip between engines.  Pinned value-equal
-    to ``lsh_signature_hof`` by tests/test_dedup_similarity.py."""
+    to the JVM fold (``_lsh_signature_hof_reference``) by
+    tests/test_dedup_similarity.py."""
     import pandas as pd
 
     import numpy as np
@@ -577,21 +557,6 @@ def _py_dot(a, b) -> float:
     return s
 
 
-def ivf_cells_hof(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """JVM higher-order-function formulation of ``ivf_cells`` — kept as the
-    value reference for the vectorized default (nlist×dim interpreted
-    lambda evaluations per row otherwise)."""
-    import math
-
-    scores = []
-    for c in centroids:
-        nrm = math.sqrt(_py_dot(c, c))
-        arr = F.array(*[F.lit(float(v)) for v in c])
-        scores.append(_dot(F.col("embedding"), arr) / F.lit(nrm))
-    sc = F.array(*scores)
-    return emb.withColumn("cell", F.array_position(sc, F.array_max(sc)))
-
-
 def ivf_cells(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Assign each embedding to its nearest coarse-quantizer cell (IVF-Flat
     assignment, Faiss-style): ``cell`` = 1-based argmax over centroids of
@@ -604,7 +569,8 @@ def ivf_cells(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     prefix sum = the HOF left fold's IEEE addition order), divided by the
     same driver-computed centroid norm, and ``np.argmax`` reproduces
     ``array_position(sc, array_max(sc))``'s first-max tie-break.  Pinned
-    value-equal to ``ivf_cells_hof`` by tests."""
+    value-equal to the JVM fold (``_ivf_cells_hof_reference``) by
+    tests/test_dedup_similarity.py."""
     import math
 
     import numpy as np

@@ -121,15 +121,6 @@ class CrawlConfig:
     # most the rounds whose commits were still in flight — resume then
     # deterministically re-runs them.
     # finalize()/run() always join and commit the final round.
-    seen_bloom: bool = False
-    # opt-in Bloom accelerator in front of the exact seen anti-join: a
-    # broadcast filter (per-partition shards, treeReduce-merged, maintained
-    # incrementally from each round's admissions) marks candidates
-    # might-be-seen; only those touch the exact set.  Wins when the seen
-    # table is huge relative to per-round candidates.  Decisions stay exact:
-    # false positives fall through to the anti-join, false negatives are
-    # impossible.
-    bloom_capacity: int = 1_000_000      # expected distinct URLs (sizes m,k)
     capture_plans: bool = False
     # debug/test hook: record formatted physical plans of the round's three
     # load-bearing dataflows (claim window, fetch+dispatch, seen anti-join)
@@ -156,8 +147,6 @@ _REVIEW_RPC_PREFIX = "https://www.google.com/maps/rpc/listugcposts"
 # serially on the one writer thread (the manifest chain is ordered).  Depth
 # 2 measured faster than 1 and than 4 (BENCH.md, BENCH_HISTORY.md).
 _CKPT_INFLIGHT = 2
-# false-positive rate the seen_bloom filter is sized for
-_BLOOM_FPP = 0.01
 # claims (and seen-probe candidate sets) up to this many rows broadcast into
 # their join, so the huge pages / seen table is never shuffled; larger ones
 # fall back to a shuffle join, where AQE picks the physical strategy
@@ -348,7 +337,6 @@ class CrawlEngine:
         self._ckpt_failed: BaseException | None = None
         # (round, counters) observed by the last applied commit's writes
         self._counters_from_write: tuple[int, dict] | None = None
-        self._bloom = None   # empty filter (seen_bloom) built by _root_state
         self._frontier: DataFrame | None = None   # LIVE rows (status NEW)
         self._frontier_done: list[DataFrame] = []  # terminal segments,
         # append-only: each is materialized ONCE when its round retires it
@@ -550,7 +538,7 @@ class CrawlEngine:
         resume; no commit in flight): nothing lazy, nothing since-durable,
         nothing captured, the writer's chain at ``chain`` / ``totals`` with
         ``parent`` as the last committed snapshot id (-1: none; else it
-        holds the current round), and an empty Bloom filter."""
+        holds the current round)."""
         self._frontier = live
         self._frontier_done = [term]
         self._term_lazy = []
@@ -566,11 +554,6 @@ class CrawlEngine:
         self._durable_round = self.round if parent >= 0 else -1
         self._ckpt_failed = None
         self._counters_from_write = None
-        self._bloom = None
-        if self.cfg.seen_bloom:
-            from ..operators.bloom import BloomFilter
-
-            self._bloom = BloomFilter.sized(self.cfg.bloom_capacity, _BLOOM_FPP)
 
     # in-memory seen-segment compaction threshold: past this many union legs
     # the per-round anti-join plan's compile cost starts to matter, so the
@@ -882,7 +865,7 @@ class CrawlEngine:
         for st in (STATUS_QUEUED, STATUS_DONE, STATUS_FAILED)
     ]
 
-    def _write_snapshot_inner(self, cap: dict, bloom_bytes: bytes | None) -> dict:
+    def _write_snapshot_inner(self, cap: dict) -> dict:
         """Commit one round as a DELTA-LOG entry through the store; runs on
         the checkpoint thread.  The engine picks what the snapshot holds —
         the full (small) live frontier plus, per append-only table
@@ -994,16 +977,9 @@ class CrawlEngine:
                     "chain_len": {t: len(log[t]) for t in log},
                     "live_rows": sum(v for v in f_obs.get.values() if v),
                 },
-                "bloom": (
-                    {"m_bits": self._bloom.m_bits, "k": self._bloom.k}
-                    if bloom_bytes is not None else None
-                ),
             }
 
-        m = self.store.commit(
-            snap, writes, manifest, self._writer_token,
-            None if bloom_bytes is None else {"bloom.bin": bloom_bytes},
-        )
+        m = self.store.commit(snap, writes, manifest, self._writer_token)
         # advance the writer-owned chain state for the NEXT queued commit
         # (manifest() copies it before extending, so sharing is safe)
         self._wlog, self._wtotals, self._wparent = m["chain"], m["totals"], snap
@@ -1031,11 +1007,8 @@ class CrawlEngine:
             self._ckpt_pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="gms-ckpt"
             )
-        bloom_bytes = self._bloom.to_bytes() if self._bloom is not None else None
         self._pending_ckpts.append(
-            self._ckpt_pool.submit(
-                self._write_snapshot, self._capture_commit(), bloom_bytes
-            )
+            self._ckpt_pool.submit(self._write_snapshot, self._capture_commit())
         )
 
     def _apply_commit(self, rec: dict) -> None:
@@ -1081,10 +1054,7 @@ class CrawlEngine:
         Nothing prunes a snapshot while an engine writes, so these views
         stay readable for the rest of the run."""
         self._join_pending_checkpoint()
-        rec = self._write_snapshot(
-            self._capture_commit(),
-            self._bloom.to_bytes() if self._bloom is not None else None,
-        )
+        rec = self._write_snapshot(self._capture_commit())
         self._apply_commit(rec)
         # the live table holds exactly the NEW rows; terminal segments keep
         # their existing materialized blocks
@@ -1173,23 +1143,6 @@ class CrawlEngine:
             eng._frontier = eng._reset_stats(
                 eng._ckpt(eng._frontier.coalesce(n))
             )
-        bloom = store.blob(at, "bloom.bin") if manifest.get("bloom") else None
-        if bloom is not None:
-            from ..operators.bloom import BloomFilter
-
-            b = manifest["bloom"]
-            eng._bloom = BloomFilter(b["m_bits"], b["k"], bloom)
-        elif eng._bloom is not None:
-            # seen_bloom requested but the snapshot has no persisted filter
-            # (e.g. the prior run had seen_bloom=False).  A fresh empty Bloom
-            # over a non-empty seen table would answer might_contain=False for
-            # every seen URL, routing them down the definite-new fast path and
-            # bypassing the exact anti-join — duplicate admissions.  Rebuild
-            # from the authoritative seen table instead ("false negatives are
-            # impossible" invariant).
-            from ..operators.bloom import build_bloom
-
-            eng._bloom = build_bloom(eng.seen.select("url"), "url", proto=eng._bloom)
         return eng
 
     # ---------------- round ---------------------------------------------------
@@ -1600,8 +1553,7 @@ class CrawlEngine:
         seen-table rows)."""
         # first-wins: within the round, the earliest (created_path, pos)
         # occurrence wins (≙ sequential DOM iteration order across SERPs);
-        # then exact left-anti vs the seen table.
-        cfg = self.cfg
+        # then the exact URL-seen test: left-anti against the seen table.
         search = processed_all.filter(F.col("kind") == KIND_SEARCH)
         place_children = search.filter(F.col("p.links").isNotNull()).select(
             F.col("job_id").alias("parent_id"),
@@ -1614,18 +1566,6 @@ class CrawlEngine:
             place_children.filter("dedup"), "child_url", "created_path", "pos"
         )
 
-        # Bloom pre-filter (optional): definite-new candidates skip the exact
-        # set entirely; only might-be-seen ones proceed.
-        if cfg.seen_bloom and self._bloom is not None:
-            from ..operators.bloom import bloom_might_contain_udf
-
-            mc = bloom_might_contain_udf(self.spark, self._bloom)
-            flagged = dd_first.withColumn("_maybe", mc("child_url"))
-            definite_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
-            maybes = flagged.filter(F.col("_maybe")).drop("_maybe")
-        else:
-            definite_new, maybes = None, dd_first
-
         seen_keys = self.seen.select(F.col("url").alias("child_url"))
         if n_links <= _BROADCAST_ROWS:
             # scan-probe: the seen table is SCANNED with a broadcast semi-probe
@@ -1636,18 +1576,14 @@ class CrawlEngine:
             # ~10^2× its claim, and a 10^6-URL broadcast is a serial driver
             # build that repeats identically at every cluster size.
             hits = seen_keys.join(
-                F.broadcast(maybes.select("child_url")), "child_url", "left_semi"
+                F.broadcast(dd_first.select("child_url")), "child_url", "left_semi"
             )
-            confirmed_new = maybes.join(F.broadcast(hits), "child_url", "left_anti")
+            admitted_new = dd_first.join(F.broadcast(hits), "child_url", "left_anti")
         else:
             # wide fan-out: shuffle anti-join on url — both sides partition
             # by the join key, so the work scales with the cluster
-            confirmed_new = maybes.join(seen_keys, "child_url", "left_anti")
-        self._capture_plan("seen_antijoin", confirmed_new)
-        admitted_new = (
-            confirmed_new if definite_new is None
-            else confirmed_new.unionByName(definite_new)
-        )
+            admitted_new = dd_first.join(seen_keys, "child_url", "left_anti")
+        self._capture_plan("seen_antijoin", admitted_new)
         admitted = admitted_new.unionByName(place_children.filter(~F.col("dedup")))
         new_seen = admitted_new.select(
             F.xxhash64("child_url").alias("url_hash"),
@@ -1783,12 +1719,6 @@ class CrawlEngine:
         term_rows = n_claimed + hops_rows
         self._rows_since["term"] += term_rows
         self._rows_since["results"] += n_claimed  # emitted results ≤ claims
-        if self.cfg.seen_bloom and self._bloom is not None:
-            from ..operators.bloom import build_bloom
-
-            self._bloom.merge(
-                build_bloom(new_seen.select("url"), "url", proto=self._bloom)
-            )
         # append-only state moves as DELTAS: admissions become an immutable
         # seen segment in _persist_state; the results delta stays lazy until
         # the next durable commit (it roots in this round's checkpointed

@@ -11,8 +11,8 @@ that knows the workdir layout:
 
     round=NNNN/              one committed snapshot: per-table parquet (a
                              delta or a compacted rewrite), the full live
-                             ``frontier``, an optional ``bloom.bin``, and the
-                             ``manifest.json`` pinning the chain + totals
+                             ``frontier``, and the ``manifest.json``
+                             pinning the chain + totals
     .tmp.round=NNNN.<id>/    a commit being staged (unique per attempt)
     .drop.<name>.<id>/       a dir being pruned (renamed aside first)
     WRITER                   the writer lease token
@@ -349,26 +349,29 @@ class ParquetDeltaLogStore(SnapshotStore):
             for t in _CHAINED
             if m["chain"][t]
         }
-        src = self._dir(cur)
-        files = {"frontier": src / "frontier"}
-        if (src / "bloom.bin").exists():
-            files["bloom.bin"] = src / "bloom.bin"
 
         def manifest(legs: dict[str, str]) -> dict:
+            # the head's crawl state (round, counters, totals) carries over;
+            # any other key an older manifest format held does not
             chain = {t: [legs[t]] if t in legs else [] for t in _CHAINED}
-            return dict(
-                m,
-                parent_round=cur,
-                chain=chain,
-                commit_meta={
+            return {
+                "round": m["round"],
+                "parent_round": cur,
+                "counters": m["counters"],
+                "chain": chain,
+                "totals": m["totals"],
+                "commit_meta": {
                     "actions": {t: "compact" for t in _CHAINED},
                     "appended": {"seen": 0, "results": 0, "term": {}},
                     "chain_len": {t: len(chain[t]) for t in chain},
                     "live_rows": m.get("commit_meta", {}).get("live_rows"),
                 },
-            )
+            }
 
-        self.commit(snap, tables, manifest, expected_token, files)
+        self.commit(
+            snap, tables, manifest, expected_token,
+            {"frontier": self._dir(cur) / "frontier"},
+        )
         return snap
 
     def writer_token(self) -> str | None:
@@ -407,15 +410,16 @@ class ParquetDeltaLogStore(SnapshotStore):
         tables: dict[str, tuple[DataFrame, int]],
         manifest: Callable[[dict[str, str]], dict],
         expected_token: str | None = None,
-        files: dict[str, bytes | Path] | None = None,
+        files: dict[str, Path] | None = None,
     ) -> dict:
         """The one publish routine: commit snapshot ``at``.
 
         Writes ``tables`` ({name: (df, partitions)}) concurrently into a
-        private temp dir and adds ``files`` ({name: bytes, or a path to
-        copy}).  Then ``manifest(legs)`` builds the manifest — ``legs`` maps
-        each written table to its chain entry, and Observations riding the
-        writes are filled by then — and it is written last.  After the
+        private temp dir and copies in the directories of ``files``
+        ({name: source dir}).  Then ``manifest(legs)`` builds the manifest
+        — ``legs`` maps each written table to its chain entry, and
+        Observations riding the writes are filled by then — and it is
+        written last.  After the
         lease check and the guard against an already-advanced commit point,
         one ``os.rename`` onto ``round=NNNN`` commits.  Any failure removes
         only this attempt's temp dir; a lost race (lease moved before or
@@ -435,12 +439,7 @@ class ParquetDeltaLogStore(SnapshotStore):
                 for w in writes:
                     w.result()
             for name, src in (files or {}).items():
-                if isinstance(src, bytes):
-                    (tmp / name).write_bytes(src)
-                elif src.is_dir():
-                    shutil.copytree(src, tmp / name)
-                else:
-                    shutil.copy2(src, tmp / name)
+                shutil.copytree(src, tmp / name)
             m = manifest({t: f"{rd.name}/{t}" for t in tables})
             (tmp / "manifest.json").write_text(json.dumps(m, indent=2))
             self._check_lease(expected_token)
@@ -476,9 +475,3 @@ class ParquetDeltaLogStore(SnapshotStore):
                 ) from e
             raise
         return m
-
-    def blob(self, at: int, name: str) -> bytes | None:
-        """A side file committed with snapshot ``at`` (e.g. ``bloom.bin``),
-        or None if that commit carried none."""
-        p = self._dir(at) / name
-        return p.read_bytes() if p.exists() else None

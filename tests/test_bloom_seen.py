@@ -1,15 +1,8 @@
-"""Bloom-accelerated seen-set: decisions must stay EXACTLY equal to the
-plain anti-join path (false positives fall through to the exact check; false
-negatives are impossible by construction)."""
-
-import pytest
+"""The Bloom filter behind the catalog's ``seen_bloom_build`` query: no false
+negatives and a bounded false-positive rate, the distributed build equal bit
+for bit to a local one, and merged per-delta builds covering every key."""
 
 from google_maps_scraper_spark.operators.bloom import BloomFilter, build_bloom
-from google_maps_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
-from google_maps_scraper_spark.plans.oracle import SequentialOracle
-from google_maps_scraper_spark.sources.corpus import corpus_to_spark, generate_corpus
-
-NOW = 1786838400000000
 
 
 def test_bloom_unit_no_false_negatives():
@@ -41,44 +34,3 @@ def test_bloom_merge_delta(spark):
     running.merge(build_bloom(b, "url", proto=proto))
     assert all(running.might_contain(f"u{i}") for i in range(100))
     assert all(running.might_contain(f"v{i}") for i in range(100))
-
-
-@pytest.fixture(scope="module")
-def corpus():
-    return generate_corpus(n_seeds=3, places_per_serp=8, seed=42)
-
-
-def test_crawl_with_bloom_matches_oracle(spark, corpus, tmp_path_factory):
-    """Same corpus as the main e2e: bloom on must reproduce the oracle's
-    seen decisions and results byte-identically."""
-    pages = {p["url"]: p["html"] for p in corpus.pages}
-    seeds = [(s["query"].split("#!#")[0].strip(), s["custom_id"]) for s in corpus.seeds]
-    oracle = SequentialOracle(pages, extract_email=True, now_micros=NOW).run(seeds)
-
-    eng = CrawlEngine(
-        spark,
-        corpus_to_spark(spark, corpus),
-        str(tmp_path_factory.mktemp("crawl-bloom")),
-        CrawlConfig(
-            extract_email=True, now_micros=NOW,
-            seen_bloom=True, bloom_capacity=10_000,
-        ),
-    )
-    eng.seed_from_queries(seeds)
-    eng.run()
-
-    spark_seen = {
-        (r["url"], r["admitting_parent"])
-        for r in eng.seen.select("url", "admitting_parent").collect()
-    }
-    oracle_admitted = {
-        (url, parent) for url, admitted, parent in oracle.seen_decisions if admitted
-    }
-    assert spark_seen == oracle_admitted
-
-    spark_results = {
-        r["link"]: r["canonical_json"]
-        for r in eng.results.select("link", "canonical_json").collect()
-    }
-    oracle_results = {r["entry"]["link"]: r["canonical_json"] for r in oracle.results}
-    assert spark_results == oracle_results

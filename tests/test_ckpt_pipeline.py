@@ -97,12 +97,12 @@ def test_pipeline_overlap_actually_happens(spark, pages_and_seeds, tmp_path_fact
     inner = eng._write_snapshot_inner
     seen_depths = []
 
-    def slow_write(cap, bloom_bytes):
+    def slow_write(cap):
         # must dwarf a round's wall so the next round ALWAYS finishes while
         # this commit is still in flight (2.5 s flaked once round walls
         # crossed it on a loaded box — r6)
         time.sleep(8.0)
-        return inner(cap, bloom_bytes)
+        return inner(cap)
 
     eng._write_snapshot_inner = slow_write
     eng.seed_from_queries(seeds)
@@ -146,10 +146,10 @@ def test_failed_commit_is_fail_stop(spark, pages_and_seeds, tmp_path_factory):
     )
     inner = eng._write_snapshot_inner
 
-    def failing(cap, bloom_bytes):
+    def failing(cap):
         if cap["round"] == 2:
             raise OSError("injected: disk gone")
-        return inner(cap, bloom_bytes)
+        return inner(cap)
 
     eng._write_snapshot_inner = failing
     eng.seed_from_queries(seeds)

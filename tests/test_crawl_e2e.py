@@ -134,16 +134,14 @@ def test_phase_walls_recorded_by_default(engine_out):
 
 def test_reseed_starts_like_a_fresh_engine(spark, corpus, tmp_path_factory, engine_out):
     """Regression: seed_from_queries on an engine that already ran starts a
-    new crawl.  The previous crawl's manifest chain, totals, counters and
-    Bloom bits used to survive the re-seed, so its round-0 commit named the
-    old parent and chain and then read dropped round dirs (PATH_NOT_FOUND)."""
+    new crawl.  The previous crawl's manifest chain, totals and counters
+    used to survive the re-seed, so its round-0 commit named the old parent
+    and chain and then read dropped round dirs (PATH_NOT_FOUND)."""
     fresh, fresh_counters = engine_out
     pages_df = corpus_to_spark(spark, corpus)
     seeds = [(s["query"].split("#!#")[0].strip(), s["custom_id"]) for s in corpus.seeds]
     wd = str(tmp_path_factory.mktemp("reseed"))
-    cfg = CrawlConfig(
-        extract_email=True, now_micros=NOW, seen_bloom=True, bloom_capacity=10_000
-    )
+    cfg = CrawlConfig(extract_email=True, now_micros=NOW)
     eng = CrawlEngine(spark, pages_df, wd, cfg)
     # session handles, caches of the immutable pages and the lease token are
     # not crawl state; DataFrames compare by presence, their lists by length
@@ -156,7 +154,7 @@ def test_reseed_starts_like_a_fresh_engine(spark, corpus, tmp_path_factory, engi
         return {
             k: len(v) if isinstance(v, (list, deque))
             else type(v) if isinstance(v, DataFrame)
-            else v.to_bytes() if k == "_bloom" else copy.deepcopy(v)
+            else copy.deepcopy(v)
             for k, v in vars(eng).items() if k not in skip
         }
 
@@ -177,12 +175,10 @@ def test_reseed_starts_like_a_fresh_engine(spark, corpus, tmp_path_factory, engi
     assert rows(eng.seen, *seen_cols) == rows(fresh.seen, *seen_cols)
 
     def manifests(workdir):
-        # every committed manifest but its Bloom entry (only ``eng`` runs one)
-        out = {}
-        for d in pathlib.Path(workdir).glob("round=*"):
-            out[d.name] = json.loads((d / "manifest.json").read_text())
-            out[d.name].pop("bloom")
-        return out
+        return {
+            d.name: json.loads((d / "manifest.json").read_text())
+            for d in pathlib.Path(workdir).glob("round=*")
+        }
 
     assert manifests(wd) == manifests(fresh.store.workdir)
     assert CrawlEngine.resume(spark, pages_df, wd, cfg).counters() == fresh_counters
@@ -314,32 +310,6 @@ def test_robots_denied_terminal(spark, corpus, tmp_path_factory):
     assert (
         eng.frontier.filter("kind = 'place' AND retries > 0").count() == 0
     )
-
-
-def test_resume_rebuilds_missing_bloom(spark, corpus, tmp_path_factory):
-    """Regression (round-2 ADVICE, medium): resuming with seen_bloom=True from
-    a snapshot that has no persisted filter must rebuild it from the seen
-    table — an empty Bloom over a non-empty seen set would route every seen
-    URL down the definite-new path and admit duplicates."""
-    pages_df = corpus_to_spark(spark, corpus)
-    seeds = [(s["query"].split("#!#")[0].strip(), s["custom_id"]) for s in corpus.seeds]
-    wd = str(tmp_path_factory.mktemp("bloomresume"))
-    cfg_off = CrawlConfig(extract_email=False, now_micros=NOW, seen_bloom=False)
-    eng = CrawlEngine(spark, pages_df, wd, cfg_off)
-    eng.seed_from_queries(seeds)
-    eng.run_round()
-    eng.run_round()  # places admitted → seen non-empty
-    seen_urls = [r["url"] for r in eng.seen.select("url").collect()]
-    assert seen_urls
-    del eng
-
-    cfg_on = CrawlConfig(
-        extract_email=False, now_micros=NOW, seen_bloom=True, bloom_capacity=10_000
-    )
-    eng2 = CrawlEngine.resume(spark, pages_df, wd, cfg_on)
-    assert eng2._bloom is not None
-    misses = [u for u in seen_urls if not eng2._bloom.might_contain(u)]
-    assert not misses, f"rebuilt Bloom false-negatives: {misses[:3]}"
 
 
 def test_duplicate_page_captures_latest_wins(spark, corpus, tmp_path_factory, engine_out):

@@ -271,31 +271,55 @@ def _winnow_hof_reference(df):
     )
 
 
+def _lsh_signature_hof_reference(df):
+    """The retired JVM higher-order-function formulation of
+    ``lsh_signature`` (one interpreted ``aggregate`` fold per plane) — kept
+    as the value reference for the vectorized path."""
+    from google_maps_scraper_spark.operators.similarity import _dot, plane_weights
+
+    bucket = F.lit(0).cast("long")
+    for p, w in enumerate(plane_weights()):
+        dot = _dot(F.col("embedding"), F.array(*[F.lit(float(x)) for x in w]))
+        bucket = bucket + F.when(dot > 0, F.lit(1 << p).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+    return df.withColumn("lsh_bucket", bucket)
+
+
+def _ivf_cells_hof_reference(emb, centroids):
+    """The retired JVM higher-order-function formulation of ``ivf_cells``:
+    1-based argmax over centroids of dot(e, c)/|c|, first max wins."""
+    import math
+
+    from google_maps_scraper_spark.operators.similarity import _dot, _py_dot
+
+    sc = F.array(*[
+        _dot(F.col("embedding"), F.array(*[F.lit(float(v)) for v in c]))
+        / F.lit(math.sqrt(_py_dot(c, c)))
+        for c in centroids
+    ])
+    return emb.withColumn("cell", F.array_position(sc, F.array_max(sc)))
+
+
 def test_lsh_signature_vectorized_equals_hof(spark):
     """The Arrow-vectorized LSH signature (r6 fast path) must equal the JVM
     HOF fold bit-for-bit — the cumsum sequential prefix sum reproduces the
     left fold's IEEE addition order, so no near-zero dot sign can flip."""
-    from google_maps_scraper_spark.operators.similarity import (
-        lsh_signature,
-        lsh_signature_hof,
-    )
+    from google_maps_scraper_spark.operators.similarity import lsh_signature
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     a = {r["vec_id"]: r["lsh_bucket"] for r in lsh_signature(emb).collect()}
-    b = {r["vec_id"]: r["lsh_bucket"] for r in lsh_signature_hof(emb).collect()}
+    b = {
+        r["vec_id"]: r["lsh_bucket"]
+        for r in _lsh_signature_hof_reference(emb).collect()
+    }
     assert a == b
 
 
 def test_ivf_cells_vectorized_equals_hof(spark):
     """Same contract for the IVF assignment: sequential-sum scores, same
     norm divisor, first-max tie-break."""
-    from pyspark.sql import functions as F
-
-    from google_maps_scraper_spark.operators.similarity import (
-        N_CELLS,
-        ivf_cells,
-        ivf_cells_hof,
-    )
+    from google_maps_scraper_spark.operators.similarity import N_CELLS, ivf_cells
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     cents = [
@@ -306,7 +330,10 @@ def test_ivf_cells_vectorized_equals_hof(spark):
     ]
     sel = emb.select("vec_id", "embedding")
     a = {r["vec_id"]: r["cell"] for r in ivf_cells(sel, cents).collect()}
-    b = {r["vec_id"]: r["cell"] for r in ivf_cells_hof(sel, cents).collect()}
+    b = {
+        r["vec_id"]: r["cell"]
+        for r in _ivf_cells_hof_reference(sel, cents).collect()
+    }
     assert a == b
 
 

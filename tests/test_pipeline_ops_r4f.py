@@ -117,21 +117,22 @@ def test_url_canonicalize_matches_urllib(spark):
 
 
 def test_url_canonicalize_vectorized_equals_hof(spark):
-    """r6: the Arrow canonicalizer must equal the retained JVM withColumn/
+    """r6: the Arrow canonicalizer must equal the retired JVM withColumn/
     regex chain value-for-value (same rules, two execution paths)."""
     from pyspark.sql import functions as F
 
     from google_maps_scraper_spark.operators.analytics import (
         _URL_RAW_SQL,
-        _url_canonicalize_hof,
         frontier_url_canon_base,
         load,
     )
 
-    d = load(spark, SF, "documents")
+    d = load(spark, SF, "documents").select(
+        "doc_id", F.expr(_URL_RAW_SQL).alias("url_raw")
+    )
     hof = {
         r["doc_id"]: r["url_canon"]
-        for r in _url_canonicalize_hof(d).collect()
+        for r in _url_canonicalize_hof_reference(d).collect()
     }
     vec = {
         r["doc_id"]: r["url_canon"]
@@ -152,7 +153,7 @@ def test_url_canonicalize_vectorized_equals_hof(spark):
     )
     hof2 = {
         r["doc_id"]: r["url_canon"]
-        for r in _url_canonicalize_hof_raw(dirty).collect()
+        for r in _url_canonicalize_hof_reference(dirty).collect()
     }
     from google_maps_scraper_spark.operators.analytics import _canon_and_surt
 
@@ -160,17 +161,15 @@ def test_url_canonicalize_vectorized_equals_hof(spark):
         assert _canon_and_surt(raw)[0] == hof2[did], raw
 
 
-def _url_canonicalize_hof_raw(raw_df):
-    """Run the JVM canonicalization chain on a caller-supplied
-    (doc_id, url_raw) frame (the hof helper synthesizes url_raw itself)."""
+def _url_canonicalize_hof_reference(d):
+    """The retired JVM withColumn/regex formulation of the canonicalizer
+    over a (doc_id, url_raw) frame — kept as the value reference for the
+    Arrow fast path (``_canon_and_surt``).  Once CollapseProject inlines
+    the dependent withColumns, every downstream use re-embeds its upstream
+    regexes; that expression tree made it the catalog's heaviest
+    Janino/JIT compile, which is why the library runs the Arrow map."""
     from pyspark.sql import functions as F
 
-    from google_maps_scraper_spark.operators import analytics as A
-
-    d = raw_df.select("doc_id", F.col("url_raw"))
-    # re-apply the same withColumn chain by borrowing the hof body via a
-    # synthetic _URL_RAW_SQL: simplest faithful route is to rebuild the
-    # chain inline (kept in lockstep with _url_canonicalize_hof)
     return (
         d.withColumn(
             "scheme", F.expr("lower(regexp_extract(url_raw, '^([A-Za-z]+)://', 1))")

@@ -29,6 +29,23 @@ def _exchange_inputs(formatted: str) -> list[str]:
     ]
 
 
+def _single_partition_consumers(plan: str) -> list[str]:
+    """The operator each ``repartition(1)`` exchange of a tree-string plan
+    feeds: the nearest line above it whose node sits one level shallower."""
+    def col(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    lines = plan.splitlines()
+    consumers = []
+    for i, line in enumerate(lines):
+        if "Exchange SinglePartition, REPARTITION_BY_NUM" in line:
+            parent = next(p for p in reversed(lines[:i]) if col(p) < col(line))
+            consumers.append(
+                re.match(r"(?:\*\(\d+\) )?(\w+)", parent[col(parent):]).group(1)
+            )
+    return consumers
+
+
 @pytest.fixture(scope="module")
 def plan_log(spark, tmp_path_factory):
     corpus = generate_corpus(n_seeds=2, places_per_serp=4, seed=3)
@@ -135,13 +152,18 @@ def _catalog_names():
 def test_catalog_query_plans_clean(spark, qname):
     """EVERY catalog query must plan without cartesian/nested-loop joins at
     the driver's correctness scale — enumerated from queries() so new waves
-    are guarded the moment they register."""
+    are guarded the moment they register.  And ``ordered()`` stays the last
+    operator: each of its single-partition exchanges feeds its in-partition
+    Sort and nothing else (Catalyst drops a local sort under a later join or
+    aggregate, so a misplaced ``ordered()`` shows here)."""
     import __spark_entry__ as entry
 
     df = entry.queries()[qname](spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     for bad in FORBIDDEN:
         assert bad not in plan, f"{bad} in {qname}"
+    consumers = _single_partition_consumers(plan)
+    assert all(c == "Sort" for c in consumers), (qname, consumers, plan)
 
 
 def test_winnow_plan_single_hash_pass_no_window(spark):
