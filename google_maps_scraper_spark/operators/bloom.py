@@ -15,10 +15,10 @@ the catalog's ``seen_bloom_build`` query mirrors:
     shards);
   * maintain: a delta filter built over only the new keys, with the running
     filter's geometry (``proto``), ORs into it driver-side — the full set
-    is never rescanned;
-  * probe: broadcast the bytes; a vectorized pandas UDF marks candidates
-    ``might_be_seen``.  False positives must fall through to an exact
-    check; false negatives are impossible.
+    is never rescanned.
+
+``BloomFilter.might_contain`` never gives a false negative; a positive must
+fall through to an exact check.
 
 Hashing: k indexes from two independent 64-bit halves of ``blake2b(url)``
 (double hashing, Kirsch–Mitzenmacher) — deterministic across processes, no
@@ -30,9 +30,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-import pandas as pd
-
-__all__ = ["BloomFilter", "build_bloom", "bloom_might_contain_udf"]
+__all__ = ["BloomFilter", "build_bloom"]
 
 
 class BloomFilter:
@@ -109,17 +107,3 @@ def build_bloom(
     merged = rdd.treeReduce(orr)
     return BloomFilter(m, k, merged)
 
-
-def bloom_might_contain_udf(spark, bf: BloomFilter):
-    """Vectorized probe against a broadcast of the filter bytes."""
-    from pyspark.sql.functions import pandas_udf
-
-    bc = spark.sparkContext.broadcast((bf.m_bits, bf.k, bf.to_bytes()))
-
-    @pandas_udf("boolean")
-    def might_contain(url: pd.Series) -> pd.Series:
-        m, k, bits = bc.value
-        probe = BloomFilter(m, k, bits)
-        return url.map(lambda u: probe.might_contain(u or ""))
-
-    return might_contain

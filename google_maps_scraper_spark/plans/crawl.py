@@ -19,9 +19,10 @@ next one reads.
                       deduper/hashmap.go:16-35);
     _emit           — new place/email/review jobs and result rows;
     _retire         — flip statuses, split live/terminal, materialize the
-                      round's state and submit the durable commit (parquet
-                      tables + a JSON manifest; resume ≙ the DB modes'
-                      natural resumability, postgres/provider.go:17-21).
+                      round's state and submit the durable commit: the
+                      round's deltas handed to the store's append (resume ≙
+                      the DB modes' natural resumability,
+                      postgres/provider.go:17-21).
 
 Termination: fixpoint — no ``new`` frontier rows (≙ exiter's
 seedCompleted>=seedCount && placesCompleted>=placesFound,
@@ -43,10 +44,13 @@ sandbox ships no Iceberg/Delta jars (re-verified round 3: pyspark/jars has
 neither, no delta-spark/pyiceberg pip package, and no network to fetch
 them), so state tables are plain parquet snapshots per round + a JSON
 manifest, with MERGE semantics emulated by anti-join/union.  Every workdir
-read and write goes through ``plans/store.py``'s ``ParquetDeltaLogStore``:
-it stages a commit in a private temp dir and publishes it with ONE atomic
-rename onto the round dir, which fails rather than replace a dir another
-writer committed; the commit point is the highest committed round.
+read and write goes through ``plans/store.py``'s ``ParquetDeltaLogStore``.
+The engine hands its ``append`` only the round, the base snapshot id, the
+live frontier and the per-table deltas; the store owns the chain, the
+running totals, compaction and the manifest.  It stages a commit in a
+private temp dir and publishes it with ONE atomic rename onto the round
+dir, which fails rather than replace a dir another writer committed; the
+commit point is the highest committed round.
 Concurrent-writer protection is the store's WRITER lease (taken over at
 seed/resume and checked at publish) plus that rename (two engines on one
 workdir → the stale one aborts with ConcurrentWriterError;
@@ -60,7 +64,6 @@ ids in the manifest) changes only the store.
 
 from __future__ import annotations
 
-import json
 import time
 from collections import defaultdict, deque
 from contextlib import contextmanager, nullcontext
@@ -151,11 +154,6 @@ _CKPT_INFLIGHT = 2
 # their join, so the huge pages / seen table is never shuffled; larger ones
 # fall back to a shuffle join, where AQE picks the physical strategy
 _BROADCAST_ROWS = 100_000
-# delta-log chain bound (≙ Iceberg rewrite_data_files cadence): when a
-# table's manifest chain would exceed this many delta dirs, the commit
-# rewrites it as one compacted full table.  Bounds resume/read fan-in and
-# retention debt; amortized rewrite cost is O(total/_COMPACT_CHAIN) per commit.
-_COMPACT_CHAIN = 16
 # terminal-segment commit batching: retiring rows accumulate as lazy deltas
 # (cheap projections of already-checkpointed round outputs) and materialize
 # into an immutable segment only once the accumulated rows reach this many
@@ -324,19 +322,15 @@ class CrawlEngine:
         # yet folded by _apply_commit — captures take the suffix past this
         # head, applies slice the head (in commit order)
         self._cap_heads = {"seen": 0, "results": 0, "term": 0}
-        # the manifest chain the NEXT commit builds on (legs, running totals,
-        # parent round): rooted by _root_state, then advanced only by the
-        # serialized writer thread, so capturing commit N+1 never waits on N
-        self._wlog: dict = {"seen": [], "results": [], "term": []}
-        self._wtotals: dict = {"term": {}, "seen": 0, "results": 0}
-        self._wparent: int = -1
+        # the snapshot id the NEXT commit builds on (-1: none): rooted by
+        # _root_state, then advanced only by the serialized writer thread,
+        # so capturing commit N+1 never waits on N
+        self._base_snap = -1
         # first commit failure (fail-stop): later queued commits must NOT
         # publish — their captures assume the failed commit's deltas are in
         # the chain, so publishing would commit a manifest that silently
         # skips those rows
         self._ckpt_failed: BaseException | None = None
-        # (round, counters) observed by the last applied commit's writes
-        self._counters_from_write: tuple[int, dict] | None = None
         self._frontier: DataFrame | None = None   # LIVE rows (status NEW)
         self._frontier_done: list[DataFrame] = []  # terminal segments,
         # append-only: each is materialized ONCE when its round retires it
@@ -425,9 +419,7 @@ class CrawlEngine:
         )
         self._root_state(
             full.filter(F.col("status") == STATUS_NEW), done, [],
-            self.spark.createDataFrame([], RESULT_SCHEMA),
-            {"seen": [], "results": [], "term": []},
-            {"term": {}, "seen": 0, "results": 0}, -1,
+            self.spark.createDataFrame([], RESULT_SCHEMA), -1,
         )
         # robots can deny SEED urls: the terminal part must reach the
         # durable term log like any other retirement
@@ -533,12 +525,11 @@ class CrawlEngine:
             return None
         return _union_all([self._results_base, *self._results_new])
 
-    def _root_state(self, live, term, seen_segs, results, chain, totals, parent) -> None:
-        """Root the state at the given tables and durable chain (seed,
-        resume; no commit in flight): nothing lazy, nothing since-durable,
-        nothing captured, the writer's chain at ``chain`` / ``totals`` with
-        ``parent`` as the last committed snapshot id (-1: none; else it
-        holds the current round)."""
+    def _root_state(self, live, term, seen_segs, results, base) -> None:
+        """Root the state at the given tables (seed, resume; no commit in
+        flight): nothing lazy, nothing since-durable, nothing captured, and
+        ``base`` the last committed snapshot id (-1: none; else it holds the
+        current round)."""
         self._frontier = live
         self._frontier_done = [term]
         self._term_lazy = []
@@ -550,10 +541,9 @@ class CrawlEngine:
         self._results_new = []
         self._cap_heads = {"seen": 0, "results": 0, "term": 0}
         self._rows_since = {"seen": 0, "results": 0, "term": 0}
-        self._wlog, self._wtotals, self._wparent = chain, totals, parent
-        self._durable_round = self.round if parent >= 0 else -1
+        self._base_snap = base
+        self._durable_round = self.round if base >= 0 else -1
         self._ckpt_failed = None
-        self._counters_from_write = None
 
     # in-memory seen-segment compaction threshold: past this many union legs
     # the per-round anti-join plan's compile cost starts to matter, so the
@@ -760,64 +750,45 @@ class CrawlEngine:
 
     # -- durable checkpoint protocol ------------------------------------------
     #
-    # DELTA LOG (round 4, ≙ Iceberg append snapshots): a committed snapshot
-    # holds the full (small) live frontier plus, per append-only table
-    # (seen / results / term), ONLY the rows appended since the previous
-    # commit; the manifest pins the chain of immutable deltas composing the
-    # snapshot and the running row totals.  Per-commit I/O is O(delta), not
-    # O(total state) — the property that makes per-round durability
-    # affordable at a 10^10-row frontier.  Chains are bounded by compaction
-    # (_COMPACT_CHAIN, ≙ rewrite_data_files).  The engine never prunes:
-    # retention is the store's expire_snapshots, run while no engine is
-    # writing, so every parquet dir a live DataFrame reads outlives the run.
-    # A store.rewrite_data_files() between runs takes the next snapshot id
-    # without advancing the crawl, so round R commits as snapshot id
-    # max(R, last committed id + 1); manifests record the crawl round.
-    #
-    # The engine owns only this policy; ``self.store`` owns the layout and
-    # the publish.  A commit stages every table and the manifest in a
-    # private temp dir and one atomic rename makes it the new commit point,
-    # so a kill at ANY step leaves the previous committed round intact —
-    # the writers never target a directory a live DataFrame or a committed
-    # snapshot is reading (locked by tests/test_commit_protocol.py and
+    # DELTA LOG (≙ Iceberg append snapshots): each durable commit hands
+    # ``store.append`` the full (small) live frontier plus, per append-only
+    # table (seen / results / term), ONLY the rows appended since the
+    # previous commit, so per-commit I/O is O(delta), not O(total state).
+    # The store owns the rest: the chain of immutable legs, the running
+    # totals, compaction past ``_COMPACT_CHAIN`` legs and the manifest.  The
+    # engine never prunes (retention is the store's expire_snapshots, run
+    # while no engine writes), so every parquet dir a live DataFrame reads
+    # outlives the run.  A commit is staged privately and published by one
+    # atomic rename, so a kill at ANY step leaves the previous committed
+    # round intact (tests/test_commit_protocol.py,
     # tests/test_crawl_e2e.py::test_checkpoint_kill_during_write).
     #
-    # Blocking the driver on the parquet writes and counter aggregations
-    # every durable round is a fixed latency that caps end-to-end scaling,
-    # so the write runs on a single-thread executor while the NEXT round's
-    # claim/dispatch proceeds; the future is joined later (at most
-    # _CKPT_INFLIGHT in flight, all at finalize), which also surfaces write
-    # errors and re-roots the append-only results table at the committed
-    # chain.
-    # Counters ride the delta writes as Observations folded into the running
-    # totals, so EVERY commit's manifest carries exact counters for free.
+    # Blocking the driver on the writes every durable round caps scaling, so
+    # they run on a single-thread executor while the NEXT round's
+    # claim/dispatch proceeds (at most _CKPT_INFLIGHT in flight, all joined
+    # at finalize); the join surfaces write errors and re-roots the results
+    # table at the committed chain.  Counters ride the writes as
+    # Observations, so EVERY commit's manifest carries exact counters.
     #
     # Split-brain fencing: the engine takes over the store's writer lease at
     # seed/resume and passes its token to every commit; the store re-checks
-    # it before the rename and aborts with ConcurrentWriterError if a second
-    # engine took over, and the rename itself refuses a round another
+    # it before the rename, and the rename itself refuses a round another
     # writer already committed.
-
-    def _term_full(self) -> DataFrame:
-        """Every terminal frontier row (segments + lazy deltas) — the
-        compaction source for the durable term log."""
-        return _union_all(self._frontier_done + self._term_lazy)
 
     def _capture_commit(self) -> dict:
         """Snapshot the durable-commit inputs on the DRIVER thread: delta
-        lists are copied (the writer thread must see a frozen prefix), marks
-        record how much of each since-durable list the commit covers, and the
-        full views back the compaction path.
+        lists are copied (the writer thread must see a frozen prefix) and
+        marks record how much of each since-durable list the commit covers.
 
         Pipelining contract (_CKPT_INFLIGHT > 1): each capture takes only
         the suffix past ``_cap_heads`` — the entries no earlier in-flight
         commit already covers — and marks are RELATIVE counts, applied in
         commit order by ``_apply_commit`` (entries captured-but-unapplied
         stay at the HEAD of each since-durable list, so the live seen/results
-        views remain complete during the overlap window).  The manifest
-        chain state (prev log/totals/parent) is NOT captured here: it lives
-        with the serialized writer thread, which is what frees the driver
-        from joining commit N before capturing N+1."""
+        views remain complete during the overlap window).  The base snapshot
+        is NOT captured here: it advances with the serialized writer thread,
+        which is what frees the driver from joining commit N before
+        capturing N+1."""
         delta_rows = dict(self._rows_since)
         # the capture covers the full accumulated prefix; subsequent rounds
         # accumulate toward the NEXT commit
@@ -837,11 +808,6 @@ class CrawlEngine:
             "delta_rows": delta_rows,
             "deltas": deltas,
             "marks": marks,
-            "full": {
-                "seen": self.seen,
-                "results": self._results_view(),
-                "term": self._term_full(),
-            },
         }
 
     def _write_snapshot(self, *a, **kw):
@@ -866,127 +832,42 @@ class CrawlEngine:
     ]
 
     def _write_snapshot_inner(self, cap: dict) -> dict:
-        """Commit one round as a DELTA-LOG entry through the store; runs on
-        the checkpoint thread.  The engine picks what the snapshot holds —
-        the full (small) live frontier plus, per append-only table
-        (seen/results/term), either this commit's delta or a compacted full
-        rewrite — and the manifest fields: the chain of immutable legs
-        composing the snapshot and the running row totals (≙ an Iceberg
-        append snapshot's manifest list + summary).  ``store.commit`` owns
-        the layout and the atomic publish.  Compaction (≙
-        rewrite_data_files) triggers when the chain would exceed
-        ``_COMPACT_CHAIN`` legs.  Returns the commit record the join point
+        """Hand one round's deltas to ``store.append``; runs on the
+        checkpoint thread.  The engine picks each write's partition count
+        and the counters riding the frontier and term writes (≙ the
+        exiter's incremental counting, exiter/exiter.go:49-93: status counts
+        cost ZERO extra scans).  Returns the commit record the join point
         applies."""
-        rnd = cap["round"]
-        snap = max(rnd, self._wparent + 1)
         n = self._state_partitions()
-
-        # counters ride the writes (≙ the exiter's incremental counting,
-        # exiter/exiter.go:49-93): Observations fill during the parquet
-        # jobs, so status/result/seen counts cost ZERO extra scans, and the
-        # delta protocol accumulates them into running totals — every
-        # commit's manifest carries exact counters for free.
-        f_obs = Observation()
-        live = cap["live"].observe(f_obs, *[
-            F.sum(F.when(F.col("kind") == k, 1).otherwise(0))
-            .cast("long").alias(f"{k}_{STATUS_NEW}")
-            for k in (KIND_SEARCH, KIND_PLACE, KIND_EMAIL, KIND_REVIEWS)
-        ])
-        writes: dict[str, tuple[DataFrame, int]] = {"frontier": (live, n)}
-
-        actions: dict[str, str] = {}
-        obs: dict[str, Observation] = {}
-        for t in ("seen", "results", "term"):
-            prev, deltas = self._wlog[t], cap["deltas"][t]
-            grown = len(prev) + (1 if deltas else 0)
-            if prev and grown > _COMPACT_CHAIN:
-                df, parts = cap["full"][t], n
-                actions[t] = "compact"
-            elif deltas:
-                df = _union_all(deltas)
-                # row-aware writer parallelism: a steady-state delta is
-                # claim-sized (few partitions, few files — the Iceberg
-                # small-commit shape), but a fixpoint/first commit's delta
-                # can be the whole table, where a fixed cap serializes the
-                # write identically at every cluster size
-                parts = min(
-                    n, max(8, cap["delta_rows"].get(t, 0) // 8192 + 1)
-                )
-                actions[t] = "delta"
-            else:
-                actions[t] = "none"
-                continue
-            o = Observation()
-            if t == "term":
-                df = df.observe(o, *[
-                    F.sum(
-                        F.when(
-                            (F.col("kind") == k) & (F.col("status") == st), 1
-                        ).otherwise(0)
-                    ).cast("long").alias(f"{k}_{st}")
-                    for k, st in self._TERM_COMBOS
-                ])
-            else:
-                df = df.observe(o, F.count(F.lit(1)).alias("n"))
-            obs[t] = o
-            writes[t] = (df, parts)
-
-        def manifest(legs: dict[str, str]) -> dict:
-            # called by the store once the writes are done: the riding
-            # Observations are filled
-            totals = json.loads(json.dumps(self._wtotals))
-            log = {t: list(self._wlog[t]) for t in ("seen", "results", "term")}
-            # snapshot summary (≙ Iceberg's snapshot parent-id + summary
-            # map): per-table action taken this commit, rows appended by it,
-            # and the chain depth — the per-partition lineage a
-            # monitoring/debug read needs without opening any parquet footer
-            appended = {
-                t: obs[t].get["n"] if actions[t] != "none" else 0
-                for t in ("seen", "results")
-            }
-            appended["term"] = (
-                {k: v for k, v in obs["term"].get.items() if v}
-                if actions["term"] != "none" else {}
-            )
-            for t in ("seen", "results", "term"):
-                if actions[t] == "compact":
-                    totals[t] = appended[t]
-                    log[t] = [legs[t]]
-                elif actions[t] == "delta":
-                    if t == "term":
-                        for k, v in appended[t].items():
-                            totals[t][k] = totals[t].get(k, 0) + v
-                    else:
-                        totals[t] += appended[t]
-                    log[t].append(legs[t])
-
-            wc = {k: v for k, v in f_obs.get.items() if v}
-            for k, v in totals["term"].items():
-                wc[k] = wc.get(k, 0) + v
-            wc["seen"] = totals["seen"]
-            wc["results"] = totals["results"]
-            return {
-                "round": rnd,
-                "parent_round": self._wparent,
-                "counters": {**wc, "round": rnd},
-                "chain": log,
-                "totals": totals,
-                "commit_meta": {
-                    "actions": actions,
-                    "appended": appended,
-                    "chain_len": {t: len(log[t]) for t in log},
-                    "live_rows": sum(v for v in f_obs.get.values() if v),
-                },
-            }
-
-        m = self.store.commit(snap, writes, manifest, self._writer_token)
-        # advance the writer-owned chain state for the NEXT queued commit
-        # (manifest() copies it before extending, so sharing is safe)
-        self._wlog, self._wtotals, self._wparent = m["chain"], m["totals"], snap
-        return {
-            "round": rnd, "snapshot": snap, "counters": m["counters"],
-            "marks": cap["marks"],
+        # row-aware writer parallelism: a steady-state delta is claim-sized
+        # (few partitions, few files — the Iceberg small-commit shape), but a
+        # fixpoint/first commit's delta can be the whole table, where a
+        # fixed cap serializes the write identically at every cluster size
+        deltas = {
+            t: (_union_all(d), min(n, max(8, cap["delta_rows"][t] // 8192 + 1)))
+            for t, d in cap["deltas"].items()
+            if d
         }
+        aggs = {
+            "frontier": [
+                F.sum(F.when(F.col("kind") == k, 1).otherwise(0))
+                .cast("long").alias(f"{k}_{STATUS_NEW}")
+                for k in (KIND_SEARCH, KIND_PLACE, KIND_EMAIL, KIND_REVIEWS)
+            ],
+            "term": [
+                F.sum(
+                    F.when((F.col("kind") == k) & (F.col("status") == st), 1)
+                    .otherwise(0)
+                ).cast("long").alias(f"{k}_{st}")
+                for k, st in self._TERM_COMBOS
+            ],
+        }
+        snap, _ = self.store.append(
+            cap["round"], self._base_snap, (cap["live"], n), deltas, aggs,
+            self._writer_token,
+        )
+        self._base_snap = snap
+        return {"round": cap["round"], "snapshot": snap, "marks": cap["marks"]}
 
     def _checkpoint_async(self) -> None:
         """Submit the durable DELTA commit of the current state and return —
@@ -1013,14 +894,13 @@ class CrawlEngine:
 
     def _apply_commit(self, rec: dict) -> None:
         """Fold a successful commit record into driver state: advance the
-        durable mark, keep the write-observed counters, drop the covered prefix
-        of every since-durable list, and re-root the durably-logged results
-        at the committed snapshot's chain parquet.  Marks are RELATIVE
+        durable mark, drop the covered prefix of every since-durable list,
+        and re-root the durably-logged results at the committed snapshot's
+        chain parquet.  Marks are RELATIVE
         counts and records are applied in commit order, so the head slice
         always drops exactly the entries that commit captured (entries
         captured by still-pending commits remain at the new head)."""
         self._durable_round = rec["round"]
-        self._counters_from_write = (rec["round"], rec["counters"])
         m = rec["marks"]
         self._seen_since_durable = self._seen_since_durable[m["seen"]:]
         self._term_since_durable = self._term_since_durable[m["term"]:]
@@ -1128,9 +1008,7 @@ class CrawlEngine:
         eng._cum_admitted = int(manifest["totals"].get("seen", 0))
         eng._root_state(
             restored, store.read("term", at), [store.read("seen", at)],
-            store.read("results", at),
-            {t: list(p) for t, p in manifest["chain"].items()},
-            manifest["totals"], at,
+            store.read("results", at), at,
         )
         if denied is not None:
             n = eng._state_partitions()
@@ -1755,19 +1633,24 @@ class CrawlEngine:
     # ---------------- outputs -------------------------------------------------
 
     def counters(self) -> dict:
-        """≙ exiter counters (exiter/exiter.go:17-26) from status aggregates.
-        The three aggregations are independent Spark jobs and run
-        concurrently (fixpoint-only cost ≈ max, not sum)."""
-        from concurrent.futures import ThreadPoolExecutor
-
+        """≙ exiter counters (exiter/exiter.go:17-26).  While the current
+        round's commit holds the whole state, they are its manifest's
+        write-observed counters; otherwise ``_aggregate_counters``."""
         if self._frontier is None:
             return {}
-        cw = self._counters_from_write
-        if cw is not None and cw[0] == self.round == self._durable_round:
-            # the last committed write observed exactly the current state
-            c = dict(cw[1])
-            c["round"] = self.round
-            return c
+        # a resume's robots re-stamp retires rows the manifest still counts
+        # live: they wait in _term_since_durable for the next commit
+        if self._durable_round == self.round and not self._term_since_durable:
+            # no commit is in flight, so the writer-owned base is settled
+            return self.store.manifest(self._base_snap)["counters"]
+        return self._aggregate_counters()
+
+    def _aggregate_counters(self) -> dict:
+        """Counters from status aggregates over the in-memory state.  The
+        three aggregations are independent Spark jobs and run concurrently
+        (cost ≈ max, not sum)."""
+        from concurrent.futures import ThreadPoolExecutor
+
         full = self._frontier_full()
         with self._timed("counters"), ThreadPoolExecutor(max_workers=3) as ex:
             f_rows = ex.submit(

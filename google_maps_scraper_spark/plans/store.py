@@ -12,7 +12,7 @@ that knows the workdir layout:
     round=NNNN/              one committed snapshot: per-table parquet (a
                              delta or a compacted rewrite), the full live
                              ``frontier``, and the ``manifest.json``
-                             pinning the chain + totals
+                             pinning the chain + totals + counters
     .tmp.round=NNNN.<id>/    a commit being staged (unique per attempt)
     .drop.<name>.<id>/       a dir being pruned (renamed aside first)
     WRITER                   the writer lease token
@@ -32,6 +32,14 @@ commit point is the highest round dir holding a manifest; there is no
 pointer file to flip.  Pruning (expiry, rollback) renames each victim
 aside before deleting it, so a crash mid-prune never leaves a half-deleted
 dir that looks committed.
+
+The delta log has one owner: ``append`` (≙ ``newAppend().commit()``,
+which builds its own manifest list and summary) is all the engine calls.
+It takes the round's deltas, reads the base snapshot's chain and totals
+from its manifest, adds each delta as a new leg — or rewrites a chain that
+would pass ``_COMPACT_CHAIN`` legs as one — folds the Observations riding
+the writes into the totals and counters, and publishes through ``commit``.
+``rewrite_data_files`` is the same routine with no deltas.
 
 Retention has one path, run while no engine is writing (as in Iceberg,
 writers never prune): ``rewrite_data_files()`` compacts the head into the
@@ -57,9 +65,10 @@ totals(at)              manifest["totals"]                  summary "total-recor
 is_resumable(at)        chain paths all present             snapshot not yet expired
 rollback_to(at)         prune newer dirs, newest first      manageSnapshots().rollbackTo(id)
 expire_snapshots(k)     prune unreferenced old round dirs   expireSnapshots().retainLast(k)
-rewrite_data_files()    compacted full rewrite, next id     rewriteDataFiles() compaction action
+rewrite_data_files()    append, no deltas, all compacted    rewriteDataFiles() compaction action
 take_over()/fencing     WRITER token + rename-no-replace    optimistic-concurrency commit conflict
-commit() (engine)       staged dir + one atomic rename      newAppend().appendFile(...).commit()
+append() (engine)       delta legs + manifest from base     newAppend().appendFile(...).commit()
+commit()                staged dir + one atomic rename      the catalog's atomic metadata swap
 =====================  ==================================  =========================================
 """
 
@@ -75,7 +84,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import FRONTIER_SCHEMA, RESULT_SCHEMA, SEEN_SCHEMA
 
@@ -86,6 +96,11 @@ _TABLE_SCHEMAS = {
     "frontier": FRONTIER_SCHEMA,
 }
 _CHAINED = ("seen", "results", "term")  # append-only, delta-chained tables
+# delta-log chain bound (≙ Iceberg rewrite_data_files cadence): when a
+# table's chain would exceed this many legs, the append writes the chain and
+# its delta as one compacted leg.  Bounds resume/read fan-in and retention
+# debt; amortized rewrite cost is O(total/_COMPACT_CHAIN) per commit.
+_COMPACT_CHAIN = 16
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -176,11 +191,10 @@ class SnapshotStore(ABC):
 
 class ParquetDeltaLogStore(SnapshotStore):
     """The shipped implementation: every read and write of the crawl's
-    workdir goes through this class.  ``CrawlEngine`` keeps only policy —
-    what each commit writes (delta vs compaction, the manifest fields, the
-    counters riding the writes) — and appends through ``commit`` (≙
-    ``newAppend().commit()``); operators and resuming runs use the contract
-    methods between and after crawls."""
+    workdir goes through this class.  ``CrawlEngine`` hands ``append`` only
+    its deltas, their partition counts and the counter aggregates riding
+    them; operators and resuming runs use the contract methods between and
+    after crawls."""
 
     def __init__(self, spark: SparkSession, workdir: str | os.PathLike):
         self.spark = spark
@@ -339,38 +353,9 @@ class ParquetDeltaLogStore(SnapshotStore):
         cur = self.current()
         if cur is None:
             raise ValueError("store has no committed snapshot")
-        m = self.manifest(cur)
-        snap = cur + 1
-        # admin-path compaction: small fixed writer parallelism is fine (the
-        # engine's in-run compaction sizes by state; this runs between
-        # crawls)
-        tables = {
-            t: (self._chain_df(m["chain"][t], _TABLE_SCHEMAS[t]), 8)
-            for t in _CHAINED
-            if m["chain"][t]
-        }
-
-        def manifest(legs: dict[str, str]) -> dict:
-            # the head's crawl state (round, counters, totals) carries over;
-            # any other key an older manifest format held does not
-            chain = {t: [legs[t]] if t in legs else [] for t in _CHAINED}
-            return {
-                "round": m["round"],
-                "parent_round": cur,
-                "counters": m["counters"],
-                "chain": chain,
-                "totals": m["totals"],
-                "commit_meta": {
-                    "actions": {t: "compact" for t in _CHAINED},
-                    "appended": {"seen": 0, "results": 0, "term": {}},
-                    "chain_len": {t: len(chain[t]) for t in chain},
-                    "live_rows": m.get("commit_meta", {}).get("live_rows"),
-                },
-            }
-
-        self.commit(
-            snap, tables, manifest, expected_token,
-            {"frontier": self._dir(cur) / "frontier"},
+        head = self.manifest(cur)
+        snap, _ = self._append(
+            head["round"], cur, head, None, {}, {}, expected_token, rewrite=True
         )
         return snap
 
@@ -475,3 +460,119 @@ class ParquetDeltaLogStore(SnapshotStore):
                 ) from e
             raise
         return m
+
+    def append(
+        self,
+        rnd: int,
+        base: int,
+        live: tuple[DataFrame, int],
+        deltas: dict[str, tuple[DataFrame, int]],
+        aggs: dict[str, list[Column]],
+        expected_token: str | None = None,
+    ) -> tuple[int, dict]:
+        """The engine's append (≙ ``newAppend().appendFile(...).commit()``,
+        which builds its own manifest list and summary): commit crawl round
+        ``rnd`` on top of snapshot ``base`` (-1: none) as snapshot id
+        ``max(rnd, base + 1)`` — a ``rewrite_data_files`` between runs takes
+        an id without advancing the crawl.
+
+        ``live`` is the full live frontier and its partition count (a
+        compacted leg takes the same count); ``deltas`` maps each chained
+        table with new rows to (rows appended since ``base``, partitions).
+        ``aggs`` holds the aggregates that ride the writes: the frontier's
+        (its per-key counters) and those of each table whose totals are
+        keyed (term); every other delta rides a row count.  The chain and
+        totals come from ``base``'s manifest on disk: commits run one at a
+        time, so it is published before this one starts.  A chain that
+        would exceed ``_COMPACT_CHAIN`` legs is written as one leg, the old
+        legs and the delta together.  Returns (snapshot id, manifest)."""
+        head = self.manifest(base) if base >= 0 else None
+        return self._append(rnd, base, head, live, deltas, aggs, expected_token)
+
+    def _append(
+        self, rnd, base, head, live, deltas, aggs, expected_token, rewrite=False
+    ) -> tuple[int, dict]:
+        """Build and publish every manifest, for ``append`` and
+        ``rewrite_data_files`` (``live`` None: the head's frontier and
+        counters carry over, and ``rewrite`` compacts every chain)."""
+        chain = head["chain"] if head else {t: [] for t in _CHAINED}
+        totals = head["totals"] if head else {"term": {}, "seen": 0, "results": 0}
+        parts = live[1] if live else 8  # admin-path rewrites: small, fixed
+        writes: dict[str, tuple[DataFrame, int]] = {}
+        files = {}
+        if live is None:
+            files["frontier"] = self._dir(base) / "frontier"
+        else:
+            f_obs = Observation()
+            writes["frontier"] = (live[0].observe(f_obs, *aggs["frontier"]), parts)
+        actions: dict[str, str] = {}
+        obs: dict[str, Observation] = {}
+        for t in _CHAINED:
+            legs, df = chain[t], None
+            if t in deltas:
+                df, dparts = deltas[t]
+                obs[t] = Observation()
+                df = df.observe(obs[t], *(
+                    aggs[t] if isinstance(totals[t], dict)
+                    else [F.count(F.lit(1)).alias("n")]
+                ))
+            if rewrite or (legs and len(legs) + (df is not None) > _COMPACT_CHAIN):
+                actions[t] = "compact"
+                if legs:
+                    old = self._chain_df(legs, _TABLE_SCHEMAS[t])
+                    writes[t] = (old if df is None else old.unionByName(df), parts)
+            elif df is not None:
+                actions[t] = "delta"
+                writes[t] = (df, dparts)
+            else:
+                actions[t] = "none"
+
+        def manifest(new_legs: dict[str, str]) -> dict:
+            # called by commit once the writes are done: the riding
+            # Observations are filled.  commit_meta is the snapshot summary
+            # (≙ Iceberg's summary map): per table, the action taken, the
+            # rows this commit appended and the chain depth
+            tot = json.loads(json.dumps(totals))
+            log, appended = {}, {}
+            for t in _CHAINED:
+                got = obs[t].get if t in obs else {}
+                if isinstance(tot[t], dict):
+                    appended[t] = {k: v for k, v in got.items() if v}
+                    for k, v in appended[t].items():
+                        tot[t][k] = tot[t].get(k, 0) + v
+                else:
+                    appended[t] = got.get("n", 0)
+                    tot[t] += appended[t]
+                leg = [new_legs[t]] if t in new_legs else []
+                log[t] = leg if actions[t] == "compact" else chain[t] + leg
+            if live is None:
+                counters = head["counters"]
+                live_rows = head.get("commit_meta", {}).get("live_rows")
+            else:
+                # the frontier's observed counters plus every table's
+                # running total (≙ the exiter's counts, exiter/exiter.go:17-26)
+                counters = {k: v for k, v in f_obs.get.items() if v}
+                live_rows = sum(counters.values())
+                for t, v in tot.items():
+                    if isinstance(v, dict):
+                        for k, n in v.items():
+                            counters[k] = counters.get(k, 0) + n
+                    else:
+                        counters[t] = v
+                counters["round"] = rnd
+            return {
+                "round": rnd,
+                "parent_round": base,
+                "counters": counters,
+                "chain": log,
+                "totals": tot,
+                "commit_meta": {
+                    "actions": actions,
+                    "appended": appended,
+                    "chain_len": {t: len(log[t]) for t in log},
+                    "live_rows": live_rows,
+                },
+            }
+
+        snap = max(rnd, base + 1)
+        return snap, self.commit(snap, writes, manifest, expected_token, files)

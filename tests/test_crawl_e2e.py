@@ -290,26 +290,29 @@ def test_checkpoint_kill_during_write(spark, corpus, tmp_path_factory, engine_ou
 def test_robots_denied_terminal(spark, corpus, tmp_path_factory):
     """Regression (round-2 ADVICE, medium): robots-denied jobs are terminal
     FAILED — never retried back to NEW, and flipped even when a round claims
-    nothing besides them."""
+    nothing besides them.  Both rule paths of ``_stamp_url_cols`` run: the
+    folded predicate (≤256 rules) and the broadcast join (more), with 256
+    rules that match nothing next to the denying one; they must agree."""
     pages_df = corpus_to_spark(spark, corpus)
     seeds = [(s["query"].split("#!#")[0].strip(), s["custom_id"]) for s in corpus.seeds]
-    cfg = CrawlConfig(
-        extract_email=False,
-        now_micros=NOW,
-        robots=[("google.com", "/maps/place/")],
-    )
-    eng = CrawlEngine(spark, pages_df, str(tmp_path_factory.mktemp("robots")), cfg)
-    eng.seed_from_queries(seeds)
-    counters = eng.run()
-    # every admitted place job was denied and must end FAILED (not NEW)
-    assert counters.get("place_new", 0) == 0
-    assert counters.get("place_done", 0) == 0
-    assert counters.get("place_failed", 0) > 0
-    assert counters["results"] == 0
-    # denied jobs were never re-claimed: retries stayed 0
-    assert (
-        eng.frontier.filter("kind = 'place' AND retries > 0").count() == 0
-    )
+    deny = ("google.com", "/maps/place/")
+    got = []
+    for robots in ([deny], [deny] + [(f"h{i}.example", "/") for i in range(256)]):
+        cfg = CrawlConfig(extract_email=False, now_micros=NOW, robots=robots)
+        eng = CrawlEngine(spark, pages_df, str(tmp_path_factory.mktemp("robots")), cfg)
+        eng.seed_from_queries(seeds)
+        counters = eng.run()
+        # every admitted place job was denied and must end FAILED (not NEW)
+        assert counters.get("place_new", 0) == 0
+        assert counters.get("place_done", 0) == 0
+        assert counters.get("place_failed", 0) > 0
+        assert counters["results"] == 0
+        # denied jobs were never re-claimed: retries stayed 0
+        assert (
+            eng.frontier.filter("kind = 'place' AND retries > 0").count() == 0
+        )
+        got.append(counters)
+    assert got[0] == got[1]
 
 
 def test_duplicate_page_captures_latest_wins(spark, corpus, tmp_path_factory, engine_out):
@@ -347,9 +350,10 @@ def test_duplicate_page_captures_latest_wins(spark, corpus, tmp_path_factory, en
 
 
 def test_counters_write_observed_equals_aggregation(spark, tmp_path):
-    """The write-observed counters cache must equal the full aggregation
-    bit-for-bit (same keys, same values) — and invalidate as soon as state
-    moves past the committed round."""
+    """The committed manifest's write-observed counters, which ``counters()``
+    returns while the current round is durable, must equal the full
+    aggregation bit-for-bit (same keys, same values) — after a run, and
+    right after a resume with no round run."""
     from google_maps_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
     from google_maps_scraper_spark.sources.corpus import (
         corpus_to_spark,
@@ -366,13 +370,11 @@ def test_counters_write_observed_equals_aggregation(spark, tmp_path):
         [(s["query"].split(" #!#")[0], s["custom_id"]) for s in corpus.seeds]
     )
     got = eng.run()
-    assert got and eng._counters_from_write is not None
-    cached = eng.counters()
-    # force the exact aggregation path and compare
-    eng._counters_from_write = None
-    exact = eng.counters()
-    assert cached == exact
-    assert cached["results"] > 0 and cached["seen"] > 0
+    manifest = eng.store.manifest(eng.store.current())["counters"]
+    assert got == manifest == eng._aggregate_counters()
+    assert got["results"] > 0 and got["seen"] > 0
+    resumed = CrawlEngine.resume(spark, pages, str(tmp_path / "wd"), eng.cfg)
+    assert resumed.counters() == manifest == resumed._aggregate_counters()
 
 
 def test_terminal_segments_are_materialized_once(spark, tmp_path, monkeypatch):

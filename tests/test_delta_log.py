@@ -14,7 +14,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from google_maps_scraper_spark.plans import crawl
+from google_maps_scraper_spark.plans import store
 from google_maps_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
 from google_maps_scraper_spark.plans.store import ParquetDeltaLogStore
 from google_maps_scraper_spark.schemas import SEEN_SCHEMA, STATUS_NEW
@@ -103,7 +103,9 @@ def test_compaction_bounds_chain_legs(
     spark, pages_and_seeds, tmp_path_factory, monkeypatch
 ):
     """With a chain bound of 2 every published manifest's chains stay ≤ 2
-    legs and the final state is unchanged vs an uncompacted run."""
+    legs, every manifest's totals are its parent's plus the rows it
+    appended (a compaction appends only its delta), and the final state is
+    unchanged vs an uncompacted run."""
     pages, seeds = pages_and_seeds
     wd_a = str(tmp_path_factory.mktemp("compact"))
     wd_b = str(tmp_path_factory.mktemp("nocompact"))
@@ -112,15 +114,30 @@ def test_compaction_bounds_chain_legs(
     b = CrawlEngine(spark, pages, wd_b, cfg)
     b.seed_from_queries(seeds)
     cb = b.run()
-    monkeypatch.setattr(crawl, "_COMPACT_CHAIN", 2)
+    monkeypatch.setattr(store, "_COMPACT_CHAIN", 2)
     a = CrawlEngine(spark, pages, wd_a, cfg)
     a.seed_from_queries(seeds)
     ca = a.run()
     assert ca == cb
 
-    for rnd, m in _manifests(wd_a).items():
+    manifests = _manifests(wd_a)
+    assert any(
+        act == "compact"
+        for m in manifests.values()
+        for act in m["commit_meta"]["actions"].values()
+    )
+    for rnd, m in manifests.items():
         for t, paths in m["chain"].items():
             assert len(paths) <= 2, (rnd, t, paths)
+        parent = manifests.get(m["parent_round"])
+        before = parent["totals"] if parent else {"term": {}, "seen": 0, "results": 0}
+        added = m["commit_meta"]["appended"]
+        for t in ("seen", "results"):
+            assert m["totals"][t] == before[t] + added[t], (rnd, t)
+        term = dict(before["term"])
+        for k, v in added["term"].items():
+            term[k] = term.get(k, 0) + v
+        assert m["totals"]["term"] == term, rnd
     # the resumed compacted store reproduces identical results
     r = CrawlEngine.resume(spark, pages, wd_a, cfg)
     assert r.counters() == ca

@@ -50,6 +50,11 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
     p for p in (REPO, os.environ.get("PYTHONPATH")) if p
 )
 
+# host-noise probes over each window: /proc/stat steal is the
+# kernel-attributed share of time the hypervisor ran another guest on our
+# vCPUs, which loadavg (guest-side runnable tasks) cannot see
+from perfbench.hostnoise import cpu_jiffies, loadavg, steal_stats  # noqa: E402
+
 os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
 os.environ.setdefault("PYSPARK_DRIVER_PYTHON", sys.executable)
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")   # heap: compute only
@@ -73,44 +78,6 @@ def _workroot() -> str:
     # shuffle scratch lives with the rest of the node-local-equivalent state
     os.environ["GMS_SPARK_LOCAL_DIR"] = os.path.join(root, "scratch")
     return root
-
-
-def _loadavg() -> list[float]:
-    try:
-        return [float(x) for x in open("/proc/loadavg").read().split()[:3]]
-    except OSError:
-        return []
-
-
-def _cpu_jiffies() -> list[int] | None:
-    """Aggregate CPU jiffies (user nice system idle iowait irq softirq
-    steal) from /proc/stat.  Steal is the KERNEL-attributed share of time
-    the hypervisor ran someone else on our vCPUs — the direct kernel-level
-    measurement of the external host contention that loadavg (guest-side
-    runnable tasks) cannot see.  This sandbox is a Firecracker guest on a
-    shared host: observed steal swings 0-10%+ on a minutes timescale with
-    an idle guest, which is exactly the round-3 'attribution hazard'."""
-    try:
-        return [int(x) for x in open("/proc/stat").readline().split()[1:9]]
-    except (OSError, ValueError):
-        return None
-
-
-def _steal_stats(j0: list[int] | None, j1: list[int] | None) -> dict:
-    """steal/busy/idle percentages over a (j0, j1) jiffies window."""
-    if not j0 or not j1:
-        return {}
-    d = [b - a for a, b in zip(j0, j1)]
-    total = sum(d)
-    if total <= 0:
-        return {}
-    idle = d[3] + d[4]          # idle + iowait
-    steal = d[7]
-    return {
-        "steal_pct": round(100.0 * steal / total, 2),
-        "idle_pct": round(100.0 * idle / total, 2),
-        "busy_pct": round(100.0 * (total - idle - steal) / total, 2),
-    }
 
 
 def _read_pages(spark, pages_path: str):
@@ -149,7 +116,7 @@ def _cpu_probe(pages) -> dict:
         "url", "html"
     )
     n_place = place_pages.count()  # warm the scan; excluded from the clock
-    j0 = _cpu_jiffies()
+    j0 = cpu_jiffies()
     t = time.perf_counter()
     n_parsed = (
         place_pages.withColumn(
@@ -171,8 +138,8 @@ def _cpu_probe(pages) -> dict:
         "pages": n_place,
         "parsed": n_parsed,
         "pages_per_sec": round(n_place / sec, 2),
-        "loadavg": _loadavg(),
-        **_steal_stats(j0, _cpu_jiffies()),
+        "loadavg": loadavg(),
+        **steal_stats(j0, cpu_jiffies()),
     }
 
 
@@ -197,8 +164,8 @@ def run_level(cpus: int, pages_path: str, workroot: str, seeds_path: str) -> Non
 
     probe_pre = _cpu_probe(pages)   # paired ceiling, measured pre-crawl
     wd = os.path.join(workroot, f"wd-{cpus}")
-    load_pre_crawl = _loadavg()
-    jiff_pre_crawl = _cpu_jiffies()
+    load_pre_crawl = loadavg()
+    jiff_pre_crawl = cpu_jiffies()
     t0 = time.perf_counter()
     eng = CrawlEngine(
         spark, pages, wd,
@@ -216,8 +183,8 @@ def run_level(cpus: int, pages_path: str, workroot: str, seeds_path: str) -> Non
     eng.seed_from_queries(seeds)
     counters = eng.run()
     elapsed = time.perf_counter() - t0
-    crawl_cpu = _steal_stats(jiff_pre_crawl, _cpu_jiffies())
-    load_post_crawl = _loadavg()
+    crawl_cpu = steal_stats(jiff_pre_crawl, cpu_jiffies())
+    load_post_crawl = loadavg()
 
     probe_post = _cpu_probe(pages)  # paired ceiling, measured post-crawl
     spark.stop()
@@ -242,7 +209,7 @@ def run_level(cpus: int, pages_path: str, workroot: str, seeds_path: str) -> Non
         "loadavg_pre_crawl": load_pre_crawl,
         "loadavg_post_crawl": load_post_crawl,
         "crawl_cpu": crawl_cpu,  # kernel-attributed steal/busy/idle % over
-        #                          the crawl window (see _cpu_jiffies)
+        #                          the crawl window (see cpu_jiffies)
         "extract_stage_sec": min(probe_pre["sec"], probe_post["sec"]),
         "extract_stage_pages": probe_post["pages"],
         "extract_stage_parsed": probe_post["parsed"],
@@ -302,6 +269,7 @@ def main() -> None:
     shutil.copytree(os.path.join(REPO, "google_maps_scraper_spark"),
                     os.path.join(snap, "google_maps_scraper_spark"))
     shutil.copytree(os.path.join(REPO, "tools"), os.path.join(snap, "tools"))
+    shutil.copytree(os.path.join(REPO, "perfbench"), os.path.join(snap, "perfbench"))
 
     repeats = int(os.environ.get("GMS_SCALING_REPEATS", "1"))
     runs = []

@@ -49,23 +49,7 @@ SALTS = int(os.environ.get("GMS_SKEW_SALTS", "8"))
 SKEWS = (0.15, 0.9)
 
 
-def _read_pages(spark, pages_path):
-    """Bucketed-table read when the corpus was written url-bucketed (see
-    sources/corpus.py:write_bucketed_pages), plain parquet otherwise."""
-    from google_maps_scraper_spark.sources.corpus import (
-        bucketed_pages_spec,
-        read_bucketed_pages,
-    )
-
-    b = bucketed_pages_spec(pages_path)
-    if b:
-        return read_bucketed_pages(spark, pages_path, buckets=b)
-    return spark.read.parquet(pages_path)
-
-
 def run_case(pages_path: str, workroot: str, seeds_path: str, tag: str) -> None:
-    from pyspark.sql import functions as F  # noqa: F401  (parity with scaling tool)
-
     from google_maps_scraper_spark.plans.crawl import CrawlConfig, CrawlEngine
     from google_maps_scraper_spark.session import get_spark
 
@@ -139,6 +123,7 @@ def main() -> None:
     shutil.copytree(os.path.join(REPO, "google_maps_scraper_spark"),
                     os.path.join(snap, "google_maps_scraper_spark"))
     shutil.copytree(os.path.join(REPO, "tools"), os.path.join(snap, "tools"))
+    shutil.copytree(os.path.join(REPO, "perfbench"), os.path.join(snap, "perfbench"))
 
     repeats = int(os.environ.get("GMS_SCALING_REPEATS", "1"))
     runs = []
